@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from proglog_spark.operators.pairs import blocked_pairs, cap_hubs, join_payload
 from proglog_spark.sources.tables import fan_out
 
 MERSENNE31 = 2147483647
@@ -91,6 +92,33 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: i
     )
 
 
+def _shared_shingles(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_shingle_df: int | None
+) -> DataFrame:
+    """(id_a, id_b, n_a, n_b, n_common) for every unordered pair
+    sharing a shingle: the inverted-index blocking under
+    :func:`jaccard_pairs` and :func:`containment_pairs`. With
+    ``max_shingle_df`` set, shingles in more documents are dropped and
+    the set sizes recomputed over the capped sets."""
+    # cache: both join sides read the compact shingle arrays once
+    # (lifecycle = the module Cache note: session-scoped, LRU-evicted)
+    ss = shingle_sets(df, id_col, text_col, n).cache()
+    # join key = xxhash64(shingle): 8-byte keys through the shuffle
+    # instead of n-word strings. Set algebra is unchanged unless two
+    # distinct shingles in overlapping docs collide (p ~ |S|^2 / 2^65
+    # — negligible at any realistic vocabulary).
+    sh = ss.select("id", F.col("n_sh").alias("n"), F.explode("sh_arr").alias("sh_str")).select(
+        "id", "n", F.xxhash64("sh_str").alias("shingle")
+    )
+    if max_shingle_df is not None:
+        sh = cap_hubs(sh, ["shingle"], "id", max_shingle_df, "n")
+    return (
+        blocked_pairs(sh, ["shingle"], carry=["n"])
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -113,37 +141,7 @@ def jaccard_pairs(
     The compact per-doc array form is cached (not the exploded rows:
     ~n× smaller) so tokenize/distinct runs once, not per join side.
     """
-    # cache: both join sides read the compact shingle arrays once
-    # (lifecycle = the module Cache note: session-scoped, LRU-evicted)
-    ss = shingle_sets(df, id_col, text_col, n).cache()
-    # join key = xxhash64(shingle): 8-byte keys through the shuffle
-    # instead of n-word strings. Set algebra is unchanged unless two
-    # distinct shingles in overlapping docs collide (p ~ |S|^2 / 2^65
-    # — negligible at any realistic vocabulary).
-    sh = ss.select("id", "n_sh", F.explode("sh_arr").alias("sh_str")).select(
-        "id", "n_sh", F.xxhash64("sh_str").alias("shingle")
-    )
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .where(F.col("df_") > max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(hot, on="shingle", how="left_anti")
-        # recompute set sizes over the CAPPED sets so the similarity is
-        # a consistent capped-Jaccard (hot shingles removed from both
-        # numerator and denominators), exact again when the cap is off
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh_c"))
-        sh = sh.drop("n_sh").join(sizes, "id").withColumnRenamed("n_sh_c", "n_sh")
-    a = sh.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    common = _shared_shingles(df, id_col, text_col, n, max_shingle_df)
     return (
         common.withColumn(
             "jaccard_micro",
@@ -197,29 +195,8 @@ def containment_pairs(
     the documented sub-quadratic path when even blocked candidate
     generation is too wide.
     """
-    # cache: both join sides read the compact shingle arrays once
-    # (lifecycle = the module Cache note: session-scoped, LRU-evicted)
-    ss = shingle_sets(df, id_col, text_col, n).cache()
-    sh = ss.select("id", "n_sh", F.explode("sh_arr").alias("sh_str")).select(
-        "id", "n_sh", F.xxhash64("sh_str").alias("shingle")
-    )
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .where(F.col("df_") > max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(hot, on="shingle", how="left_anti")
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh_c"))
-        sh = sh.drop("n_sh").join(sizes, "id").withColumnRenamed("n_sh_c", "n_sh")
-    a = sh.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"), "shingle")
     common = (
-        a.join(b, on="shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        _shared_shingles(df, id_col, text_col, n, max_shingle_df)
         # cache: the verified undirected pairs feed BOTH directed rows
         # (union below) — tiny table, full shingle self-join to build
         .cache()
@@ -370,15 +347,8 @@ def minhash_lsh_pairs(
         # cache: both sides of the candidate self-join scan this band
         # table (module Cache note lifecycle)
     ).cache()
-    a = banded.select(F.col("id").alias("id_a"), "band", "band_hash")
-    b = banded.select(F.col("id").alias("id_b"), "band", "band_hash")
-    candidates = (
-        a.join(b, on=["band", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .join(sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
+    candidates = join_payload(
+        blocked_pairs(banded, ["band", "band_hash"], multi_key=True), sigs
     )
     est = F.floor(
         F.lit(1000000.0)
@@ -457,8 +427,7 @@ def hamming_pairs(
     blocks; any pair within distance d must agree on at least one
     whole block when blocks >= d + 1 (enforced), so candidate
     generation is COMPLETE for the declared radius. Candidates join
-    on (block_idx, block_value) — narrow rows; the sketch words join
-    back only for deduped pairs. blocks=4 x 16 bits at d<=3 is the
+    on (block_idx, block_value). blocks=4 x 16 bits at d<=3 is the
     classic simhash operating point (larger radii need more blocks
     and coarser, hotter buckets — the standard recall/cost dial).
 
@@ -498,40 +467,33 @@ def hamming_pairs(
         shift = (i % per_word) * bits_per
         return F.shiftright(word, shift).bitwiseAND(F.lit(mask))
 
-    def blocked_of(df, side: str):
+    def keyed(df):
         return df.select(
-            F.col("id").alias(f"id_{side}"),
-            F.col("simhash_lo").alias(f"lo_{side}"),
-            F.col("simhash_hi").alias(f"hi_{side}"),
+            "id",
+            F.col("simhash_lo").alias("lo"),
+            F.col("simhash_hi").alias("hi"),
             F.posexplode(F.array(*[block_val(i) for i in range(blocks)])).alias(
                 "blk", "blk_val"
             ),
         )
 
-    # cache: both block-explode sides read each sketch table, so the
-    # (often UDF-backed) sketch pass runs once per call (lifecycle =
-    # the module Cache note: session-scoped, LRU-evicted, reclaimable
-    # via spark.catalog.clearCache())
-    sketches = sketches.cache()
-    right = sketches if other is None else other.cache()
-    a = blocked_of(sketches, "a")
-    b = blocked_of(right, "b")
-    cands = a.join(b, on=["blk", "blk_val"])
-    if other is None:
-        cands = cands.where(F.col("id_a") < F.col("id_b"))
-    else:
-        # the two sides' id spaces may overlap (a drop re-run against
-        # an index that already absorbed it); a shared id would emit a
-        # (x, x) hamming-0 pair — a doc reported as its own duplicate
-        cands = cands.where(F.col("id_a") != F.col("id_b"))
     ham = (
         F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
         + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
     ).alias("hamming")
-    return (
-        cands.select("id_a", "id_b", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+    # cache: both block-explode sides read each sketch table, so the
+    # (often UDF-backed) sketch pass runs once per call (lifecycle =
+    # the module Cache note: session-scoped, LRU-evicted, reclaimable
+    # via spark.catalog.clearCache())
+    return blocked_pairs(
+        keyed(sketches.cache()),
+        ["blk", "blk_val"],
+        other=None if other is None else keyed(other.cache()),
+        carry=["lo", "hi"],
+        multi_key=True,
+        verify=lambda p: p.select("id_a", "id_b", ham).where(
+            F.col("hamming") <= max_hamming
+        ),
     )
 
 

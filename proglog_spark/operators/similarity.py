@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from proglog_spark.functions.vectors import cosine_similarity, quantized_dot
+from proglog_spark.operators.pairs import blocked_pairs, join_payload, side_col
 from proglog_spark.operators.topk import topk_per_key
 
 
@@ -665,6 +666,49 @@ def adaptive_lsh_bits(n: int, occupancy: int = 32, lo: int = 4, hi: int = 16) ->
     return b
 
 
+# side names of an unordered pair table and of the directed kNN graph
+_PAIR = ("id_a", "id_b")
+_GRAPH = ("src", "dst")
+
+
+def _vector_side(df: DataFrame, id_col: str, vec_col: str, scale: int, *extra) -> DataFrame:
+    """Per-vector verify payload ``(id, *extra, vec, n2)``, n2 the
+    quantized self-dot: computed once per vector, not once per pair."""
+    n2 = quantized_dot(F.col(vec_col), F.col(vec_col), scale).alias("n2")
+    return df.select(F.col(id_col).alias("id"), *extra, F.col(vec_col).alias("vec"), n2)
+
+
+def _pair_dot(pairs: DataFrame, ids: tuple[str, str], scale: int) -> DataFrame:
+    """``(*ids, qd, na, nb)`` — the pair dot and both self-dots — from
+    a pair table holding both sides' :func:`_vector_side` columns."""
+    a, b = ids
+    qd = quantized_dot(F.col(side_col("vec", a)), F.col(side_col("vec", b)), scale)
+    na, nb = F.col(side_col("n2", a)), F.col(side_col("n2", b))
+    return pairs.select(a, b, qd.alias("qd"), na.alias("na"), nb.alias("nb"))
+
+
+def _cosine_at_least(t_milli: int):
+    """cos ≥ t_milli/1000 over :func:`_pair_dot`'s columns:
+    d > 0 ∧ 10^6·d² ≥ t_milli²·na·nb, exact in 128-bit decimal."""
+    return (F.col("qd") > 0) & F.expr(
+        "CAST(qd AS DECIMAL(38,0)) * qd * 1000000 >= "
+        f"CAST({t_milli * t_milli} AS DECIMAL(38,0)) * na * nb"
+    )
+
+
+def _knn_graph(cand, df: DataFrame, k: int, id_col: str, vec_col: str, scale: int) -> DataFrame:
+    """Top ``k`` dsts per src by the integer cosine key, the vectors
+    joined back once per candidate pair: both kNN-graph verify stages."""
+    vecs = join_payload(cand, _vector_side(df, id_col, vec_col, scale), _GRAPH)
+    scored = _pair_dot(vecs, _GRAPH, scale).select(
+        "src", "dst", quantized_cosine_key("qd", "na", "nb").alias("cos2_pico")
+    )
+    order = [F.col("cos2_pico").desc(), F.col("dst")]
+    return topk_per_key(scored, ["src"], order, k, rank_col="rank").select(
+        "src", "dst", "cos2_pico", "rank"
+    )
+
+
 def quantized_knn_join(
     df: DataFrame,
     dim: int,
@@ -708,43 +752,11 @@ def quantized_knn_join(
         # pattern — a .cache() here leaks one copy per call)
         .localCheckpoint(eager=True)
     )
-    a = c.select(F.col(id_col).alias("src"), "lsh_table", "lsh_bucket")
-    b = c.select(F.col(id_col).alias("dst"), "lsh_table", "lsh_bucket")
-    cand = (
-        a.join(b, on=["lsh_table", "lsh_bucket"])
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
+    cand = blocked_pairs(
+        c, ["lsh_table", "lsh_bucket"], id_col=id_col, ids=_GRAPH,
+        directed=True, multi_key=True,
     )
-    vs = df.select(
-        F.col(id_col).alias("src"),
-        F.col(vec_col).alias("v_src"),
-        quantized_dot(F.col(vec_col), F.col(vec_col), scale).alias("nb"),
-    )
-    vd = df.select(
-        F.col(id_col).alias("dst"),
-        F.col(vec_col).alias("v_dst"),
-        quantized_dot(F.col(vec_col), F.col(vec_col), scale).alias("na"),
-    )
-    scored = (
-        cand.join(vd, "dst")
-        .join(vs, "src")
-        .select(
-            "src",
-            "dst",
-            quantized_dot(F.col("v_src"), F.col("v_dst"), scale).alias("qd"),
-            "na",
-            "nb",
-        )
-        .select("src", "dst", quantized_cosine_key("qd", "na", "nb").alias("cos2_pico"))
-    )
-    return topk_per_key(
-        scored,
-        ["src"],
-        [F.col("cos2_pico").desc(), F.col("dst")],
-        k,
-        rank_col="rank",
-    ).select("src", "dst", "cos2_pico", "rank")
+    return _knn_graph(cand, df, k, id_col, vec_col, scale)
 
 
 def adaptive_ivf_cells(
@@ -802,8 +814,6 @@ def quantized_ivf_knn_join(
         # blocks (the quantized_knn_join idiom — never .cache())
         .localCheckpoint(eager=True)
     )
-    a = c.select(F.col(id_col).alias("src"), "ivf_cell")
-    b = c.select(F.col(id_col).alias("dst"), "ivf_cell")
     # one cell per vector ⇒ (src, dst) pairs are already unique
     # r11 (guide §2.5 "too few distinct key values"): the candidate
     # join's only key is ivf_cell — adaptive_ivf_cells keeps cells
@@ -816,41 +826,10 @@ def quantized_ivf_knn_join(
     # the per-src top-k window needs, so its Exchange is reused
     # (plan-pinned: one hashpartitioning(src) exchange, zero
     # single-partition stages).
-    cand = (
-        a.join(b, on="ivf_cell")
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .repartition(F.col("src"))
-    )
-    vs = df.select(
-        F.col(id_col).alias("src"),
-        F.col(vec_col).alias("v_src"),
-        quantized_dot(F.col(vec_col), F.col(vec_col), scale).alias("nb"),
-    )
-    vd = df.select(
-        F.col(id_col).alias("dst"),
-        F.col(vec_col).alias("v_dst"),
-        quantized_dot(F.col(vec_col), F.col(vec_col), scale).alias("na"),
-    )
-    scored = (
-        cand.join(vs, "src")
-        .join(vd, "dst")
-        .select(
-            "src",
-            "dst",
-            quantized_dot(F.col("v_src"), F.col("v_dst"), scale).alias("qd"),
-            "na",
-            "nb",
-        )
-        .select("src", "dst", quantized_cosine_key("qd", "na", "nb").alias("cos2_pico"))
-    )
-    return topk_per_key(
-        scored,
-        ["src"],
-        [F.col("cos2_pico").desc(), F.col("dst")],
-        k,
-        rank_col="rank",
-    ).select("src", "dst", "cos2_pico", "rank")
+    cand = blocked_pairs(
+        c, ["ivf_cell"], id_col=id_col, ids=_GRAPH, directed=True
+    ).repartition(F.col("src"))
+    return _knn_graph(cand, df, k, id_col, vec_col, scale)
 
 
 def lsh_negative_sample(
@@ -982,7 +961,10 @@ def semantic_dedup(
     """
     from proglog_spark.operators.dedup import connected_components
 
-    assert threshold_milli > 0, "squared-threshold algebra needs threshold > 0"
+    if threshold_milli <= 0:
+        raise ValueError(
+            f"threshold_milli must be > 0 (squared-threshold algebra), got {threshold_milli}"
+        )
     if bits is None:
         import math
 
@@ -993,15 +975,12 @@ def semantic_dedup(
     # (cosine 1.0 to its rep)
     reps = corpus.groupBy(vec_col).agg(F.min(id_col).alias("id"))
     b = (
-        with_quantized_lsh_buckets(
-            reps.select("id", vec_col), dim, bits=bits, tables=1,
-            vec_col=vec_col, scale=scale,
-        )
-        .select(
-            "id",
-            F.col("lsh_bucket").alias("cell"),
-            F.col(vec_col).alias("vec"),
-            quantized_dot(F.col(vec_col), F.col(vec_col), scale).alias("n2"),
+        _vector_side(
+            with_quantized_lsh_buckets(
+                reps.select("id", vec_col), dim, bits=bits, tables=1,
+                vec_col=vec_col, scale=scale,
+            ),
+            "id", vec_col, scale, F.col("lsh_bucket").alias("cell"),
         )
         # pinned: feeds both self-join sides and the output mapping --
         # without it the bucketing UDF and the corpus scan run 3x. An
@@ -1015,27 +994,10 @@ def semantic_dedup(
         # for df.checkpoint(), keeping both the leak fix and recompute
         .localCheckpoint(eager=True)
     )
-    a = b.select(F.col("id").alias("id_a"), "cell", F.col("vec").alias("vec_a"), F.col("n2").alias("na"))
-    c = b.select(F.col("id").alias("id_b"), "cell", F.col("vec").alias("vec_b"), F.col("n2").alias("nb"))
-    t2 = threshold_milli * threshold_milli
     edges = (
-        a.join(c, "cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            quantized_dot(F.col("vec_a"), F.col("vec_b"), scale).alias("qd"),
-            "na",
-            "nb",
-        )
-        .where(
-            (F.col("qd") > 0)
-            & F.expr(
-                "CAST(qd AS DECIMAL(38,0)) * qd * 1000000 >= "
-                f"CAST({t2} AS DECIMAL(38,0)) * na * nb"
-            )
-        )
-        .select("id_a", "id_b")
+        _pair_dot(blocked_pairs(b, ["cell"], carry=["vec", "n2"]), _PAIR, scale)
+        .where(_cosine_at_least(threshold_milli))
+        .select(*_PAIR)
     )
     comp = connected_components(edges)  # (id, rep) for every edge endpoint
     dropped_reps = comp.where(F.col("id") != F.col("rep")).select("id").withColumn(
@@ -1453,7 +1415,8 @@ def embedding_cosine_neardup(
     # the squared-threshold algebra (10^6·d² ≥ t²·na·nb with d > 0) is
     # one-sided: a zero/negative threshold would silently behave as
     # its absolute value (cos >= 0 pairs excluded, cos >= -t inverted)
-    assert 0 < threshold <= 1, f"threshold must be in (0, 1], got {threshold}"
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     t_milli = int(round(threshold * 1000))
     if bits is None:
         bits = adaptive_lsh_bits(df.count() if n is None else n)
@@ -1469,46 +1432,11 @@ def embedding_cosine_neardup(
         .select(id_col, "lsh_table", "lsh_bucket")
         .localCheckpoint(eager=True)
     )
-    a = c.select(F.col(id_col).alias("id_a"), "lsh_table", "lsh_bucket")
-    b = c.select(F.col(id_col).alias("id_b"), "lsh_table", "lsh_bucket")
-    cand = (
-        a.join(b, on=["lsh_table", "lsh_bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # r11: self-dots hoisted to the per-VECTOR side (n rows, not
-    # n·tables·occupancy pair rows) — the pair table previously
-    # evaluated THREE interpreted per-element HOF dots per candidate
-    # pair; now one (the pair dot itself)
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        quantized_dot(F.col(vec_col), F.col(vec_col)).alias("na"),
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        quantized_dot(F.col(vec_col), F.col(vec_col)).alias("nb"),
-    )
+    cand = blocked_pairs(c, ["lsh_table", "lsh_bucket"], id_col=id_col, multi_key=True)
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            quantized_dot(F.col("vec_a"), F.col("vec_b")).alias("qd"),
-            "na",
-            "nb",
-        )
-        .where(
-            (F.col("qd") > 0)
-            & F.expr(
-                "CAST(qd AS DECIMAL(38,0)) * qd * 1000000 >= "
-                f"CAST({t_milli * t_milli} AS DECIMAL(38,0)) * na * nb"
-            )
-        )
-        .select("id_a", "id_b", quantized_cosine_key("qd", "na", "nb").alias("cos2_pico"))
+        _pair_dot(join_payload(cand, _vector_side(df, id_col, vec_col, scale)), _PAIR, scale)
+        .where(_cosine_at_least(t_milli))
+        .select(*_PAIR, quantized_cosine_key("qd", "na", "nb").alias("cos2_pico"))
     )
 
 

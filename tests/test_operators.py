@@ -901,6 +901,55 @@ def test_embedding_cosine_neardup_finds_planted_pair(spark, emb):
         assert b == a + 100000  # only the planted clones clear 0.95
 
 
+def test_embedding_cosine_neardup_verifies_on_its_scale_grid(spark):
+    """Bucketing and verification share the floor(x·scale) grid at a
+    non-default scale. Each twin (id + 100) differs from its original
+    in every component but not on the scale=100 grid, so the twins
+    collide in every table and are grid-identical (cosine 1), while on
+    the default 1000 grid their cosine is 0.990-0.995. The result must
+    equal an all-pairs numpy reference on the 100 grid."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    k = rng.integers(-5, 6, size=(12, 16))
+    vecs = {i: (k[i] + 0.2) / 100 for i in range(12)}
+    vecs.update({100 + i: (k[i] + 0.7) / 100 for i in range(4)})
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in vecs.items()], "vec_id LONG, embedding ARRAY<DOUBLE>"
+    )
+    t_milli = 995
+    grid = {i: np.floor(v * 100.0).astype(np.int64) for i, v in vecs.items()}
+    want = {}
+    for a in grid:
+        for b in grid:
+            if a < b:
+                d, na, nb = (int(grid[x] @ grid[y]) for x, y in ((a, b), (a, a), (b, b)))
+                if d > 0 and 10**6 * d * d >= t_milli**2 * na * nb:
+                    want[(a, b)] = d * d * 10**12 // (na * nb)
+    assert sorted(want) == [(i, 100 + i) for i in range(4)]
+    got = {
+        (r.id_a, r.id_b): r.cos2_pico
+        for r in similarity.embedding_cosine_neardup(
+            df, dim=16, threshold=t_milli / 1000, bits=4, scale=100
+        ).collect()
+    }
+    assert got == want
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5, 1.5])
+def test_embedding_cosine_neardup_rejects_bad_threshold(emb, threshold):
+    """The squared-threshold test is one-sided: a threshold outside
+    (0, 1] raises (a ValueError, which python -O keeps)."""
+    with pytest.raises(ValueError, match="threshold"):
+        similarity.embedding_cosine_neardup(emb, dim=64, threshold=threshold, bits=4)
+
+
+@pytest.mark.parametrize("threshold_milli", [0, -350])
+def test_semantic_dedup_rejects_bad_threshold(emb, threshold_milli):
+    with pytest.raises(ValueError, match="threshold_milli"):
+        similarity.semantic_dedup(emb, dim=64, threshold_milli=threshold_milli)
+
+
 def test_salted_join_matches_plain_join(spark):
     """salted_join must be row-identical to the plain equi-join,
     including a pathologically hot key and unmatched rows."""

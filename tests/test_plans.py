@@ -1035,3 +1035,38 @@ def test_av_dedup_verdicts_rides_cached_tiers_no_cartesian(spark, sf_dir):
     assert "LeftAnti" in plan
     # every window clip-keyed — no global single-partition window
     assert "windowspecdefinition(specifiedwindowframe" not in plan
+
+
+# Hash-shuffle count of every query built on the blocked-pairs core
+# (operators/pairs.py), measured with a cleared cache at sf0.001 and
+# sf0.01 on local[4] with 4 shuffle partitions before the core
+# existed. A consumer may lose shuffles, never gain one.
+_PAIRS_CONSUMER_SHUFFLES = {
+    "docs_dedup_keepers": 2,
+    "docs_neardup_jaccard": 1,
+    "docs_containment_dedup": 2,
+    "docs_minhash_lsh": 1,
+    "docs_simhash_neardup": 1,
+    "docs_image_neardup": 1,
+    "docs_video_perceptual_containment": 2,
+    "docs_video_frame_containment": 3,
+    "docs_video_shared_scenes": 7,
+    "emb_knn_join": 2,
+    "emb_knn_join_ivf": 1,
+    "emb_semantic_dedup": 3,
+    "emb_cosine_neardup": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIRS_CONSUMER_SHUFFLES))
+def test_pairs_consumer_shuffle_count_pinned(spark, sf_dir, name):
+    """The shared pairs core must not add an Exchange to any consumer.
+    The cache is cleared first: a cached table that another test
+    already materialized prints both its final and initial plans, which
+    double-counts its exchanges."""
+    from proglog_spark.plans import count_shuffles
+    from proglog_spark.queries import REGISTRY
+
+    spark.catalog.clearCache()
+    got = count_shuffles(REGISTRY[name][0](spark, sf_dir))
+    assert got <= _PAIRS_CONSUMER_SHUFFLES[name]

@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -130,6 +130,65 @@ def test_jaccard_pairs_exact_vs_python(spark, texts):
             if jac > 0:
                 want[(i, j)] = math.floor(jac * 1_000_000)
     assert got == want
+
+
+def py_capped_shingle_sets(texts: list[str], cap: int, n: int = 3) -> list[set[str]]:
+    """Shingle sets with every shingle held by more than ``cap``
+    documents removed (the hub cap's model)."""
+    sets = []
+    for t in texts:
+        toks = t.split(" ")
+        sets.append({"_".join(toks[i : i + n]) for i in range(max(len(toks) - n, 0) + 1)})
+    doc_freq: dict[str, int] = {}
+    for s in sets:
+        for g in s:
+            doc_freq[g] = doc_freq.get(g, 0) + 1
+    return [{g for g in s if doc_freq[g] <= cap} for s in sets]
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    # four words: shingles recur across docs, so some go hot at every cap
+    st.lists(
+        st.lists(st.sampled_from(WORDS[:4]), min_size=3, max_size=10).map(" ".join),
+        min_size=2,
+        max_size=8,
+    ),
+    st.integers(min_value=1, max_value=4),
+)
+@example(
+    ["alpha beta gamma delta eps"] * 2 + ["alpha beta gamma zeta", "alpha beta gamma eta"], 2
+)
+def test_capped_shingle_pairs_match_python_model(spark, texts, cap):
+    """With ``max_shingle_df`` set, jaccard_pairs and containment_pairs
+    must equal the all-pairs Python model on the CAPPED sets: a hot
+    shingle (in more than ``cap`` docs) leaves both the shared count
+    and both set sizes."""
+    from proglog_spark.operators.dedup import containment_pairs
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sets = py_capped_shingle_sets(texts, cap)
+    want_j, want_c = {}, {}
+    for i, sa in enumerate(sets):
+        for j, sb in enumerate(sets):
+            common = len(sa & sb)
+            if i == j or common == 0:
+                continue
+            sizes = (common, len(sa), len(sb))
+            if i < j:
+                union = len(sa) + len(sb) - common
+                want_j[(i, j)] = (*sizes, math.floor(1_000_000.0 * common / union))
+            want_c[(i, j)] = (*sizes, math.floor(1_000_000.0 * common / len(sa)))
+    got_j = {
+        (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.jaccard_micro)
+        for r in jaccard_pairs(df, threshold_micro=1, max_shingle_df=cap).collect()
+    }
+    got_c = {
+        (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment_micro)
+        for r in containment_pairs(df, threshold_micro=1, max_shingle_df=cap).collect()
+    }
+    assert got_j == want_j
+    assert got_c == want_c
 
 
 _sketch_strategy = st.lists(
