@@ -347,81 +347,89 @@ def events_hourly_counts(spark, sf_dir):
     )
 
 
-def _stream_events(spark, sf_dir):
-    """File-source stream over the events fixture with the same ts
-    normalization as sources.tables.load_table. Robust to both fixture
-    layouts: the driver's single FILE `events.parquet` (streamed via a
-    pathGlobFilter on the sf dir, since the file source wants a
-    directory) and a DIRECTORY `events.parquet/` as the scale-probe
-    replicas write (where the glob would match no files and silently
-    stream nothing)."""
+def _stream_events(spark, sf_dir, table: str = "events"):
+    """File-source stream over one fixture table, with the same ts
+    normalization as sources.tables.load_table when the table has a
+    ``ts`` column. Robust to both fixture layouts: a single FILE
+    `<table>.parquet` (streamed via a pathGlobFilter on the sf dir,
+    since the file source wants a directory) and a DIRECTORY
+    `<table>.parquet/` as the scale-probe replicas write (where the
+    glob would match no files and silently stream nothing)."""
     import os
 
     from pyspark.sql import types as T
 
-    path = os.path.join(sf_dir, "events.parquet")
+    path = os.path.join(sf_dir, f"{table}.parquet")
     raw_schema = spark.read.parquet(path).schema
     if os.path.isdir(path):
         stream = spark.readStream.schema(raw_schema).parquet(path)
     else:
         stream = (
             spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
+            .option("pathGlobFilter", f"{table}.parquet")
             .parquet(sf_dir)
         )
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
+    ts_type = raw_schema["ts"].dataType if "ts" in raw_schema.fieldNames() else None
+    if isinstance(ts_type, T.LongType):
         # same ns→µs normalization as sources.tables.load_table
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
+    elif isinstance(ts_type, T.TimestampNTZType):
         # Spark >= 4.1 native nanos read: NTZ → session-TZ(UTC) timestamp
         # (withWatermark requires TIMESTAMP, not TIMESTAMP_NTZ)
         stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return stream
 
 
-def _sink_name(prefix: str) -> str:
-    """Unique memory-sink name (uuid, not CPython's private
-    tempfile._get_candidate_names)."""
-    import uuid
-
-    return f"{prefix}_{uuid.uuid4().hex[:12]}"
+# key of the streamed gates' watermark sentinel rows; no fixture uses it
+_SENTINEL_KEY = 999_999_999
 
 
-def _write_sentinel_parquet(dir_path: str, columns: dict) -> None:
-    """Write a tiny sentinel file for a streamed gate's file source
-    DRIVER-SIDE with pyarrow instead of a Spark job (r12, guide §5
-    "the driver should do almost no data work" inverted: one literal
-    row IS driver work — `spark.createDataFrame(...).write.parquet`
+def _fixture_horizon(spark, sf_dir, **columns):
+    """The latest timestamp over the fixture's ``table=column`` pairs,
+    as a naive UTC datetime (events.ts normalized by load_table): the
+    streamed gates place their watermark sentinels days past it."""
+    return max(
+        load_table(spark, sf_dir, t).agg(F.max(c)).first()[0].replace(tzinfo=None)
+        for t, c in columns.items()
+    )
+
+
+def _write_sentinel_parquet(dir_path: str, ts_col: str, at, **cols) -> None:
+    """Write one sentinel row into a streamed gate's file-source dir
+    DRIVER-SIDE with pyarrow instead of a Spark job (r12: one literal
+    row is driver work — `spark.createDataFrame(...).write.parquet`
     paid a full plan+task+commit round trip, ~0.6 s per sentinel wave
-    measured on this host, for one row).
+    in r12).
 
-    ``columns`` maps name -> pyarrow array (caller pins the exact
-    types the stream's declared read schema expects). The file is
-    written under a dot-prefixed temp name — Spark's file listing
-    ignores hidden files, and the running stream polls the directory
-    asynchronously — then atomically renamed into visibility, the
-    same expose-only-complete-files discipline Spark's own committer
+    The row holds ``ts_col`` = ``at`` (a naive-UTC or tz-aware
+    datetime) as a UTC microsecond timestamp, and ``cols`` as given
+    (ints land as int64, floats as double — the types the stream's
+    declared read schema expects). The file is written under a
+    dot-prefixed temp name — Spark's file listing ignores hidden
+    files, and the running stream polls the directory asynchronously
+    — then atomically renamed into visibility, the same
+    expose-only-complete-files discipline Spark's own committer
     provides."""
+    import datetime
     import os
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    table = pa.table(columns)
+    if at.tzinfo is None:
+        at = at.replace(tzinfo=datetime.timezone.utc)
+    table = pa.table(
+        {
+            ts_col: pa.array([at], pa.timestamp("us", tz="UTC")),
+            **{c: pa.array([v]) for c, v in cols.items()},
+        }
+    )
+    os.makedirs(dir_path, exist_ok=True)
     final = os.path.join(dir_path, f"sentinel-{uuid.uuid4().hex}.parquet")
     tmp = os.path.join(dir_path, f".{os.path.basename(final)}.tmp")
     pq.write_table(table, tmp)
     os.rename(tmp, final)
-
-
-def _ts_us(dt) -> int:
-    """Epoch microseconds of a (naive-UTC or tz-aware) datetime."""
-    import datetime
-
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=datetime.timezone.utc)
-    return int(dt.timestamp() * 1_000_000)
 
 
 def _stream_state_partitions(spark, sf_dir, table: str = "events") -> int:
@@ -443,13 +451,10 @@ def _stream_state_partitions(spark, sf_dir, table: str = "events") -> int:
     scale-adaptive, not a local constant). ``table`` names the fixture
     the gate actually streams (ADVICE-r11: the scene gate streams
     document-derived frames, so sizing it off events was a heuristic
-    mismatch). Env override: SPARK_GRAFT_STREAM_STATE_PARTITIONS."""
+    mismatch)."""
     import math
     import os
 
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if override:
-        return max(1, int(override))
     path = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(path):
         nbytes = sum(
@@ -463,25 +468,80 @@ def _stream_state_partitions(spark, sf_dir, table: str = "events") -> int:
     return max(1, min(session, math.ceil(nbytes / (256 * 1024))))
 
 
-def _drain_memory_sink(spark, name: str) -> DataFrame:
-    """Detach a finished streaming query's memory-sink table into a
-    standalone DataFrame and DROP the sink's temp view: without the
-    drop, every invocation of a streamed query leaks one in-memory
-    table (holding its full result) into the session catalog for its
-    lifetime.
+class _StreamGate:
+    """The lifecycle around one streamed gate's query: its state width
+    (sized off the fixture ``table`` it streams), a work dir for its
+    checkpoint, feeds and sentinels, and its memory sink. Used as a
+    context manager; on exit, even on error, it drops the memory
+    sink's view (each one holds a full result for the session's
+    lifetime) and removes the work dir. The gate itself keeps its
+    source, trigger, sink and waves."""
 
-    r12 (guide §5 "the driver should do almost no data work"):
-    ``spark.table`` binds the sink's relation EAGERLY (Dataset.ofRows
-    analyzes at construction), so the handle stays valid after the view
-    is dropped and the rows never leave the JVM — the old
-    collect()-then-createDataFrame round trip shipped the full sink
-    (100k rows for the asof/dedup gates at sf0.1) driver→Python→JVM
-    once per invocation, and again Python→JVM at every downstream
-    action. The sink's rows are freed with the returned handle instead
-    of at view drop — same lifecycle the old LocalRelation copy had."""
-    t = spark.table(name)
-    spark.catalog.dropTempView(name)
-    return t
+    def __init__(self, spark, sf_dir, table: str = "events"):
+        import tempfile
+
+        self.spark = spark
+        self.width = _stream_state_partitions(spark, sf_dir, table)
+        self.work = tempfile.mkdtemp(prefix="stream_gate_")
+        self.sink = None
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        import shutil
+
+        if self.sink is not None:
+            self.spark.catalog.dropTempView(self.sink)
+        shutil.rmtree(self.work, ignore_errors=True)
+
+    def path(self, name: str) -> str:
+        """``name`` under the work dir (created by whoever writes it)."""
+        import os
+
+        return os.path.join(self.work, name)
+
+    def memory(self, df: DataFrame, prefix: str, mode: str = "append"):
+        """A writer of ``df`` into a uniquely named memory sink,
+        checkpointed in the work dir; `run` returns its rows."""
+        import uuid
+
+        self.sink = f"{prefix}_{uuid.uuid4().hex[:12]}"
+        return (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(self.sink)
+            .option("checkpointLocation", self.path("ckpt"))
+        )
+
+    def run(self, start: Callable, *waves: Callable) -> DataFrame | None:
+        """Start the query (``start()`` returns it) at the gate's state
+        width and process all available input; then, per wave, call it
+        and process what it made available. The query is stopped even
+        on error, and only then is the session width restored: the
+        query plans its state partitions asynchronously after start(),
+        so an earlier restore would race it.
+
+        Returns the memory sink's rows when `memory` made the writer.
+        ``spark.table`` binds the sink's relation EAGERLY (r12), so the
+        handle stays valid once the view is dropped on exit, and the
+        rows stay in the JVM instead of a collect()-then-
+        createDataFrame round trip through the driver."""
+        conf = self.spark.conf
+        prev = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(self.width))
+        try:
+            q = start()
+            try:
+                q.processAllAvailable()
+                for wave in waves:
+                    wave()
+                    q.processAllAvailable()
+            finally:
+                q.stop()
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev)
+        return None if self.sink is None else self.spark.table(self.sink)
 
 
 @register(
@@ -497,26 +557,13 @@ def events_hourly_counts_streamed(spark, sf_dir):
     from proglog_spark.streaming.windows import streaming_tumbling_counts
 
     agg = streaming_tumbling_counts(_stream_events(spark, sf_dir), "ts", 3600, ["event_type"])
-    name = _sink_name("hourly_streamed")
-    # narrow state width (r11, input-size-derived — see
-    # _stream_state_partitions; restored after the query finishes)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
+    with _StreamGate(spark, sf_dir) as gate:
+        out = gate.run(
+            gate.memory(agg, "hourly_streamed", "complete")
             .trigger(availableNow=True)
-            .start()
+            .start
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name).orderBy("bucket", "event_type")
+    return out.orderBy("bucket", "event_type")
 
 
 @register(
@@ -572,28 +619,11 @@ def events_dedup_streamed(spark, sf_dir):
         "event_type",
         F.unix_micros(F.col("ts")).alias("ts_us"),
     )
-    name = _sink_name("dedup_streamed")
-    # narrow state width (r11): dedup state is ~1 row/event, and each
-    # state partition pays a fixed commit per micro-batch — width from
-    # _stream_state_partitions (input-size-derived), restored only
-    # after the query finishes (earlier would race the plan capture)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    with _StreamGate(spark, sf_dir) as gate:
+        out = gate.run(
+            gate.memory(deduped, "dedup_streamed").trigger(availableNow=True).start
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name).orderBy("event_id")
+    return out.orderBy("event_id")
 
 
 @register(
@@ -616,9 +646,6 @@ def events_cdc_apply_streamed(spark, sf_dir):
     last-writer-per-key oracle over the whole feed — a lost change, a
     stale overwrite, or a duplicated key all fail. event_id is the
     CDC sequence (unique, monotone)."""
-    import shutil
-    import tempfile
-
     from proglog_spark.sources.upsert import KeyedTable
     from proglog_spark.streaming.cdc import apply_cdc_stream, latest_per_key
 
@@ -626,36 +653,25 @@ def events_cdc_apply_streamed(spark, sf_dir):
         "user_id", "event_id", "event_type", "value"
     )
     half = e.agg((F.max("event_id") / 2).cast("long")).collect()[0][0]
-    d = tempfile.mkdtemp(prefix="cdc_gate_")
-    try:
+    with _StreamGate(spark, sf_dir) as gate:
         table = KeyedTable.create(
             spark,
-            f"{d}/table",
+            gate.path("table"),
             latest_per_key(e.where(F.col("event_id") <= half), "user_id", "event_id"),
             "user_id",
             n_buckets=8,
         )
-        e.where(F.col("event_id") > half).write.mode("append").parquet(f"{d}/feed")
-        # narrow width for the per-batch merge jobs (r11; input-size-
-        # derived — see _stream_state_partitions; restored after stop)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = apply_cdc_stream(
-                spark.readStream.schema(e.schema).parquet(f"{d}/feed"),
+        feed = gate.path("feed")
+        e.where(F.col("event_id") > half).write.mode("append").parquet(feed)
+        gate.run(
+            lambda: apply_cdc_stream(
+                spark.readStream.schema(e.schema).parquet(feed),
                 table,
                 order_col="event_id",
-                checkpoint=f"{d}/ckpt",
+                checkpoint=gate.path("ckpt"),
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        )
+        # materialized before the work dir holding the table goes
         out = _materialize(
             table.df().select(
                 "user_id",
@@ -664,8 +680,6 @@ def events_cdc_apply_streamed(spark, sf_dir):
                 F.floor(F.col("value") * 1000000).cast("long").alias("value_micro"),
             )
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return out.orderBy("user_id")
 
 
@@ -855,103 +869,40 @@ def events_sessionize_streamed(spark, sf_dir):
     """Session windows through the REAL stateful streaming engine:
     `streaming_sessionize` (applyInPandasWithState, event-time
     timeouts) runs over the fixture as a Structured Streaming query;
-    two sentinel batches push the watermark past every fixture
+    two sentinel waves push the watermark past every fixture
     session's end+gap so each session is emitted exactly once, then
     the emitted set must hash-match the batch lag+cumsum oracle —
     the stateful-operator convergence contract, oracle-enforced
     (the third streamed-inside-the-gate entry, next to A1 tumbling
     and the distinct rollup)."""
     import datetime
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
 
     from proglog_spark.streaming import streaming_sessionize
 
-    # fixture stream straight off the fixture file (no copy): same
-    # ns→µs normalization as the A1 streamed twin
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    fixture = _stream_events(spark, sf_dir).select("user_id", "ts")
-
+    # fixture stream straight off the fixture file (no copy)
+    fixture = _stream_events(spark, sf_dir).select(F.col("user_id").cast("long"), "ts")
     # two sentinel events far past the fixture horizon close every
-    # fixture session: the FIRST rides along in batch 1 (so batch 1
-    # already carries the advanced watermark), the second lands in
-    # batch 2 where every fixture user's event-time timeout fires —
-    # exactly two stateful micro-batches total
-    max_ts = spark.read.parquet(path).agg(F.max("ts")).collect()[0][0]
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        base = datetime.datetime.fromtimestamp(max_ts / 1e9, datetime.timezone.utc)
-    else:
-        base = max_ts
-    sentinel = 999_999_999
-    sentinel_dir = tempfile.mkdtemp(prefix="sess_sentinel_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
-
-    def _write_sentinel(days: int) -> None:
-        # driver-side pyarrow write (~ms) — was a Spark job per wave
-        import pyarrow as pa
-
-        _write_sentinel_parquet(
-            sentinel_dir,
-            {
-                "user_id": pa.array([sentinel], pa.int64()),
-                "ts": pa.array(
-                    [_ts_us(base + datetime.timedelta(days=days))],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-            },
+    # fixture session: the first rides along with the fixture, the
+    # second is a wave. Each sentinel's micro-batch is followed by a
+    # no-data batch that the advanced watermark triggers — four in
+    # all, with [1001, 0, 1, 0] input rows at sf0.001 (pinned in
+    # tests/test_streaming.py)
+    horizon = _fixture_horizon(spark, sf_dir, events="ts")
+    first, second = (horizon + datetime.timedelta(days=d) for d in (30, 60))
+    with _StreamGate(spark, sf_dir) as gate:
+        sentinels = gate.path("sentinels")
+        _write_sentinel_parquet(sentinels, "ts", first, user_id=_SENTINEL_KEY)
+        stream = fixture.unionByName(
+            spark.readStream.schema("user_id long, ts timestamp").parquet(sentinels)
         )
-
-    _write_sentinel(30)
-    sentinels = spark.readStream.schema("user_id long, ts timestamp").parquet(
-        sentinel_dir
-    )
-    stream = fixture.select(F.col("user_id").cast("long"), "ts").unionByName(sentinels)
-
-    name = _sink_name("sessionize_streamed")
-    # a stateful query pins its partitioning at start; the state key
-    # domain is 64 user-hash BUCKETS (r5 — the engine vectorizes
-    # per-user logic inside each bucket), so a narrow state width
-    # still wins by avoiding 32 store commits per micro-batch
-    # (measured at sf0.1: 8.2 s at width 8 vs 9.4 s at 32) — set for
-    # this query only. The query initializes ASYNCHRONOUSLY after
-    # start() returns, so the conf is only restored after q.stop():
-    # restoring earlier could race the stream's plan capture (and the
-    # 8-partition width would silently not apply)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # r11: input-size-derived width (was a hard-coded 8)
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            streaming_sessionize(stream, gap_seconds=1800, watermark="1 minute")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
+        out = gate.run(
+            gate.memory(
+                streaming_sessionize(stream, gap_seconds=1800, watermark="1 minute"),
+                "sessionize_streamed",
+            ).start,
+            lambda: _write_sentinel_parquet(sentinels, "ts", second, user_id=_SENTINEL_KEY),
         )
-        try:
-            q.processAllAvailable()
-            _write_sentinel(60)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = _drain_memory_sink(spark, name)
-    # the stopped query's checkpoint and the sentinel input dir are
-    # single-use — drop them so repeated invocations don't accumulate
-    # temp dirs for the process lifetime
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sentinel_dir, ignore_errors=True)
-    return out.where(F.col("user_id") != sentinel).orderBy(
+    return out.where(F.col("user_id") != _SENTINEL_KEY).orderBy(
         "user_id", "session_start_us"
     )
 
@@ -1032,110 +983,37 @@ def events_asof_order_streamed(spark, sf_dir):
     oracle as the batch twin — the fourth streamed-inside-the-gate
     entry, and the only stream-STREAM one."""
     import datetime
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
 
     from proglog_spark.streaming.asof import streaming_asof_join
 
     ev = _stream_events(spark, sf_dir).select("event_id", "user_id", "ts")
-    o_path = os.path.join(sf_dir, "orders.parquet")
-    o_schema = spark.read.parquet(o_path).schema
-    if os.path.isdir(o_path):
-        orders = spark.readStream.schema(o_schema).parquet(o_path)
-    else:
-        orders = (
-            spark.readStream.schema(o_schema)
-            .option("pathGlobFilter", "orders.parquet")
-            .parquet(sf_dir)
-        )
-    sentinel_dir = tempfile.mkdtemp(prefix="asof_sentinel_")
-    ckpt = tempfile.mkdtemp(prefix="asof_ckpt_")
-    cand_schema = "o_custkey LONG, o_orderdate TIMESTAMP, o_orderkey LONG, o_totalprice DOUBLE"
-    cands = orders.select(
+    orders = _stream_events(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_orderkey", "o_totalprice"
-    ).unionByName(
-        spark.readStream.schema(cand_schema).parquet(sentinel_dir)
     )
-
-    # horizon for the sentinels: past every event AND order timestamp
-    ev_raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    max_ev = ev_raw.agg(F.max("ts")).collect()[0][0]
-    if isinstance(ev_raw.schema["ts"].dataType, T.LongType):
-        base = datetime.datetime.fromtimestamp(max_ev / 1e9, datetime.timezone.utc)
-    else:
-        base = max_ev
-    max_ord = spark.read.parquet(o_path).agg(F.max("o_orderdate")).collect()[0][0]
-    base = max(base.replace(tzinfo=None), max_ord)
-
-    def _write_sentinel(days: int) -> None:
-        # driver-side pyarrow write (~ms) — was a Spark job per wave
-        import pyarrow as pa
-
-        _write_sentinel_parquet(
-            sentinel_dir,
-            {
-                "o_custkey": pa.array([999_999_999], pa.int64()),
-                "o_orderdate": pa.array(
-                    [_ts_us(base + datetime.timedelta(days=days))],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-                "o_orderkey": pa.array([0], pa.int64()),
-                "o_totalprice": pa.array([0.0], pa.float64()),
-            },
+    # sentinels land past every event AND order timestamp
+    horizon = _fixture_horizon(spark, sf_dir, events="ts", orders="o_orderdate")
+    first, second = (horizon + datetime.timedelta(days=d) for d in (30, 60))
+    sentinel = {"o_custkey": _SENTINEL_KEY, "o_orderkey": 0, "o_totalprice": 0.0}
+    cand_schema = "o_custkey LONG, o_orderdate TIMESTAMP, o_orderkey LONG, o_totalprice DOUBLE"
+    with _StreamGate(spark, sf_dir) as gate:
+        sentinels = gate.path("sentinels")
+        _write_sentinel_parquet(sentinels, "o_orderdate", first, **sentinel)
+        cands = orders.unionByName(spark.readStream.schema(cand_schema).parquet(sentinels))
+        joined = streaming_asof_join(
+            ev.withColumnRenamed("user_id", "k"),
+            cands.withColumnRenamed("o_custkey", "k"),
+            on="k",
+            left_time="ts",
+            right_time="o_orderdate",
+            left_id="event_id",
+            tie_break="o_orderkey",
+            value_cols=["o_totalprice"],
+            watermark="1 minute",
         )
-
-    _write_sentinel(30)
-    name = _sink_name("asof_streamed")
-    # narrow state width (r11): the engine groups state by hash BUCKET
-    # (r5 — 64 buckets, per-key logic vectorized inside via one
-    # merge_asof per seal wave), so per-micro-batch Python invocations
-    # are O(64) regardless of user count. The r5-era claim that the
-    # session's 32-wide state paid off no longer holds for the
-    # bucketed engine: profile_stream.py showed per-partition state
-    # COMMITS dominating addBatch (~0.3-0.8 s fixed cost per
-    # partition-commit), and the r11 interleaved A/B read 8.95 s at
-    # width 8 vs 11.7 s at 32 on this fixture — so the gate now uses
-    # the input-size-derived width (_stream_state_partitions, clamped
-    # to the session width at scale). Conf restored only after
-    # q.stop(): earlier could race the stream's plan capture.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            streaming_asof_join(
-                ev.withColumnRenamed("user_id", "k"),
-                cands.withColumnRenamed("o_custkey", "k"),
-                on="k",
-                left_time="ts",
-                right_time="o_orderdate",
-                left_id="event_id",
-                tie_break="o_orderkey",
-                value_cols=["o_totalprice"],
-                watermark="1 minute",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
+        out = gate.run(
+            gate.memory(joined, "asof_streamed").start,
+            lambda: _write_sentinel_parquet(sentinels, "o_orderdate", second, **sentinel),
         )
-        try:
-            q.processAllAvailable()
-            _write_sentinel(60)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = _drain_memory_sink(spark, name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sentinel_dir, ignore_errors=True)
     return out.select(
         "left_id",
         F.col("key").alias("user_id"),
@@ -1585,7 +1463,8 @@ def docs_bm25_topk(spark, sf_dir):
 def _materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize a SMALL result so its lineage no longer
     reads the temp artifact the caller is about to delete (the
-    `_drain_memory_sink` move applied to file-backed artifacts). Only
+    streamed gates' eager memory-sink bind applied to file-backed
+    artifacts). Only
     ever used on bounded top-k/audit outputs.
 
     r12: ``localCheckpoint(eager=True)`` instead of
@@ -6967,9 +6846,6 @@ def events_trailing_anomaly_streamed(spark, sf_dir):
     no watermark sealing, so no sentinels), which is the operational
     difference from the sealed-emission engines; the seventh
     streamed-inside-the-gate entry."""
-    import shutil
-    import tempfile
-
     from proglog_spark.streaming.anomaly import streaming_trailing_anomaly
 
     e = load_table(spark, sf_dir, "events").select(
@@ -6986,41 +6862,14 @@ def events_trailing_anomaly_streamed(spark, sf_dir):
         .collect()[0]
         .m
     )
-    feed = tempfile.mkdtemp(prefix="anomaly_feed_")
-    ckpt = tempfile.mkdtemp(prefix="anomaly_ckpt_")
-    name = _sink_name("anomaly_streamed")
-    try:
+    with _StreamGate(spark, sf_dir) as gate:
+        feed = gate.path("feed")
         e.where(F.col("ts") <= F.lit(mid)).write.mode("append").parquet(feed)
-        # narrow state width (r11, input-size-derived — see
-        # _stream_state_partitions; restored after the query stops)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_state_partitions(spark, sf_dir)),
+        flags = streaming_trailing_anomaly(spark.readStream.schema(e.schema).parquet(feed))
+        out = gate.run(
+            gate.memory(flags, "anomaly_streamed").start,
+            lambda: e.where(F.col("ts") > F.lit(mid)).write.mode("append").parquet(feed),
         )
-        try:
-            q = (
-                streaming_trailing_anomaly(
-                    spark.readStream.schema(e.schema).parquet(feed)
-                )
-                .writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                e.where(F.col("ts") > F.lit(mid)).write.mode("append").parquet(feed)
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        out = _drain_memory_sink(spark, name)
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out.select(
         "event_id", "event_type", "value_micro", "trail_n", "trail_sum_micro"
     ).orderBy("event_id")
@@ -7600,26 +7449,11 @@ def events_cms_streamed(spark, sf_dir):
     property that makes sketches the streaming answer to frequency
     questions, where exact per-key state grows with the key space."""
     cells = sketch.cms_build(_stream_events(spark, sf_dir), "user_id")
-    name = _sink_name("cms_streamed")
-    # narrow state width (r11, input-size-derived — see
-    # _stream_state_partitions; restored after the query finishes)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            cells.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    with _StreamGate(spark, sf_dir) as gate:
+        out = gate.run(
+            gate.memory(cells, "cms_streamed", "complete").trigger(availableNow=True).start
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name).orderBy("j", "b")
+    return out.orderBy("j", "b")
 
 
 @register(
@@ -7663,30 +7497,11 @@ def events_heavy_hitters_streamed(spark, sf_dir):
     emissions = heavy.streaming_heavy_hitters(
         _stream_events(spark, sf_dir), "user_id", k=255, groups=8
     )
-    name = _sink_name("heavy_streamed")
-    # stateful queries pin partitioning at start; the state key domain
-    # is exactly 8 synthetic groups, so a narrow state width avoids 32
-    # store commits per micro-batch (the sessionize precedent; conf
-    # restored only after the query finishes — earlier would race the
-    # stream's plan capture)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # r11: input-size-derived width (was a hard-coded 8)
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            emissions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    with _StreamGate(spark, sf_dir) as gate:
+        summaries = gate.run(
+            gate.memory(emissions, "heavy_streamed").trigger(availableNow=True).start
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    mg = heavy.latest_summaries(_drain_memory_sink(spark, name)).select(
+    mg = heavy.latest_summaries(summaries).select(
         F.col("key").cast("long").alias("user_id"),
         F.col("est").alias("mg_est"),
     )
@@ -7921,55 +7736,37 @@ def events_distinct_rollup_streamed(spark, sf_dir):
     This is the streaming convergence contract for distinct counts —
     the idempotent-merge design means the same table would hash-match
     even under batch replays (pinned in tests/test_streaming.py)."""
-    import os
-    import tempfile
-
     from proglog_spark.streaming.distinct import (
         continuous_distinct_rollup,
         read_distinct_rollup,
     )
 
     stream = _stream_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="distinct_rollup_")
-    # narrow width for the per-batch rollup jobs (r11, input-size-
-    # derived — see _stream_state_partitions; restored after stop)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = continuous_distinct_rollup(
-            stream,
-            "ts",
-            86400,  # daily: the rollup cost per batch scales with TOUCHED
-            # bucket partitions, and a backfill of the whole fixture in
-            # one batch touches every bucket — hourly granularity writes
-            # ~500 tiny partition dirs here for no extra test coverage
-            ["event_type"],
-            "user_id",
-            rollup_path=os.path.join(work, "rollup"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            mode="exact",
+    with _StreamGate(spark, sf_dir) as gate:
+        rollup = gate.path("rollup")
+        gate.run(
+            lambda: continuous_distinct_rollup(
+                stream,
+                "ts",
+                86400,  # daily: the rollup cost per batch scales with TOUCHED
+                # bucket partitions, and a backfill of the whole fixture in
+                # one batch touches every bucket — hourly granularity writes
+                # ~500 tiny partition dirs here for no extra test coverage
+                ["event_type"],
+                "user_id",
+                rollup_path=rollup,
+                checkpoint_dir=gate.path("ckpt"),
+                mode="exact",
+            )
         )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    t = read_distinct_rollup(
-        spark, os.path.join(work, "rollup"), ["event_type"], mode="exact"
-    ).select(
-        F.col("bucket").cast("long").alias("bucket"),
-        "event_type",
-        "n_distinct",
-    )
-    # materialize the (bounded) rollup answer so the single-use work
-    # dir — rollup table + checkpoint — can be deleted immediately
-    # instead of leaking one tree per invocation
-    import shutil
-
-    rows, schema = t.collect(), t.schema
-    shutil.rmtree(work, ignore_errors=True)
+        t = read_distinct_rollup(spark, rollup, ["event_type"], mode="exact").select(
+            F.col("bucket").cast("long").alias("bucket"),
+            "event_type",
+            "n_distinct",
+        )
+        # the (bounded) answer is collected before the work dir
+        # holding the rollup table goes
+        rows, schema = t.collect(), t.schema
     return spark.createDataFrame(rows, schema).orderBy("bucket", "event_type")
 
 
@@ -10032,7 +9829,6 @@ def docs_scene_cuts_streamed(spark, sf_dir):
     convergence contract. Bucketed state groups (64 clip buckets,
     same O(buckets)-invocations recipe as the sessionizer)."""
     import datetime
-    import tempfile
 
     from proglog_spark.streaming.scenes import streaming_scene_segments
 
@@ -10074,29 +9870,32 @@ def docs_scene_cuts_streamed(spark, sf_dir):
     # unpersists (the full ADVICE-r9 leak fix; the first cut only
     # moved the guard)
     halves = sk.join(mid, "doc_id").cache()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        stream_dir = tempfile.mkdtemp(prefix="scene_stream_")
-        ckpt = tempfile.mkdtemp(prefix="scene_ckpt_")
-        cols = ["doc_id", "k", "simhash_lo", "simhash_hi", "ts"]
-        halves.where(F.col("k") <= F.col("mid_k")).select(*cols).write.mode(
-            "append"
-        ).parquet(stream_dir)
-
-        schema = (
-            "doc_id LONG, k LONG, simhash_lo LONG, simhash_hi LONG, "
-            "ts TIMESTAMP"
-        )
-        frames_stream = spark.readStream.schema(schema).parquet(stream_dir)
-        name = _sink_name("scene_streamed")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            # r11: input-size-derived width (was a hard-coded 8);
-            # r12 (ADVICE-r11): sized off the table this gate actually
-            # streams — the frames derive from documents, not events
-            str(_stream_state_partitions(spark, sf_dir, table="documents")),
-        )
-        q = (
+        with _StreamGate(spark, sf_dir, "documents") as gate:
+            feed = gate.path("frames")
+            cols = ["doc_id", "k", "simhash_lo", "simhash_hi", "ts"]
+            halves.where(F.col("k") <= F.col("mid_k")).select(*cols).write.mode(
+                "append"
+            ).parquet(feed)
+            schema = (
+                "doc_id LONG, k LONG, simhash_lo LONG, simhash_hi LONG, "
+                "ts TIMESTAMP"
+            )
+            # the second wave: the second half plus the watermark
+            # sentinel clip. The sentinel rides INSIDE the second-half
+            # write: a separate sentinel file was probed in r12
+            # (driver-side pyarrow write) and REVERTED — the file
+            # source discovers it in its own listing moment, adding a
+            # micro-batch (interleaved A/B read batches 5->6 and
+            # ~+1-2 s trigger time), and a sentinel-only batch ahead of
+            # late-arriving second-half files would late-drop them at
+            # wm+30d
+            sentinel_ts = datetime.datetime.fromtimestamp(
+                base_s, datetime.timezone.utc
+            ) + datetime.timedelta(days=30)
+            second = halves.where(F.col("k") > F.col("mid_k")).select(*cols).unionByName(
+                spark.createDataFrame([(_SENTINEL_KEY, 0, 0, 0, sentinel_ts)], schema)
+            )
             # watermark delay must exceed the whole frame-time SPAN:
             # ts = base + k, so after batch 1 the GLOBAL watermark sits
             # at (base + longest clip's mid-k - delay) — with a short
@@ -10105,46 +9904,18 @@ def docs_scene_cuts_streamed(spark, sf_dir):
             # clips undercounted at sf0.001 with delay "1 minute").
             # Clips span <= ~1200 frame-seconds; "2 hours" clears any
             # fixture scale while the +30-day sentinel still seals
-            streaming_scene_segments(
-                frames_stream, gap_seconds=3600, watermark="2 hours"
+            segments = streaming_scene_segments(
+                spark.readStream.schema(schema).parquet(feed),
+                gap_seconds=3600,
+                watermark="2 hours",
             )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # second half + the watermark sentinel clip
-            # the sentinel clip rides INSIDE the second-half write: a
-            # separate sentinel file was probed in r12 (driver-side
-            # pyarrow write) and REVERTED — the file source discovers
-            # it in its own listing moment, adding a micro-batch
-            # (interleaved A/B read batches 5->6 and ~+1-2 s trigger
-            # time), and a sentinel-only batch ahead of late-arriving
-            # second-half files would late-drop them at wm+30d
-            second = halves.where(F.col("k") > F.col("mid_k")).select(*cols)
-            sentinel_ts = datetime.datetime.fromtimestamp(
-                base_s, datetime.timezone.utc
-            ) + datetime.timedelta(days=30)
-            sentinel = spark.createDataFrame(
-                [(999_999_999, 0, 0, 0, sentinel_ts)], schema
+            out = gate.run(
+                gate.memory(segments, "scene_streamed").start,
+                lambda: second.write.mode("append").parquet(feed),
             )
-            second.unionByName(sentinel).write.mode("append").parquet(
-                stream_dir
-            )
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         halves.unpersist()
-    return (
-        _drain_memory_sink(spark, name)
-        .where(F.col("doc_id") != 999_999_999)
-        .orderBy("doc_id")
-    )
+    return out.where(F.col("doc_id") != _SENTINEL_KEY).orderBy("doc_id")
 
 
 def _scene_pair_counts(spark, sf_dir):

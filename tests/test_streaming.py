@@ -1519,3 +1519,108 @@ def test_streaming_scene_segments_across_shuffled_batches(spark, tmp_path):
         8: piece_from_frames(range(4), b_los, b_his)[6:9],
     }
     assert got == {d: tuple(v) for d, v in want.items()}
+
+
+# Micro-batches each streamed gate runs at sf0.001 on local[4]. The
+# pin is a baseline for cutting batches, not a contract: a change
+# that removes one updates its row here.
+_GATE_BATCHES = {
+    "events_hourly_counts_streamed": 1,
+    "events_cdc_apply_streamed": 1,
+    "events_cms_streamed": 1,
+    "events_heavy_hitters_streamed": 1,
+    "events_distinct_rollup_streamed": 1,
+    "events_dedup_streamed": 2,
+    "events_trailing_anomaly_streamed": 2,
+    "events_sessionize_streamed": 4,
+    "events_asof_order_streamed": 4,
+    "docs_scene_cuts_streamed": 4,
+}
+
+
+@pytest.fixture
+def gate_progress(spark):
+    """Counts the progress events of the streaming queries started
+    while the test runs; ``count()`` waits for the listener bus."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Counter(StreamingQueryListener):
+        def __init__(self):
+            self.batches = 0
+
+        def onQueryStarted(self, event):  # noqa: N802
+            pass
+
+        def onQueryProgress(self, event):  # noqa: N802
+            self.batches += 1
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            pass
+
+        def count(self):
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            return self.batches
+
+    counter = Counter()
+    spark.streams.addListener(counter)
+    yield counter
+    spark.streams.removeListener(counter)
+
+
+def _session_state(spark):
+    import os
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+    return {
+        "width": spark.conf.get("spark.sql.shuffle.partitions"),
+        "views": {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        "tmp_dirs": {d for d in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, d))},
+    }
+
+
+def _assert_clean_exit(spark, before):
+    """No query left running, the session width restored, and no temp
+    view or temp directory left behind by the gate."""
+    after = _session_state(spark)
+    assert spark.streams.active == []
+    assert after["width"] == before["width"]
+    assert after["views"] - before["views"] == set()
+    assert after["tmp_dirs"] - before["tmp_dirs"] == set()
+
+
+@pytest.mark.parametrize("name", sorted(_GATE_BATCHES))
+def test_streamed_gate_batches_and_clean_exit(spark, sf_dir, gate_progress, name):
+    from proglog_spark import queries as q
+
+    before = _session_state(spark)
+    out = q.REGISTRY[name][0](spark, sf_dir)
+    assert out.count() > 0
+    assert gate_progress.count() == _GATE_BATCHES[name]
+    _assert_clean_exit(spark, before)
+
+
+def test_streamed_gate_cleans_up_on_error(spark, sf_dir, monkeypatch):
+    """A wave that fails while the query runs (here the sessionize
+    gate's second sentinel) still stops the query, restores the width
+    and removes the sink view and the work dirs."""
+    from proglog_spark import queries as q
+
+    write = q._write_sentinel_parquet
+    calls = []
+
+    def fail_second(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("sentinel write failed")
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(q, "_write_sentinel_parquet", fail_second)
+    before = _session_state(spark)
+    with pytest.raises(OSError, match="sentinel write failed"):
+        q.REGISTRY["events_sessionize_streamed"][0](spark, sf_dir)
+    assert len(calls) == 2
+    _assert_clean_exit(spark, before)
