@@ -61,6 +61,12 @@ from proglog_spark.errors import (
     WriterLockLostError,
 )
 from proglog_spark.log.offsets import assign_dense_offsets
+from proglog_spark.sources.datasource import (
+    _bucket_dirs,
+    _bucket_files,
+    _min_offset_at_least,
+    _scan_rows,
+)
 
 RECORD_SCHEMA = T.StructType(
     [
@@ -75,28 +81,9 @@ _META_FILE = "_proglog_meta.json"
 _LOCK_FILE = "_proglog_writer.lock"
 _DATA_COLS = ["offset", "value", "term", "type"]
 
-# hot-bucket read cache sizing: buckets larger than this fall back to
-# the filtered (row-group-pruned) read instead of being decoded whole
-_HOT_CACHE_MAX_ROWS_PER_BUCKET = 1 << 18
-_HOT_CACHE_BUCKETS = 8
-# byte bounds (rows alone under-count large value payloads): buckets
-# above the compressed bound are never decoded whole; a decoded table
-# above the decoded bound answers the read but is not pinned — worst
-# case the cache holds _HOT_CACHE_BUCKETS x 128 MiB decoded
-_HOT_CACHE_MAX_COMPRESSED_BYTES = 1 << 26  # 64 MiB on disk
-_HOT_CACHE_MAX_DECODED_BYTES = 1 << 27  # 128 MiB in memory
-
-
-def _committed_parquet_files(bdir: str) -> list[str]:
-    """Sorted committed data files in one bucket dir — THE definition
-    of 'committed' for every native reader (underscore/dot-prefixed
-    markers and tmp files are not data; sources/datasource.py keeps a
-    mirrored copy for executor-side use)."""
-    return sorted(
-        f
-        for f in os.listdir(bdir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+# byte budget of the decoded row-group LRU behind native point reads;
+# a row group decoding to more than this is served but not kept
+_DECODED_CACHE_BYTES = 1 << 27  # 128 MiB in memory
 
 
 class _PartialNativeAppend(RuntimeError):
@@ -131,10 +118,11 @@ class LogTable:
         self.initial_offset = int(initial_offset)
         self.max_records_per_file = int(max_records_per_file)
         # parquet row-group size for the data files (None = writer
-        # default, ~128 MB groups). The point-read latency dial: the
-        # native read path prunes row groups by footer stats and then
-        # decodes ONE group, so smaller groups mean faster Consume at
-        # the cost of more groups per scan. Persisted in meta.
+        # default, ~128 MB groups). The point-read dial: the native read
+        # path finds the row group in the footer index, then decodes
+        # and caches that ONE group, so smaller groups mean a cheaper
+        # cold Consume and finer LRU eviction at the cost of more
+        # groups per scan. Persisted in meta.
         self.row_group_bytes = int(row_group_bytes) if row_group_bytes else None
         # Offsets never regress, even if truncation empties the log —
         # the reference keeps nextOffset in its active segment; we
@@ -146,19 +134,16 @@ class LogTable:
         # checkpoint identity that wrote last_produce_batch (None on
         # metas written before the marker was checkpoint-scoped)
         self.last_produce_marker: str | None = None
-        # native point-read dataset cache, keyed by (bucket dir, its
-        # committed file set): a fresh listdir per read keeps the key
-        # honest (parquet files are immutable once committed, so a
-        # changed file SET is the only way a bucket changes), while the
-        # expensive part — footer parse + row-group statistics — is
-        # paid once per bucket version instead of per read
-        self._native_ds_cache: dict[tuple, object] = {}
-        # decoded hot-bucket rows (offset array + arrow table), LRU —
-        # the mmap-page-cache analog for µs-class warm point reads
-        self._native_tbl_cache: dict[tuple, tuple] = {}
-        # buckets whose DECODED size exceeded the pin budget: skip the
-        # full-bucket decode on later reads (take the filtered path)
-        self._no_pin_keys: set[tuple] = set()
+        # footer index of the native read path, {bucket dir: {file:
+        # (n_rows, ((min, max) offset per row group, ...))}}: committed
+        # parquet files are immutable, so a footer is read once per file
+        # and a re-listed directory only adds or drops entries
+        self._footers: dict[str, dict[str, tuple[int, tuple]]] = {}
+        # decoded row groups, {(file, row group): (sorted offsets,
+        # offset-sorted table)}, LRU within _DECODED_CACHE_BYTES — the
+        # mmap-page-cache analog for µs-class warm point reads
+        self._decoded: dict[tuple[str, int], tuple] = {}
+        self._decoded_bytes = 0
         # cross-process writer lock state: _lock_owned ⇒ this instance
         # may mutate; _lock_created ⇒ it wrote the lock file and owes
         # the delete on close() (a same-pid sibling instance borrows
@@ -834,9 +819,9 @@ class LogTable:
                 owner = self._read_lock_owner()
                 if owner is None or self._owner_is_self(owner):
                     self._delete_lock_file()
-        self._native_ds_cache.clear()
-        self._native_tbl_cache.clear()
-        self._no_pin_keys.clear()
+        self._footers.clear()
+        self._decoded.clear()
+        self._decoded_bytes = 0
 
     def __enter__(self) -> "LogTable":
         return self
@@ -1110,11 +1095,6 @@ class LogTable:
                 "consume_iter needs a local log path; use "
                 "streaming.consume.tail_follow for remote stores"
             )
-        from proglog_spark.sources.datasource import (
-            _min_offset_at_least,
-            _scan_rows,
-        )
-
         cursor = int(from_offset)
         while stop is None or not stop.is_set():
             lo = _min_offset_at_least(self.path, cursor)
@@ -1140,20 +1120,21 @@ class LogTable:
     def read(self, offset: int) -> Row:
         """Point lookup; raises OffsetOutOfRangeError on a miss (L1/L10).
 
-        The bucket equality predicate prunes to one directory; the
-        offset predicate then prunes row groups via footer stats —
-        the two-level routing of reference log.go:99-104 + index.go.
+        The two-level routing of reference log.go:99-104 + index.go: the
+        offset names one bucket directory, and the footer index names
+        the row group whose offset range holds it.
 
         Fast path: on a local filesystem the lookup runs in-process
-        through pyarrow over the SAME committed bucket files (directory
-        prune + footer-stat row-group prune, no Spark job) — point
-        reads drop from the ~130 ms job-scheduling floor to
-        single-digit ms, which is the honest analog of the reference's
-        mmap read (its read is also a local, scheduler-free read,
-        internal/log/segment.go:66-79). Remote/object-store paths and
-        any pyarrow surprise fall back to the Spark plan, which is the
-        source of truth for semantics (the test suite runs both: the
-        fast path serves the same bytes Spark committed).
+        through pyarrow over the SAME committed bucket files, no Spark
+        job. The footer index (``_footer_index``) reads each file's
+        footer once; the row group is decoded once, sorted by offset,
+        and kept in one LRU bounded by ``_DECODED_CACHE_BYTES``, so a
+        warm read is a directory listing plus a binary search — the
+        analog of the reference's mmap read (internal/log/segment.go:
+        66-79). Remote/object-store paths, footers without offset
+        statistics and any pyarrow surprise fall back to the Spark plan,
+        which is the source of truth for semantics (the test suite runs
+        both: the fast path serves the same bytes Spark committed).
         """
         offset = int(offset)
         native = self._read_native(offset)
@@ -1193,101 +1174,85 @@ class LogTable:
             return None
         bdir = os.path.join(local, f"bucket={offset // self.bucket_size}")
         try:
-            import pyarrow.dataset as pads
-
             if not os.path.isdir(bdir):
                 raise OffsetOutOfRangeError(offset)
-            # committed part files only (no _SUCCESS/_committed markers,
-            # no dot-temp files)
-            files = _committed_parquet_files(bdir)
-            if not files:
-                raise OffsetOutOfRangeError(offset)
-            key = (bdir, tuple(files))
-            # Hot-bucket row cache — the mmap analog: the reference's
-            # per-record reads are µs because the OS keeps hot segment
-            # pages resident (index.go:34 mmap); here the decoded
-            # bucket (offset-sorted arrow table) plays that role, so a
-            # warm point read is a binary search + one row
-            # materialization. Bounded LRU (8 buckets); invalidated
-            # automatically when the bucket's file set changes.
-            ds = self._native_ds_cache.get(key)
-            if ds is None:
-                # drop superseded versions of this bucket; cap total
-                # cached buckets so a scan over a huge log stays
-                # bounded
-                self._native_ds_cache = {
-                    k: v
-                    for k, v in self._native_ds_cache.items()
-                    if k[0] != bdir
-                }
-                if len(self._native_ds_cache) >= 256:
-                    self._native_ds_cache.clear()
-                ds = pads.dataset(
-                    [os.path.join(bdir, f) for f in files],
-                    format="parquet",
-                )
-                self._native_ds_cache[key] = ds
-            cached = self._native_tbl_cache.get(key)
-            if cached is not None:
-                self._native_tbl_cache[key] = self._native_tbl_cache.pop(key)
-            elif (
-                key not in self._no_pin_keys
-                and ds.count_rows() <= _HOT_CACHE_MAX_ROWS_PER_BUCKET
-                and sum(os.path.getsize(os.path.join(bdir, f)) for f in files)
-                <= _HOT_CACHE_MAX_COMPRESSED_BYTES
-            ):
-                # small enough to pin decoded — bounded in rows AND
-                # bytes (count_rows() is footer metadata, getsize is a
-                # stat; neither reads data). Row count alone would let
-                # large `value` payloads pin gigabytes.
-                full = ds.to_table(columns=_DATA_COLS).sort_by("offset")
-                cached = (full.column("offset").to_numpy(), full)
-                if full.nbytes > _HOT_CACHE_MAX_DECODED_BYTES:
-                    # decoded form exceeds the pin budget: remember the
-                    # verdict so later reads of this bucket take the
-                    # row-group-filtered path instead of re-decoding
-                    # the whole bucket on every miss (this call still
-                    # uses the decode it already paid for)
-                    if len(self._no_pin_keys) >= 64:
-                        self._no_pin_keys.clear()
-                    self._no_pin_keys = {
-                        k for k in self._no_pin_keys if k[0] != bdir
-                    }
-                    self._no_pin_keys.add(key)
-                else:
-                    self._native_tbl_cache = {
-                        k: v
-                        for k, v in self._native_tbl_cache.items()
-                        if k[0] != bdir
-                    }
-                    while len(self._native_tbl_cache) >= _HOT_CACHE_BUCKETS:
-                        self._native_tbl_cache.pop(
-                            next(iter(self._native_tbl_cache))
-                        )
-                    self._native_tbl_cache[key] = cached
-            if cached is not None:
-                import numpy as _np
-
-                offs, full = cached
-                i = int(_np.searchsorted(offs, offset))
-                if i >= len(offs) or int(offs[i]) != offset:
-                    raise OffsetOutOfRangeError(offset)
-                rec = {c: full.column(c)[i].as_py() for c in _DATA_COLS}
-            else:
-                # oversized bucket: keep the row-group-pruned filtered
-                # read — decode one group, not the bucket
-                tbl = ds.to_table(
-                    columns=_DATA_COLS,
-                    filter=pads.field("offset") == offset,
-                )
-                if tbl.num_rows == 0:
-                    raise OffsetOutOfRangeError(offset)
-                rec = tbl.to_pylist()[0]
+            index = self._footer_index(bdir)
+            if index is None:
+                return None
+            for path, (_, ranges) in index.items():
+                for g, (lo, hi) in enumerate(ranges):
+                    if lo <= offset <= hi:
+                        offs, tbl = self._row_group(path, g)
+                        i = int(offs.searchsorted(offset))
+                        if i < len(offs) and int(offs[i]) == offset:
+                            return Row(
+                                **{c: tbl.column(c)[i].as_py() for c in _DATA_COLS}
+                            )
+            raise OffsetOutOfRangeError(offset)
         except OffsetOutOfRangeError:
             raise
         except Exception:
             return None  # any pyarrow/layout surprise → Spark path
-        return Row(**rec)
+
+    def _footer_index(self, bdir: str) -> dict[str, tuple[int, tuple]] | None:
+        """``{file: (n_rows, ((min, max) offset per row group, ...))}``
+        for the committed files of one bucket dir, or None when a footer
+        has no offset statistics (callers fall back to Spark).
+
+        The directory is re-listed on every call, so files committed by
+        any writer are picked up and deleted ones drop out; a footer is
+        read only for a file not indexed before, and an unchanged
+        listing returns the cached dict as is."""
+        import pyarrow.parquet as pq
+
+        files = _bucket_files(bdir)
+        known = self._footers.get(bdir, {})
+        if known.keys() == set(files):
+            return known
+        index = {}
+        for path in files:
+            entry = known.get(path)
+            if entry is None:
+                meta = pq.read_metadata(path)
+                col = meta.schema.to_arrow_schema().get_field_index("offset")
+                ranges = []
+                for g in range(meta.num_row_groups):
+                    stats = meta.row_group(g).column(col).statistics
+                    if stats is None or not stats.has_min_max:
+                        return None
+                    ranges.append((int(stats.min), int(stats.max)))
+                entry = (meta.num_rows, tuple(ranges))
+            index[path] = entry
+        self._footers[bdir] = index
+        return index
+
+    def _row_group(self, path: str, g: int) -> tuple:
+        """Row group ``g`` of ``path`` decoded as (sorted offsets,
+        offset-sorted table), through the LRU: a hit moves to the back,
+        a miss evicts from the front until the budget holds it, and a
+        group larger than the whole budget is returned without being
+        kept."""
+        import pyarrow.dataset as pads
+
+        key = (path, g)
+        hit = self._decoded.pop(key, None)
+        if hit is None:
+            frag = next(pads.dataset(path, format="parquet").get_fragments())
+            tbl = frag.subset(row_group_ids=[g]).to_table(columns=_DATA_COLS)
+            offs = tbl.column("offset").to_numpy()
+            if (offs[1:] < offs[:-1]).any():  # Spark writes need not sort
+                tbl = tbl.sort_by("offset")
+                offs = tbl.column("offset").to_numpy()
+            hit = (offs, tbl)
+            if tbl.nbytes > _DECODED_CACHE_BYTES:
+                return hit
+            self._decoded_bytes += tbl.nbytes
+            while self._decoded_bytes > _DECODED_CACHE_BYTES:
+                self._decoded_bytes -= self._decoded.pop(
+                    next(iter(self._decoded))
+                )[1].nbytes
+        self._decoded[key] = hit
+        return hit
 
     def scan(self, lo: int, hi: int) -> DataFrame:
         """Ordered range scan, offsets in [lo, hi] (L5)."""
@@ -1340,7 +1305,7 @@ class LogTable:
         request and must not pay a Spark job on local paths), then a
         stats-pruned Spark scan walking buckets ascending (a
         truncate-emptied boundary bucket must not shadow later ones)."""
-        lo = self._lowest_native()
+        lo = self._native_bound(highest=False)
         if lo is not None:
             return lo
         for b in sorted(self._buckets()):
@@ -1354,35 +1319,30 @@ class LogTable:
                 return int(row["m"])
         return None
 
-    def _lowest_native(self) -> int | None:
-        """min(offset) from parquet footer statistics only (the
-        _highest_native mirror): walk bucket dirs ASCENDING, return
-        the min stat of the first bucket holding rows. None = remote
-        path / missing stats / empty — callers fall back to Spark."""
+    def _native_bound(self, highest: bool) -> int | None:
+        """min offset (max with ``highest``) from the footer index only:
+        walk the bucket dirs up (down) and answer from the first bucket
+        holding rows — a truncate-emptied boundary bucket must not
+        shadow later ones. None = remote path / missing stats / empty —
+        callers fall back to Spark."""
         local = self._local_dir()
         if local is None:
             return None
         try:
-            import pyarrow.parquet as pq
-
-            buckets = sorted(
-                int(e.split("=", 1)[1])
-                for e in os.listdir(local)
-                if e.startswith("bucket=")
-            )
-            for b in buckets:
-                bdir = os.path.join(local, f"bucket={b}")
-                lo = None
-                for f in _committed_parquet_files(bdir):
-                    meta = pq.read_metadata(os.path.join(bdir, f))
-                    idx = meta.schema.to_arrow_schema().get_field_index("offset")
-                    for rg in range(meta.num_row_groups):
-                        stats = meta.row_group(rg).column(idx).statistics
-                        if stats is None or not stats.has_min_max:
-                            return None  # stats missing -> Spark fallback
-                        lo = stats.min if lo is None else min(lo, stats.min)
-                if lo is not None:
-                    return int(lo)  # first non-empty bucket wins
+            dirs = _bucket_dirs(local)
+            for gone in self._footers.keys() - {d for _, d in dirs}:
+                del self._footers[gone]  # bucket dropped by truncation
+            for _, bdir in reversed(dirs) if highest else dirs:
+                index = self._footer_index(bdir)
+                if index is None:
+                    return None
+                ends = [
+                    hi if highest else lo
+                    for _, ranges in index.values()
+                    for lo, hi in ranges
+                ]
+                if ends:
+                    return max(ends) if highest else min(ends)
             return None
         except Exception:
             return None
@@ -1396,7 +1356,7 @@ class LogTable:
         """
         if self._highest is not None:
             return self._highest
-        hi = self._highest_native()
+        hi = self._native_bound(highest=True)
         if hi is not None:
             self._highest = hi
             return hi
@@ -1673,43 +1633,11 @@ class LogTable:
             rows, schema="value STRING, term LONG, type INT"
         )
 
-    def _highest_native(self) -> int | None:
-        """max(offset) from parquet footer statistics only — the
-        metadata-cost truth for local paths (a few ms: list the max
-        bucket dir, read each file's footer max). Returns None when
-        the path is remote or the layout surprises; callers fall back
-        to the Spark aggregation."""
-        local = self._local_dir()
-        if local is None:
-            return None
-        try:
-            import pyarrow.parquet as pq
-
-            best_bucket, bdir = -1, None
-            for entry in os.listdir(local):
-                if entry.startswith("bucket="):
-                    b = int(entry.split("=", 1)[1])
-                    if b > best_bucket:
-                        best_bucket, bdir = b, os.path.join(local, entry)
-            if bdir is None:
-                return None
-            hi = None
-            for f in _committed_parquet_files(bdir):
-                meta = pq.read_metadata(os.path.join(bdir, f))
-                idx = meta.schema.to_arrow_schema().get_field_index("offset")
-                for rg in range(meta.num_row_groups):
-                    col = meta.row_group(rg).column(idx)
-                    stats = col.statistics
-                    if stats is None or not stats.has_min_max:
-                        return None  # stats missing → Spark fallback
-                    hi = stats.max if hi is None else max(hi, stats.max)
-            return int(hi) if hi is not None else None
-        except Exception:
-            return None
-
     def _next_offset(self) -> int:
-        """Next dense offset. On LOCAL paths this re-reads the footer
-        truth on every append (invalidating the in-memory cache), so
+        """Next dense offset. On LOCAL paths every append drops the
+        cached highest offset and re-lists the tail bucket through the
+        footer index, reading only the footers of files it has not
+        indexed yet (normally just the previous append's file), so
         a second handle on the same directory — out of contract but
         easy to do accidentally — continues from the real maximum
         instead of a stale cache and cannot double-assign offsets."""
@@ -1743,9 +1671,10 @@ class LogTable:
         debt (files per bucket vs max_records_per_file), and verifying
         truncate boundaries, at metadata cost.
 
-        Local fast path: pyarrow footer reads in-process. Remote
-        stores fall back to a Spark job grouping by input file — same
-        schema, scan cost instead of footer cost.
+        Local fast path: the footer index, in-process. Remote stores
+        and footers without offset statistics fall back to a Spark job
+        grouping by input file — same schema, scan cost instead of
+        footer cost.
         """
         schema = (
             "bucket long, file string, n_rows long, "
@@ -1753,47 +1682,30 @@ class LogTable:
         )
         local = self._local_dir()
         if local is not None:
-            import pyarrow.parquet as pq
-
             rows = []
-            for b in self._buckets():
-                bdir = os.path.join(local, f"bucket={b}")
-                for fn in _committed_parquet_files(bdir):
-                    fp = os.path.join(bdir, fn)
-                    md = pq.ParquetFile(fp).metadata
-                    off_idx = next(
-                        i
-                        for i in range(md.num_columns)
-                        if md.schema.column(i).name == "offset"
-                    )
-                    mins, maxs = [], []
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(off_idx).statistics
-                        mins.append(st.min)
-                        maxs.append(st.max)
+            for b, bdir in _bucket_dirs(local):
+                index = self._footer_index(bdir)
+                if index is None:
+                    break  # a footer without offset stats: Spark path
+                for path, (n_rows, ranges) in index.items():
+                    # a truncate-emptied boundary bucket leaves a
+                    # schema-only part file: 0 row groups, no stats
+                    lo = min((r[0] for r in ranges), default=None)
+                    hi = max((r[1] for r in ranges), default=None)
                     rows.append(
-                        (
-                            b,
-                            fn,
-                            md.num_rows,
-                            # a truncate-emptied boundary bucket leaves a
-                            # schema-only part file: 0 row groups, no stats
-                            min(mins) if mins else None,
-                            max(maxs) if maxs else None,
-                            os.path.getsize(fp),
-                        )
+                        (b, os.path.basename(path), n_rows, lo, hi,
+                         os.path.getsize(path))
                     )
-            return self.spark.createDataFrame(rows, schema)
-        from pyspark.sql import functions as _F
-
+            else:
+                return self.spark.createDataFrame(rows, schema)
         return (
             self.df()
-            .groupBy("bucket", _F.input_file_name().alias("file"))
+            .groupBy("bucket", F.input_file_name().alias("file"))
             .agg(
-                _F.count(_F.lit(1)).alias("n_rows"),
-                _F.min("offset").alias("min_offset"),
-                _F.max("offset").alias("max_offset"),
-                _F.lit(-1).cast("long").alias("bytes"),
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("offset").alias("min_offset"),
+                F.max("offset").alias("max_offset"),
+                F.lit(-1).cast("long").alias("bytes"),
             )
         )
 

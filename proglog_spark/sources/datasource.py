@@ -73,10 +73,14 @@ def _bucket_dirs(path: str) -> list[tuple[int, str]]:
 
 
 def _bucket_files(bdir: str) -> list[str]:
+    """Sorted paths of the committed data files in one bucket dir —
+    THE definition of 'committed' for every native reader, this
+    connector's and ``LogTable``'s: underscore/dot-prefixed markers
+    and tmp files are not data."""
     return sorted(
-        os.path.join(bdir, f)
-        for f in os.listdir(bdir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
+        e.path
+        for e in os.scandir(bdir)
+        if e.name.endswith(".parquet") and not e.name.startswith(("_", "."))
     )
 
 

@@ -86,6 +86,8 @@ def test_truncate_exact(log):
     # reference truncate visibility (log_test.go:98-118); we declare
     # exact semantics (SURVEY §7.3.3)
     log.append([f"v{i}" for i in range(30)])
+    # warm the read caches on both sides of the boundary first
+    assert (log.read(16).value, log.read(17).value) == ("v16", "v17")
     log.truncate(16)  # drops buckets 0,1 entirely; rewrites bucket 2
     assert log.lowest_offset() == 17
     assert log.highest_offset() == 29
@@ -270,6 +272,7 @@ def test_compact_collapses_small_files_preserving_data(spark, tmp_path):
         )
 
     assert n_files(0) >= 12
+    assert log.read(17).value == "v17"  # cached before the rewrite
     assert log.compact() == 1
     assert n_files(0) == 1
     after = [(r.offset, r.value) for r in log.reader().collect()]
@@ -506,11 +509,50 @@ def test_two_handles_never_double_assign_offsets(spark, tmp_path):
     path = str(tmp_path / "twolog")
     a = LogTable.create(spark, path, bucket_size=8)
     a.append(["a0", "a1"])
+    assert a.read(1).value == "a1"  # a indexes the bucket before b writes
     b = LogTable.open(spark, path)
     assert b.append(["b0"]) == (2, 2)
+    assert a.read(2).value == "b0"
     # the FIRST handle's cache is now stale; its next append must
     # still see b's record and continue densely
     assert a.append(["a2"]) == (3, 3)
     offs = [r.offset for r in a.reader().collect()]
     assert offs == [0, 1, 2, 3]
     assert [r.value for r in a.reader().collect()] == ["a0", "a1", "b0", "a2"]
+
+
+def test_append_and_read_cost_stays_flat(spark, tmp_path, monkeypatch):
+    """The footer index is built once per file, as the reference's
+    segment index is built once (internal/log/log.go:99-104): as one
+    bucket grows by single-record appends, each append reads at most
+    one footer, a first read of a file opens at most one file, and
+    repeating the read opens none."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    counts = {"footers": 0, "opened": 0}
+    read_metadata, dataset = pq.read_metadata, pads.dataset
+
+    def counted_read_metadata(*args, **kwargs):
+        counts["footers"] += 1
+        return read_metadata(*args, **kwargs)
+
+    def counted_dataset(source, *args, **kwargs):
+        counts["opened"] += len(source) if isinstance(source, list) else 1
+        return dataset(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_metadata", counted_read_metadata)
+    monkeypatch.setattr(pads, "dataset", counted_dataset)
+
+    log = LogTable.create(spark, str(tmp_path / "costlog"), bucket_size=1 << 20)
+    for i in range(40):
+        counts["footers"] = 0
+        log.append([f"r{i}"])
+        assert counts["footers"] <= 1, (i, counts["footers"])
+    for off in (0, 20, 39):
+        counts["opened"] = 0
+        assert log.read(off).value == f"r{off}"
+        assert counts["opened"] <= 1, (off, counts["opened"])
+        counts["opened"] = 0
+        assert log.read(off).value == f"r{off}"
+        assert counts["opened"] == 0, (off, counts["opened"])

@@ -6,7 +6,8 @@ write + 12-byte index entry, internal/log/store.go:38-57) and offset
 point-read (internal/log/log.go:94-109). This engine is micro-batch
 columnar, so the honest comparison is THROUGHPUT, not per-record
 latency: records/second appended in batches, point reads/second
-against the bucketed table, and full ordered-scan rows/second.
+against the bucketed table (warm, and with a single-record append
+before each read), and full ordered-scan rows/second.
 
 Usage: python tools/bench_log.py [--records N] [--batches B] [--reads R]
 Prints one JSON line.
@@ -38,7 +39,8 @@ def main():
     spark = build_session("bench-log")
     spark.sparkContext.setLogLevel("ERROR")
     d = tempfile.mkdtemp(prefix="benchlog_")
-    log = LogTable.create(spark, os.path.join(d, "log"), bucket_size=65536)
+    bucket_size = 65536
+    log = LogTable.create(spark, os.path.join(d, "log"), bucket_size=bucket_size)
 
     per_batch = args.records // args.batches
     payload = "x" * args.payload_bytes
@@ -140,6 +142,20 @@ def main():
         round(sorted(nat_lat_ms)[len(nat_lat_ms) // 2], 1) if nat_lat_ms else None
     )
 
+    # the same number of reads, each after a single-record append to
+    # the bucket it reads from: the Produce/Consume mix of the HTTP
+    # service, where every read follows a change to the bucket listing
+    # (only the reads are timed; run last, so the files these appends
+    # add do not slow the scan and tail figures above)
+    hi = log.highest_offset()
+    tail_lo = hi - hi % bucket_size
+    interleaved_s = 0.0
+    for i in range(args.reads):
+        log.append([f"{payload}i{i:07d}"])
+        t0 = time.time()
+        log.read(tail_lo + (i * 7919) % (hi - tail_lo + 1))
+        interleaved_s += time.time() - t0
+
     print(
         json.dumps(
             {
@@ -147,6 +163,9 @@ def main():
                 "append_records_per_s": round(n_appended / append_s),
                 "append_batch_ms": round(1000 * append_s / args.batches, 1),
                 "point_reads_per_s": round(args.reads / read_s, 1),
+                "point_reads_per_s_interleaved": round(
+                    args.reads / interleaved_s, 1
+                ),
                 "scan_rows_per_s": round(n_scanned / scan_s),
                 "tail_follow_latency_ms_streaming": tail_ms,
                 "tail_follow_latency_ms_native": nat_ms,
