@@ -11,6 +11,11 @@ way:
 - AQE on (runtime coalescing + skew-join handling — the scale story
   for the 100 TB target; harmless at test scale).
 - Arrow enabled for the Pandas-UDF paths (similarity, multimodal).
+- A generated-class cache sized to the declared query surface. The
+  session is long-lived and re-runs the same queries, but Spark's
+  default JVM-wide LRU of 100 classes is smaller than one pass's
+  working set, so every class was evicted before its next use and
+  each warm re-run paid Janino (and then HotSpot) again.
 """
 
 from __future__ import annotations
@@ -89,6 +94,13 @@ def build_session(
         # (reference internal/log/segment.go:81-83 IsMaxed analog).
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.sql.parquet.compression.codec": "snappy",
+        # Generated-class LRU (JVM-wide, Spark's default 100). One cold
+        # pass of all 203 declared queries at sf0.001 on local[4]
+        # compiles about 2,400 distinct classes. With 100 entries a
+        # warm second pass recompiled 3,228 classes; with 4,096 it
+        # compiled 111 (tools/profile_query.py --queries all --reps 2,
+        # BASELINE.md). 4,096 covers the working set with headroom.
+        "spark.sql.codegen.cache.maxEntries": "4096",
         # normalize common truthy/falsy spellings: Spark's boolean
         # conf parser rejects "1"/"yes" with an exception at startup
         "spark.ui.enabled": (

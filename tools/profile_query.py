@@ -6,8 +6,15 @@ session + warmup shape, optionally repeating with the session cache
 cleared (cold) or warm (ride), and writes the
 ``.explain("formatted")`` output to plans/r11/<query>_<tag>.txt.
 
+Each rep runs every named query once, in order, so rep 1 onwards is a
+warm re-run of the whole list. Every line also gives the generated
+classes the query compiled and their Janino milliseconds: a query
+that still compiles on a warm rep either has code that changes on
+every run (a literal that differs per run, or an AQE stage id in a
+class name) or was evicted from the session's generated-class cache.
+
 Usage:
-  python tools/profile_query.py --queries name1,name2 [--tag before]
+  python tools/profile_query.py --queries name1,name2|all [--tag before]
       [--reps 2] [--cold] [--sf /root/testdata/sf0.1] [--no-plan]
 
 Unlike bench.py this never touches bench_queries.json — it is a
@@ -67,25 +74,42 @@ def main() -> None:
         "unbase64(base64(CAST('x' AS BINARY))) FROM range(1)"
     ).collect()
 
-    names = args.queries.split(",")
     fns = q.queries()
+    names = list(fns) if args.queries == "all" else args.queries.split(",")
+    for name in names:
+        if name not in fns:
+            print(f"SKIP unknown query {name}", file=sys.stderr)
+    names = [n for n in names if n in fns]
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", args.round,
     )
-    for name in names:
-        if name not in fns:
-            print(f"SKIP unknown query {name}", file=sys.stderr)
-            continue
-        for rep in range(args.reps):
+    # one JVM runs driver and executors in local mode, so these count
+    # every class the session compiles; compileTime() is the exact
+    # Janino total in ns, the histogram only keeps a sample of times
+    jvm = spark._jvm
+    compilations = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    for rep in range(args.reps):
+        rep_classes, rep_ms, rep_s = 0, 0.0, 0.0
+        for name in names:
             if args.cold:
                 spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"profile:{name}:rep{rep}")
+            c0, ns0 = compilations.getCount(), generator.compileTime()
             t0 = time.perf_counter()
             rows = fns[name](spark, args.sf).collect()
             dt = time.perf_counter() - t0
+            classes = compilations.getCount() - c0
+            ms = (generator.compileTime() - ns0) / 1e6
+            rep_classes, rep_ms, rep_s = rep_classes + classes, rep_ms + ms, rep_s + dt
             print(f"{name} rep{rep} {'cold' if args.cold else 'warm'}: "
-                  f"{dt:.3f}s rows={len(rows)}")
+                  f"{dt:.3f}s rows={len(rows)} "
+                  f"compiled={classes} compile_ms={ms:.0f}")
+        print(f"rep{rep} total: {rep_s:.1f}s compiled={rep_classes} "
+              f"compile_ms={rep_ms:.0f}")
+    for name in names:
         if args.tag and not name.endswith("_streamed"):
             os.makedirs(plans_dir, exist_ok=True)
             df = fns[name](spark, args.sf)
