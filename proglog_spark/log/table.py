@@ -30,6 +30,14 @@ partition column) and row-group (parquet footer min/max on ``offset``)
 offsets + its mmap index, but provided by the Spark/Parquet stack
 instead of hand-built.
 
+The filesystem is chosen once, from the path, when a handle is built
+(``log/store.py``). On a local path the log serves append, point
+read, bounds, ``files()`` and ``consume_iter`` in-process through
+pyarrow and ``os``, with no Spark job and no JVM call; their errors
+propagate. Any other scheme gets the Hadoop store, and those calls run
+as Spark jobs. Meta, lock, truncate and compaction swaps go through
+the store either way, and both stores keep one on-disk format.
+
 Concurrency contract: exactly one writer per LogTable path (the
 reference holds a per-log mutex, internal/log/log.go:81-82). The
 in-process half of that invariant is the caller's (like the
@@ -61,10 +69,10 @@ from proglog_spark.errors import (
     WriterLockLostError,
 )
 from proglog_spark.log.offsets import assign_dense_offsets
+from proglog_spark.log.store import SUCCESS_MARKER_OPTION, open_store
 from proglog_spark.sources.datasource import (
     _bucket_dirs,
     _bucket_files,
-    _min_offset_at_least,
     _scan_rows,
 )
 
@@ -110,6 +118,11 @@ class LogTable:
     ) -> None:
         self.spark = spark
         self.path = path
+        # chosen once: a local dir is served in-process (pyarrow for
+        # data, os for meta and lock); _root is None on a remote store,
+        # whose data paths are Spark's
+        self._store = open_store(spark, path)
+        self._root = self._store.local_root
         self.bucket_size = int(bucket_size)
         if int(initial_offset) < 0:
             # offsets are uint64 in the reference (api/v1/log.proto:9);
@@ -128,7 +141,7 @@ class LogTable:
         # the reference keeps nextOffset in its active segment; we
         # persist the floor in the meta file.
         self.next_offset_floor = int(initial_offset)
-        self._highest: int | None = None  # cache; single-writer makes this safe
+        self._highest: int | None = None  # remote highest_offset cache
         # produce_stream idempotence marker (replayed micro-batches skip)
         self.last_produce_batch: int | None = None
         # checkpoint identity that wrote last_produce_batch (None on
@@ -190,8 +203,7 @@ class LogTable:
             spark, path, bucket_size, initial_offset, max_records_per_file,
             row_group_bytes,
         )
-        fs, p, jvm = log._fs()
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(path, _META_FILE)):
+        if log._store.exists(_META_FILE):
             existing = cls.open(spark, path)
             if (existing.bucket_size, existing.initial_offset) != (
                 int(bucket_size),
@@ -223,7 +235,7 @@ class LogTable:
                     "inherits the stored tuning"
                 )
             return existing
-        fs.mkdirs(p)
+        log._store.mkdirs()
         log._write_meta()
         return log
 
@@ -231,18 +243,9 @@ class LogTable:
     def open(cls, spark: SparkSession, path: str) -> "LogTable":
         """Reopen an existing log from its meta file (recovery, O16)."""
         log = cls(spark, path, 1, 0, 1)
-        fs, _, jvm = log._fs()
-        meta_path = jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
-        if not fs.exists(meta_path):
+        if not log._store.exists(_META_FILE):
             raise FileNotFoundError(f"not a LogTable (missing {_META_FILE}): {path}")
-        stream = fs.open(meta_path)
-        try:
-            raw = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        meta = json.loads(raw.decode("utf-8"))
+        meta = json.loads(log._store.read(_META_FILE).decode("utf-8"))
         log.bucket_size = int(meta["bucket_size"])
         log.initial_offset = int(meta["initial_offset"])
         log.max_records_per_file = int(meta.get("max_records_per_file", 1 << 22))
@@ -271,17 +274,11 @@ class LogTable:
         leave a borrowed (same-pid sibling) lock owned twice, letting
         the sibling's close() delete it out from under us.
         """
+        self._store.mkdirs()
         self._acquire_writer_lock()
-        fs, p, jvm = self._fs()
-        if fs.exists(p):
-            for st in fs.listStatus(p):
-                child = st.getPath()
-                if child.getName() != _LOCK_FILE:
-                    fs.delete(child, True)
-        else:
-            fs.mkdirs(p)
-            self._lock_owned = self._lock_created = False
-            self._acquire_writer_lock()
+        for name, _ in self._store.list():
+            if name != _LOCK_FILE:
+                self._store.delete(name)
         self.next_offset_floor = self.initial_offset
         self._write_meta()
         self._highest = None
@@ -343,73 +340,18 @@ class LogTable:
         except (TypeError, ValueError):
             return False
 
-    def _lock_jpath(self):
-        _, _, jvm = self._fs()
-        return jvm.org.apache.hadoop.fs.Path(self.path, _LOCK_FILE)
-
     def _try_create_lock(self) -> bool:
-        """Atomically create the lock file; False if it already exists."""
+        """Atomically create the lock file; False if it already exists
+        (any other store failure raises: it must not masquerade as a
+        held lock and point the operator at steal_writer_lock)."""
         payload = json.dumps(self._lock_owner_info()).encode("utf-8")
-        local = self._local_dir()
-        if local is not None:
-            try:
-                fd = os.open(
-                    os.path.join(local, _LOCK_FILE),
-                    os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-                )
-            except FileExistsError:
-                return False
-            try:
-                os.write(fd, payload)
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-            return True
-        fs, _, _ = self._fs()
-        try:
-            stream = fs.create(self._lock_jpath(), False)  # no overwrite
-        except Exception as e:
-            # only CONTENTION means "held": permission/transient-IO
-            # failures must surface as themselves, not masquerade as a
-            # held lock (which would point the operator at
-            # steal_writer_lock for a lock that doesn't exist)
-            msg = str(getattr(e, "java_exception", None) or e)
-            if "AlreadyExists" in msg or "already exists" in msg.lower():
-                return False
-            raise
-        try:
-            stream.write(bytearray(payload))
-        finally:
-            stream.close()
-        return True
+        return self._store.create(_LOCK_FILE, payload)
 
     def _read_lock_owner(self) -> dict | None:
-        local = self._local_dir()
         try:
-            if local is not None:
-                with open(os.path.join(local, _LOCK_FILE), "rb") as fh:
-                    raw = fh.read()
-            else:
-                fs, _, jvm = self._fs()
-                stream = fs.open(self._lock_jpath())
-                try:
-                    raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-                finally:
-                    stream.close()
-            return json.loads(raw.decode("utf-8"))
+            return json.loads(self._store.read(_LOCK_FILE).decode("utf-8"))
         except Exception:
             return None  # missing, mid-write, or corrupt ⇒ caller retries
-
-    def _delete_lock_file(self) -> None:
-        local = self._local_dir()
-        if local is not None:
-            try:
-                os.unlink(os.path.join(local, _LOCK_FILE))
-            except FileNotFoundError:
-                pass
-        else:
-            fs, _, _ = self._fs()
-            fs.delete(self._lock_jpath(), False)
 
     @staticmethod
     def _pid_alive(pid) -> bool:
@@ -437,7 +379,7 @@ class LogTable:
         :meth:`_reclaim_lock_remote` runs the create-then-VERIFY
         protocol instead.
         """
-        if self._local_dir() is not None:
+        if self._root is not None:
             return self._cas_lock_local(expect_owner)
         return self._reclaim_lock_remote(expect_owner)
 
@@ -469,7 +411,7 @@ class LogTable:
 
         if self._read_lock_owner() != expect_owner:
             return False  # someone already acted on the stale lock
-        self._delete_lock_file()
+        self._store.delete(_LOCK_FILE)
         if not self._try_create_lock():
             return False  # competitor's create beat ours
         time.sleep(min(self.lease_seconds / 10.0, 0.25) * (0.5 + random.random()))
@@ -494,10 +436,8 @@ class LogTable:
         live-lease renewal."""
         import fcntl
 
-        payload = json.dumps(self._lock_owner_info()).encode("utf-8")
-        lock_path = os.path.join(self._local_dir(), _LOCK_FILE)
         try:
-            fd = os.open(lock_path, os.O_RDWR)
+            fd = os.open(os.path.join(self._root, _LOCK_FILE), os.O_RDWR)
         except FileNotFoundError:
             return False  # vanished underneath us: retry the loop
         try:
@@ -507,12 +447,9 @@ class LogTable:
                 return False  # another reclaimer holds the section
             if self._read_lock_owner() != expect_owner:
                 return False  # someone already replaced it
-            tmp = lock_path + f".reclaim.{os.getpid()}"
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, lock_path)
+            self._store.write_atomic(
+                _LOCK_FILE, json.dumps(self._lock_owner_info()).encode("utf-8")
+            )
             return True
         finally:
             os.close(fd)
@@ -548,7 +485,7 @@ class LogTable:
         with self._lease_mutex:
             if not (self._lock_owned and self._fenced_owner is None):
                 return False
-            if self._local_dir() is not None:
+            if self._root is not None:
                 for _ in range(40):
                     if not self._lock_owned:
                         return False  # released concurrently (close())
@@ -603,13 +540,8 @@ class LogTable:
                     except (KeyError, TypeError, ValueError):
                         pass
                 return self._fence(owner)
-            fs, _, _ = self._fs()
             payload = json.dumps(self._lock_owner_info()).encode("utf-8")
-            stream = fs.create(self._lock_jpath(), True)  # overwrite
-            try:
-                stream.write(bytearray(payload))
-            finally:
-                stream.close()
+            self._store.create(_LOCK_FILE, payload, overwrite=True)
             self._lease_deadline = time.time() + self.lease_seconds
             return True
 
@@ -657,8 +589,13 @@ class LogTable:
         self._hb_thread.start()
 
     def _stop_heartbeat(self) -> None:
+        """Stop the heartbeat and wait out a beat already in flight: a
+        remote renewal overwrites the lock file, so one landing after
+        this returns could clobber a lock written in the meantime."""
         if self._hb_stop is not None:
             self._hb_stop.set()
+        if self._hb_thread is not None:
+            self._hb_thread.join(timeout=max(self.lease_seconds / 2.0, 1.0))
         self._hb_thread = None
 
     def _lock_owner_is_live(self) -> bool:
@@ -818,7 +755,7 @@ class LogTable:
                 # owner's lock (a fenced writer must leave it alone)
                 owner = self._read_lock_owner()
                 if owner is None or self._owner_is_self(owner):
-                    self._delete_lock_file()
+                    self._store.delete(_LOCK_FILE)
         self._footers.clear()
         self._decoded.clear()
         self._decoded_bytes = 0
@@ -894,19 +831,13 @@ class LogTable:
         n = len(rows)
         if n == 0:
             return (base, base - 1)
-        # In-process fast path: local paths skip the Spark job entirely
-        # and write the same bucket-partitioned parquet via pyarrow
-        # (atomic tmp+rename per file; readers ignore dot-tmp files).
-        # The produce hot path is where the reference's O(1) buffered
-        # append lives — this removes the ~0.3-0.4 s job-scheduling
-        # floor per batch. _append_native returns False for any
-        # failure BEFORE visibility (fall back to the Spark write
-        # safely) and raises once any file is renamed live — falling
-        # back after partial visibility would re-append already-
-        # visible offsets and break density.
-        if self._append_native(rows, base):
-            last = base + n - 1
-            self._highest = last
+        last = base + n - 1
+        # A local path skips the Spark job entirely and writes the same
+        # bucket-partitioned parquet via pyarrow: the produce hot path
+        # is where the reference's O(1) buffered append lives, and this
+        # removes the ~0.3-0.4 s job-scheduling floor per batch.
+        if self._root is not None:
+            self._append_native(rows, base)
             return (base, last)
         schema = "bucket LONG, offset LONG, value STRING, term LONG, type INT"
         if n >= 1000:
@@ -934,7 +865,6 @@ class LogTable:
             .partitionBy("bucket")
             .parquet(self.path)
         )
-        last = base + n - 1
         self._highest = last
         return (base, last)
 
@@ -945,13 +875,9 @@ class LogTable:
         dot-tmp file is dead weight from an interrupted native append.
         compact()'s whole-directory rewrite also clears them for
         buckets it touches; this covers the rest."""
-        local = self._local_dir()
-        if local is None:
+        if self._root is None:
             return
-        for entry in os.listdir(local):
-            if not entry.startswith("bucket="):
-                continue
-            bdir = os.path.join(local, entry)
+        for _, bdir in _bucket_dirs(self._root):
             for f in os.listdir(bdir):
                 if f.startswith(".native-") and f.endswith(".tmp"):
                     try:
@@ -959,10 +885,10 @@ class LogTable:
                     except OSError:
                         pass
 
-    def _append_native(self, rows: list[tuple], base: int) -> bool:
+    def _append_native(self, rows: list[tuple], base: int) -> None:
         """Write a driver batch as bucket-partitioned parquet with
-        pyarrow, no Spark job. Returns False when the path is not
-        local (remote stores go through the Spark committer).
+        pyarrow, no Spark job (local paths; remote stores go through
+        the Spark committer).
 
         Layout/schema parity with the Spark writer: same bucket dirs,
         same column types (offset int64, value string, term int64,
@@ -971,20 +897,9 @@ class LogTable:
         ``row_group_bytes`` dial approximated in rows. Atomicity: each
         file lands as ``.native-*.tmp`` and renames into place —
         readers skip dot-files, so a crash leaves only invisible junk
-        (removed by the next compaction's directory rewrite)."""
-        local = self._local_dir()
-        if local is None:
-            return False
-        try:
-            return self._append_native_inner(rows, base, local)
-        except _PartialNativeAppend:
-            raise
-        except Exception:
-            return False  # nothing visible yet — Spark path is safe
-
-    def _append_native_inner(
-        self, rows: list[tuple], base: int, local: str
-    ) -> bool:
+        (removed by the next open() or compaction). A failure before
+        any rename raises as itself with nothing visible; after one,
+        it raises ``_PartialNativeAppend``."""
         import uuid
 
         import pyarrow as pa
@@ -1027,7 +942,7 @@ class LogTable:
                     ],
                     schema=schema,
                 )
-                bdir = os.path.join(local, f"bucket={bucket}")
+                bdir = os.path.join(self._root, f"bucket={bucket}")
                 os.makedirs(bdir, exist_ok=True)
                 name = f"native-{uuid.uuid4().hex}.parquet"
                 tmp = os.path.join(bdir, f".{name}.tmp")
@@ -1053,16 +968,15 @@ class LogTable:
                         os.remove(tmp)
                     except OSError:
                         pass
-                return False  # nothing visible — caller may fall back
-            # a prefix is already live: falling back would duplicate
-            # those offsets. Surface the partial append (the visible
-            # prefix is contiguous and dense; recovery continues from
-            # max(offset), the reference's per-record contract).
+                raise
+            # a prefix is already live: retrying the batch would
+            # duplicate those offsets. Surface the partial append (the
+            # visible prefix is contiguous and dense; recovery continues
+            # from max(offset), the reference's per-record contract).
             raise _PartialNativeAppend(
                 f"native append made {renamed}/{len(pending)} files "
                 f"visible before failing: {e}"
             ) from e
-        return True
 
     def consume_iter(
         self,
@@ -1089,16 +1003,20 @@ class LogTable:
         for remote stores — use the streaming path there)."""
         import time as _time
 
-        local = self._local_dir()
-        if local is None:
+        if self._root is None:
             raise ValueError(
                 "consume_iter needs a local log path; use "
                 "streaming.consume.tail_follow for remote stores"
             )
         cursor = int(from_offset)
         while stop is None or not stop.is_set():
-            lo = _min_offset_at_least(self.path, cursor)
+            # the footer index answers both bounds, so an idle poll
+            # opens no dataset; offsets are dense between them, so the
+            # first record at or past the cursor is max(cursor, lowest)
+            hi = self.highest_offset()
+            lo = self.lowest_offset() if hi is not None and hi >= cursor else None
             if lo is not None:
+                lo = max(cursor, lo)
                 rows = _scan_rows(self.path, lo, lo + max_batch - 1)
                 if rows:
                     for r in rows:
@@ -1124,22 +1042,18 @@ class LogTable:
         offset names one bucket directory, and the footer index names
         the row group whose offset range holds it.
 
-        Fast path: on a local filesystem the lookup runs in-process
-        through pyarrow over the SAME committed bucket files, no Spark
-        job. The footer index (``_footer_index``) reads each file's
-        footer once; the row group is decoded once, sorted by offset,
-        and kept in one LRU bounded by ``_DECODED_CACHE_BYTES``, so a
-        warm read is a directory listing plus a binary search — the
+        On a local path the lookup runs in-process through pyarrow,
+        no Spark job. The footer index (``_footer_index``) reads each
+        file's footer once; the row group is decoded once, sorted by
+        offset, and kept in one LRU bounded by ``_DECODED_CACHE_BYTES``,
+        so a warm read is a directory listing plus a binary search — the
         analog of the reference's mmap read (internal/log/segment.go:
-        66-79). Remote/object-store paths, footers without offset
-        statistics and any pyarrow surprise fall back to the Spark plan,
-        which is the source of truth for semantics (the test suite runs
-        both: the fast path serves the same bytes Spark committed).
+        66-79). A remote store runs the Spark plan instead; the test
+        suite reads one log through both and pins equal answers.
         """
         offset = int(offset)
-        native = self._read_native(offset)
-        if native is not None:
-            return native
+        if self._root is not None:
+            return self._read_native(offset)
         rows = (
             self.df()
             .where(
@@ -1153,51 +1067,27 @@ class LogTable:
             raise OffsetOutOfRangeError(offset)
         return rows[0]
 
-    def _local_dir(self) -> str | None:
-        """The table path as a local directory, or None if remote."""
-        p = self.path
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-        elif "://" in p:
-            return None  # hdfs/s3/... → Spark path
-        return p if os.path.isdir(p) else None
-
-    def _read_native(self, offset: int) -> Row | None:
-        """In-process point read via pyarrow; None ⇒ use the Spark path.
-
-        Raises OffsetOutOfRangeError itself on a definitive local miss
-        (bucket directory absent, or present without the offset) —
-        that IS the answer, not a reason to fall back.
-        """
-        local = self._local_dir()
-        if local is None:
-            return None
-        bdir = os.path.join(local, f"bucket={offset // self.bucket_size}")
-        try:
-            if not os.path.isdir(bdir):
-                raise OffsetOutOfRangeError(offset)
-            index = self._footer_index(bdir)
-            if index is None:
-                return None
-            for path, (_, ranges) in index.items():
-                for g, (lo, hi) in enumerate(ranges):
-                    if lo <= offset <= hi:
-                        offs, tbl = self._row_group(path, g)
-                        i = int(offs.searchsorted(offset))
-                        if i < len(offs) and int(offs[i]) == offset:
-                            return Row(
-                                **{c: tbl.column(c)[i].as_py() for c in _DATA_COLS}
-                            )
+    def _read_native(self, offset: int) -> Row:
+        """In-process point read via pyarrow; a bucket directory that is
+        absent or lacks the offset raises OffsetOutOfRangeError."""
+        bdir = os.path.join(self._root, f"bucket={offset // self.bucket_size}")
+        if not os.path.isdir(bdir):
             raise OffsetOutOfRangeError(offset)
-        except OffsetOutOfRangeError:
-            raise
-        except Exception:
-            return None  # any pyarrow/layout surprise → Spark path
+        for path, (_, ranges) in self._footer_index(bdir).items():
+            for g, (lo, hi) in enumerate(ranges):
+                if lo <= offset <= hi:
+                    offs, tbl = self._row_group(path, g)
+                    i = int(offs.searchsorted(offset))
+                    if i < len(offs) and int(offs[i]) == offset:
+                        return Row(
+                            **{c: tbl.column(c)[i].as_py() for c in _DATA_COLS}
+                        )
+        raise OffsetOutOfRangeError(offset)
 
-    def _footer_index(self, bdir: str) -> dict[str, tuple[int, tuple]] | None:
+    def _footer_index(self, bdir: str) -> dict[str, tuple[int, tuple]]:
         """``{file: (n_rows, ((min, max) offset per row group, ...))}``
-        for the committed files of one bucket dir, or None when a footer
-        has no offset statistics (callers fall back to Spark).
+        for the committed files of one bucket dir; a footer without
+        offset statistics raises ProglogError naming the file.
 
         The directory is re-listed on every call, so files committed by
         any writer are picked up and deleted ones drop out; a footer is
@@ -1219,7 +1109,9 @@ class LogTable:
                 for g in range(meta.num_row_groups):
                     stats = meta.row_group(g).column(col).statistics
                     if stats is None or not stats.has_min_max:
-                        return None
+                        raise ProglogError(
+                            f"{path}: row group {g} has no offset statistics"
+                        )
                     ranges.append((int(stats.min), int(stats.max)))
                 entry = (meta.num_rows, tuple(ranges))
             index[path] = entry
@@ -1300,15 +1192,14 @@ class LogTable:
     # ------------------------------------------------------------------
 
     def lowest_offset(self) -> int | None:
-        """min(offset), None when empty — native footer fast path
-        first (symmetric with highest_offset; /bounds calls this per
-        request and must not pay a Spark job on local paths), then a
-        stats-pruned Spark scan walking buckets ascending (a
-        truncate-emptied boundary bucket must not shadow later ones)."""
-        lo = self._native_bound(highest=False)
-        if lo is not None:
-            return lo
-        for b in sorted(self._buckets()):
+        """min(offset), None when empty — from the footer index on a
+        local path (/bounds calls this per request and must not pay a
+        Spark job), else a stats-pruned Spark scan walking buckets
+        ascending (a truncate-emptied boundary bucket must not shadow
+        later ones)."""
+        if self._root is not None:
+            return self._native_bound(highest=False)
+        for b in self._buckets():
             row = (
                 self.df()
                 .where(F.col("bucket") == b)
@@ -1320,46 +1211,37 @@ class LogTable:
         return None
 
     def _native_bound(self, highest: bool) -> int | None:
-        """min offset (max with ``highest``) from the footer index only:
-        walk the bucket dirs up (down) and answer from the first bucket
-        holding rows — a truncate-emptied boundary bucket must not
-        shadow later ones. None = remote path / missing stats / empty —
-        callers fall back to Spark."""
-        local = self._local_dir()
-        if local is None:
-            return None
-        try:
-            dirs = _bucket_dirs(local)
-            for gone in self._footers.keys() - {d for _, d in dirs}:
-                del self._footers[gone]  # bucket dropped by truncation
-            for _, bdir in reversed(dirs) if highest else dirs:
-                index = self._footer_index(bdir)
-                if index is None:
-                    return None
-                ends = [
-                    hi if highest else lo
-                    for _, ranges in index.values()
-                    for lo, hi in ranges
-                ]
-                if ends:
-                    return max(ends) if highest else min(ends)
-            return None
-        except Exception:
-            return None
+        """min offset (max with ``highest``) from the footer index, None
+        when empty: walk the bucket dirs up (down) and answer from the
+        first bucket holding rows — a truncate-emptied boundary bucket
+        must not shadow later ones."""
+        dirs = _bucket_dirs(self._root)
+        for gone in self._footers.keys() - {d for _, d in dirs}:
+            self._footers.pop(gone, None)  # bucket dropped by truncation
+        for _, bdir in reversed(dirs) if highest else dirs:
+            ends = [
+                hi if highest else lo
+                for _, ranges in self._footer_index(bdir).values()
+                for lo, hi in ranges
+            ]
+            if ends:
+                return max(ends) if highest else min(ends)
+        return None
 
     def highest_offset(self) -> int | None:
         """max(offset), None when empty.
 
         The reference returns 0 for both empty and single-record logs
         (log.go:144-153); we deliberately disambiguate with None
-        (SURVEY.md §7.3.4). Only the max bucket directory is read.
+        (SURVEY.md §7.3.4). Only the max bucket directory is read. A
+        local path answers from the footer index on every call, so a
+        handle sees other handles' appends; a remote store caches the
+        Spark answer until this handle appends or truncates.
         """
+        if self._root is not None:
+            return self._native_bound(highest=True)
         if self._highest is not None:
             return self._highest
-        hi = self._native_bound(highest=True)
-        if hi is not None:
-            self._highest = hi
-            return hi
         buckets = self._buckets()
         if not buckets:
             return None
@@ -1394,11 +1276,10 @@ class LogTable:
         """
         self._acquire_writer_lock()
         lowest = int(lowest)
-        fs, _, jvm = self._fs()
         boundary = (lowest + 1) // self.bucket_size  # first bucket that may survive
         for b in self._buckets():
             if (b + 1) * self.bucket_size - 1 <= lowest:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(self.path, f"bucket={b}"), True)
+                self._store.delete(f"bucket={b}")
             elif b == boundary and b * self.bucket_size <= lowest:
                 self._rewrite_bucket(b, lowest)
         self._highest = None
@@ -1413,80 +1294,60 @@ class LogTable:
         compaction share this path — a compaction is a rewrite whose
         predicate keeps everything).
 
-        Protocol (every step leaves a recoverable state for
-        ``_recover_truncate``): (1) write survivors fully into a
-        hidden ``.truncate-new-<b>`` dir, (2) atomically rename the
-        live bucket aside to ``.truncate-old-<b>``, (3) rename the new
-        dir into place, (4) drop the old. The old delete-then-copy
-        order lost the survivors if the process died mid-copy.
+        Protocol (every step leaves a state ``_recover_truncate`` rolls
+        forward): (1) write survivors fully into a hidden
+        ``.truncate-new-<b>`` dir, (2)-(4) ``Store.swap``: rename the
+        live bucket aside to ``.truncate-old-<b>``, rename the new dir
+        into place, drop the old. Every rename is checked: a failed
+        swap must raise, not report success while the meta advances
+        past records still on disk.
         """
-        fs, _, jvm = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
-        bucket_dir = P(f"{self.path}/bucket={bucket}")
-        new_dir = P(f"{self.path}/.truncate-new-{bucket}")
-        old_dir = P(f"{self.path}/.truncate-old-{bucket}")
+        live, new, aside = (
+            f"bucket={bucket}", f".truncate-new-{bucket}", f".truncate-old-{bucket}"
+        )
         survivors = (
             self.spark.read.schema(RECORD_SCHEMA)
-            .parquet(str(bucket_dir))
+            .parquet(f"{self.path}/{live}")
             .where(F.col("offset") > lowest)
         )
         if coalesce_to is not None:
             survivors = survivors.coalesce(coalesce_to)
-        fs.delete(new_dir, True)
+        self._store.delete(new)
         # maxRecordsPerFile is the hard roll guarantee: coalesce only
         # merges read splits, so uneven input files could otherwise
-        # produce an oversized output file
-        self._apply_write_opts(survivors.write.mode("overwrite")).parquet(
-            str(new_dir)
-        )
-        # drop Spark's _SUCCESS marker; only data files move into place
-        fs.delete(P(f"{self.path}/.truncate-new-{bucket}/_SUCCESS"), False)
-        # Hadoop rename signals failure by returning FALSE (leftover
-        # aside dir, permissions, concurrent interference) — every
-        # step must be CHECKED or a failed swap would report success
-        # while the meta advances past records still on disk
-        if fs.exists(old_dir) and not fs.delete(old_dir, True):
-            raise IOError(
-                f"bucket rewrite: cannot clear stale aside {old_dir} — "
-                "run recovery (reopen the log) and retry"
-            )
-        if not fs.rename(bucket_dir, old_dir):  # (2) atomic: live aside
-            raise IOError(f"bucket rewrite: cannot move {bucket_dir} aside")
-        if not fs.rename(new_dir, bucket_dir):  # (3) atomic: survivors live
-            raise IOError(
-                f"bucket rewrite: cannot install survivors into {bucket_dir} "
-                "— reopen the log to recover"
-            )
-        fs.delete(old_dir, True)  # (4) best-effort; recovery clears leftovers
+        # produce an oversized output file. No _SUCCESS marker: only
+        # data files move into place.
+        self._apply_write_opts(
+            survivors.write.mode("overwrite").option(SUCCESS_MARKER_OPTION, "false")
+        ).parquet(f"{self.path}/{new}")
+        self._store.delete(aside)  # a stale aside from an earlier crash
+        self._store.swap(live, new, aside)
 
     def _recover_truncate(self) -> None:
-        """Finish or roll back a truncate interrupted between steps
-        (called from open(), mirroring reference crash recovery O16)."""
-        fs, p, jvm = self._fs()
-        if not fs.exists(p):
-            return
-        P = jvm.org.apache.hadoop.fs.Path
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
+        """Finish an interrupted bucket rewrite (called from open(),
+        mirroring reference crash recovery O16): survivors written in
+        full are rolled forward, a partial new dir is discarded."""
+        names = {name for name, _ in self._store.list()}
+        for name in sorted(names):
+            if not name.startswith(".truncate-"):
+                continue
+            b = name.rsplit("-", 1)[1]
             if name.startswith(".truncate-new-"):
-                b = name.rsplit("-", 1)[1]
-                bucket_dir = P(f"{self.path}/bucket={b}")
-                if not fs.exists(bucket_dir):
+                if f"bucket={b}" not in names:
                     # died between (2) and (3): survivors are complete
                     # (they were written before the bucket moved aside)
-                    fs.rename(status.getPath(), bucket_dir)
+                    self._store.rename(name, f"bucket={b}")
                 else:
                     # died before (2): live bucket untouched; the new
                     # dir may be partial — discard it
-                    fs.delete(status.getPath(), True)
+                    self._store.delete(name)
             elif name.startswith(".truncate-old-"):
-                b = name.rsplit("-", 1)[1]
-                if fs.exists(P(f"{self.path}/bucket={b}")):
-                    fs.delete(status.getPath(), True)  # died before (4)
+                if f"bucket={b}" in names or f".truncate-new-{b}" in names:
+                    self._store.delete(name)  # survivors are (or go) live
                 else:
                     # paranoia: old exists and bucket missing with no
                     # new dir — restore the old bucket untruncated
-                    fs.rename(status.getPath(), P(f"{self.path}/bucket={b}"))
+                    self._store.rename(name, f"bucket={b}")
 
     # ------------------------------------------------------------------
     # compaction (maintenance; reference analog: segment roll keeps
@@ -1519,21 +1380,18 @@ class LogTable:
         which exists precisely to absorb at-least-once re-delivery.
         """
         self._acquire_writer_lock()
-        fs, _, jvm = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
         compacted = 0
         for b in self._buckets():
-            bucket_dir = P(f"{self.path}/bucket={b}")
             n_files = sum(
                 1
-                for s in fs.listStatus(bucket_dir)
-                if s.getPath().getName().endswith(".parquet")
+                for name, _ in self._store.list(f"bucket={b}")
+                if name.endswith(".parquet")
             )
             if n_files <= max_files_per_bucket:
                 continue
             rows = (
                 self.spark.read.schema(RECORD_SCHEMA)
-                .parquet(str(bucket_dir))
+                .parquet(f"{self.path}/bucket={b}")
                 .count()
             )
             target = max(1, -(-rows // self.max_records_per_file))
@@ -1634,15 +1492,14 @@ class LogTable:
         )
 
     def _next_offset(self) -> int:
-        """Next dense offset. On LOCAL paths every append drops the
-        cached highest offset and re-lists the tail bucket through the
-        footer index, reading only the footers of files it has not
-        indexed yet (normally just the previous append's file), so
-        a second handle on the same directory — out of contract but
-        easy to do accidentally — continues from the real maximum
-        instead of a stale cache and cannot double-assign offsets."""
-        if self._local_dir() is not None:
-            self._highest = None  # footer truth is cheap — never trust cache
+        """Next dense offset, from the store's truth rather than a
+        cache: a local path re-lists the tail bucket through the footer
+        index (reading only footers it has not indexed yet, normally
+        just the previous append's file), a remote one re-runs its
+        max-bucket scan. So a second handle on the same directory — out
+        of contract but easy to do accidentally — continues from the
+        real maximum and cannot double-assign offsets."""
+        self._highest = None
         hi = self.highest_offset()
         nxt = self.initial_offset if hi is None else hi + 1
         return max(nxt, self.next_offset_floor)
@@ -1651,12 +1508,6 @@ class LogTable:
         return T.StructType(
             [T.StructField("bucket", T.LongType(), True), *RECORD_SCHEMA.fields]
         )
-
-    def _fs(self):
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, p, jvm
 
     def files(self) -> DataFrame:
         """Physical-layout introspection: one row per committed data
@@ -1671,23 +1522,18 @@ class LogTable:
         debt (files per bucket vs max_records_per_file), and verifying
         truncate boundaries, at metadata cost.
 
-        Local fast path: the footer index, in-process. Remote stores
-        and footers without offset statistics fall back to a Spark job
-        grouping by input file — same schema, scan cost instead of
-        footer cost.
+        A local path reads the footer index, in-process. A remote store
+        runs a Spark job grouping by input file — same schema, scan cost
+        instead of footer cost, and ``bytes`` is -1.
         """
         schema = (
             "bucket long, file string, n_rows long, "
             "min_offset long, max_offset long, bytes long"
         )
-        local = self._local_dir()
-        if local is not None:
+        if self._root is not None:
             rows = []
-            for b, bdir in _bucket_dirs(local):
-                index = self._footer_index(bdir)
-                if index is None:
-                    break  # a footer without offset stats: Spark path
-                for path, (n_rows, ranges) in index.items():
+            for b, bdir in _bucket_dirs(self._root):
+                for path, (n_rows, ranges) in self._footer_index(bdir).items():
                     # a truncate-emptied boundary bucket leaves a
                     # schema-only part file: 0 row groups, no stats
                     lo = min((r[0] for r in ranges), default=None)
@@ -1696,8 +1542,7 @@ class LogTable:
                         (b, os.path.basename(path), n_rows, lo, hi,
                          os.path.getsize(path))
                     )
-            else:
-                return self.spark.createDataFrame(rows, schema)
+            return self.spark.createDataFrame(rows, schema)
         return (
             self.df()
             .groupBy("bucket", F.input_file_name().alias("file"))
@@ -1711,21 +1556,16 @@ class LogTable:
 
     def _buckets(self) -> list[int]:
         """Bucket directory listing — the catalog of 'segments' (O16)."""
-        fs, p, _ = self._fs()
-        if not fs.exists(p):
-            return []
-        out = []
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
-            if status.isDirectory() and name.startswith("bucket="):
-                out.append(int(name.split("=", 1)[1]))
-        return sorted(out)
+        return sorted(
+            int(name.split("=", 1)[1])
+            for name, is_dir in self._store.list()
+            if is_dir and name.startswith("bucket=")
+        )
 
     def _is_empty_dir(self) -> bool:
         return not self._buckets()
 
     def _write_meta(self) -> None:
-        fs, _, jvm = self._fs()
         meta = {
             "bucket_size": self.bucket_size,
             "initial_offset": self.initial_offset,
@@ -1738,33 +1578,7 @@ class LogTable:
             meta["last_produce_batch"] = self.last_produce_batch
             if self.last_produce_marker is not None:
                 meta["last_produce_marker"] = self.last_produce_marker
-        payload = json.dumps(meta).encode("utf-8")
-        local = self._local_dir()
-        if local is not None:
-            # tmp + atomic replace: produce_stream rewrites the meta
-            # once per micro-batch, and a crash mid-write must never
-            # leave truncated JSON (an unopenable log) — same dance as
-            # tail_follow's cursor (consume.py)
-            tmp = os.path.join(local, f".{_META_FILE}.tmp.{os.getpid()}")
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, os.path.join(local, _META_FILE))
-            return
-        # remote: write a tmp then rename over (delete-first: Hadoop
-        # rename does not overwrite on all stores); the tmp is fully
-        # written before the old file is touched, so the window
-        # narrows from "any time during write" to the rename pair
-        dst = jvm.org.apache.hadoop.fs.Path(self.path, _META_FILE)
-        tmp_p = jvm.org.apache.hadoop.fs.Path(
-            self.path, f".{_META_FILE}.tmp.{os.getpid()}"
-        )
-        out = fs.create(tmp_p, True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-        if fs.exists(dst):
-            fs.delete(dst, False)
-        fs.rename(tmp_p, dst)
+        # atomic: produce_stream rewrites the meta once per micro-batch,
+        # and a crash mid-write must never leave truncated JSON (an
+        # unopenable log)
+        self._store.write_atomic(_META_FILE, json.dumps(meta).encode("utf-8"))

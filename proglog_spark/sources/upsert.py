@@ -14,16 +14,18 @@ but the reference is append-only and cannot update by key at all;
 upsert is north-star pipeline surface (e.g. refreshing a document
 corpus by doc_id with re-crawled pages).
 
-Crash safety reuses the rename-swap idea of ``LogTable._rewrite_bucket``
-(proglog_spark/log/table.py): write the merged bucket fully into a
-hidden dir, swap it in with two atomic renames, drop the old; an
-interrupted merge is finished or rolled back by ``recover()``.
+Crash safety shares the checked swap step of ``LogTable._rewrite_bucket``
+(``Store.swap`` in proglog_spark/log/store.py): write the merged bucket
+fully into a hidden dir, swap it in with two checked renames, drop the
+old; an interrupted merge is rolled back by ``recover()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from proglog_spark.log.store import SUCCESS_MARKER_OPTION, open_store
 
 BUCKET_COL = "bucket"
 
@@ -46,6 +48,7 @@ class KeyedTable:
     def __init__(self, spark: SparkSession, path: str, key_col: str, n_buckets: int):
         self.spark = spark
         self.path = path
+        self._store = open_store(spark, path)
         self.key_col = key_col
         self.n_buckets = n_buckets
 
@@ -149,13 +152,8 @@ class KeyedTable:
         n_updates = sum(r["count"] for r in bucket_counts)
         if not touched:
             return 0
-        fs, _, jvm = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
-        existing = [
-            b for b in touched if fs.exists(P(f"{self.path}/{BUCKET_COL}={b}"))
-        ]
-        new_root = f"{self.path}/.merge-new"
-        fs.delete(P(new_root), True)
+        existing = [b for b in touched if self._store.exists(f"{BUCKET_COL}={b}")]
+        self._store.delete(".merge-new")
         if existing:
             base = (
                 self.spark.read.option("basePath", self.path)
@@ -190,60 +188,34 @@ class KeyedTable:
                 )
         else:
             merged = up
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(new_root)
-        fs.delete(P(f"{new_root}/_SUCCESS"), False)
-        # swap each touched bucket: aside -> in -> drop (recover()
-        # completes any prefix of this sequence)
+        (
+            merged.write.mode("overwrite")
+            .option(SUCCESS_MARKER_OPTION, "false")
+            .partitionBy(BUCKET_COL)
+            .parquet(f"{self.path}/.merge-new")
+        )
+        # swap each touched bucket; a failed rename raises rather than
+        # reporting success with the merged bucket discarded, and the
+        # retry's recover() rolls back any prefix of the sequence
         for b in touched:
-            live = P(f"{self.path}/{BUCKET_COL}={b}")
-            new = P(f"{new_root}/{BUCKET_COL}={b}")
-            old = P(f"{self.path}/.merge-old-{b}")
-            if not fs.exists(new):
-                continue  # all updates for b were dropped upstream
-            # Hadoop rename returns FALSE on many failures instead of
-            # raising; an unchecked false here would skip the swap,
-            # discard the merged bucket with new_root, and still
-            # report success — every rename must be verified
-            if fs.exists(live) and not fs.rename(live, old):
-                raise IOError(
-                    f"merge swap failed: cannot move bucket {b} aside "
-                    f"({live} -> {old}); run recover() and retry"
-                )
-            if not fs.rename(new, live):
-                raise IOError(
-                    f"merge swap failed: cannot install merged bucket {b} "
-                    f"({new} -> {live}); run recover() and retry"
-                )
-            fs.delete(old, True)
-        fs.delete(P(new_root), True)
+            new = f".merge-new/{BUCKET_COL}={b}"
+            if self._store.exists(new):  # else all its updates dropped
+                self._store.swap(f"{BUCKET_COL}={b}", new, f".merge-old-{b}")
+        self._store.delete(".merge-new")
         return len(touched)
 
     def recover(self) -> None:
         """Finish or roll back an interrupted merge: a bucket moved
         aside with no live replacement is restored; stale aside/new
         dirs are dropped (their merge never swapped in)."""
-        fs, p, jvm = self._fs()
-        if not fs.exists(p):
-            return
-        P = jvm.org.apache.hadoop.fs.Path
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
+        names = {name for name, _ in self._store.list()}
+        for name in sorted(names):
             if name.startswith(".merge-old-"):
-                b = name.rsplit("-", 1)[1]
-                live = P(f"{self.path}/{BUCKET_COL}={b}")
-                if fs.exists(live):
-                    fs.delete(status.getPath(), True)
+                live = f"{BUCKET_COL}={name.rsplit('-', 1)[1]}"
+                if live in names:
+                    self._store.delete(name)
                 else:
-                    fs.rename(status.getPath(), live)
+                    self._store.rename(name, live)
         # a leftover .merge-new root is safe to drop: swaps that
         # happened are durable; the rest re-derive from base + updates
-        fs.delete(P(f"{self.path}/.merge-new"), True)
-
-    # -- plumbing -------------------------------------------------------
-
-    def _fs(self):
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        conf = sc._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(self.path)
-        return path.getFileSystem(conf), path, jvm
+        self._store.delete(".merge-new")

@@ -7,6 +7,7 @@ partition counts and small LogTable buckets in the tests themselves.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -55,3 +56,28 @@ def quiet_expected_aborts(srv, *extra_classes):
         default(request, client_address)
 
     srv._server.handle_error = _handle_error
+
+
+def raw_hadoop_store(spark, path):
+    """The Hadoop store over a local dir, through Hadoop's raw local FS
+    (no ``.crc`` sidecars, so files planted with plain ``open`` stay
+    readable) — the remote code paths, runnable without a cluster."""
+    from proglog_spark.log.store import HadoopStore
+
+    store = HadoopStore(spark, path)
+    store.fs = store.fs.getRaw()
+    return store
+
+
+@contextlib.contextmanager
+def on_store(kind: str):
+    """Tables built inside the block use the ``"os"`` store (what a
+    local path gets anyway) or the ``"hadoop"`` one."""
+    from proglog_spark.log import store, table
+    from proglog_spark.sources import upsert
+
+    chosen = raw_hadoop_store if kind == "hadoop" else store.open_store
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(table, "open_store", chosen)
+        mp.setattr(upsert, "open_store", chosen)
+        yield

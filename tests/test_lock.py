@@ -18,6 +18,7 @@ import subprocess
 
 import pytest
 
+from conftest import on_store
 from proglog_spark.errors import WriterLockHeldError
 from proglog_spark.log.table import _LOCK_FILE, LogTable
 
@@ -398,42 +399,18 @@ def test_multiprocess_contention_single_owner(tmp_path):
 
 # ------------------------------------------------------------------
 # remote-store reclaim (no flock, no conditional PUT): the
-# create-then-verify protocol of LogTable._reclaim_lock_remote
+# create-then-verify protocol of LogTable._reclaim_lock_remote, run
+# through the Hadoop store
 # ------------------------------------------------------------------
 
 
-def _simulate_remote_store(log: LogTable, path: str) -> None:
-    """Route the three lock primitives through plain file ops and
-    report no local dir — the shape of an object store that offers
-    only create-exclusive and delete."""
-    lp = _lock_path(path)
-    log._local_dir = lambda: None  # type: ignore[method-assign]
-
-    def read_owner():
-        try:
-            with open(lp) as fh:
-                return json.load(fh)
-        except Exception:
-            return None
-
-    def delete():
-        try:
-            os.unlink(lp)
-        except FileNotFoundError:
-            pass
-
-    def create():
-        try:
-            fd = os.open(lp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        os.write(fd, json.dumps(log._lock_owner_info()).encode())
-        os.close(fd)
-        return True
-
-    log._read_lock_owner = read_owner  # type: ignore[method-assign]
-    log._delete_lock_file = delete  # type: ignore[method-assign]
-    log._try_create_lock = create  # type: ignore[method-assign]
+def _remote_handle(spark, path: str) -> LogTable:
+    """A handle on the Hadoop store (create-exclusive and delete, no
+    flock) with a short settle window."""
+    with on_store("hadoop"):
+        other = LogTable.open(spark, path)
+    other.lease_seconds = 0.5
+    return other
 
 
 def test_remote_reclaim_succeeds_and_verifies_token(spark, tmp_path):
@@ -442,9 +419,7 @@ def test_remote_reclaim_succeeds_and_verifies_token(spark, tmp_path):
     log.close()
     _plant_lease_lock(path, host="some-dead-remote-host", expires_in=-5.0)
     stale = json.load(open(_lock_path(path)))
-    other = LogTable.open(spark, path)
-    other.lease_seconds = 0.5
-    _simulate_remote_store(other, path)
+    other = _remote_handle(spark, path)
     assert other._reclaim_lock_remote(stale) is True
     assert json.load(open(_lock_path(path)))["token"] == other._lock_token
 
@@ -459,9 +434,7 @@ def test_remote_reclaim_backs_off_when_clobbered(spark, tmp_path):
     log.close()
     _plant_lease_lock(path, host="some-dead-remote-host", expires_in=-5.0)
     stale = json.load(open(_lock_path(path)))
-    other = LogTable.open(spark, path)
-    other.lease_seconds = 0.5
-    _simulate_remote_store(other, path)
+    other = _remote_handle(spark, path)
     competitor = {"pid": 1, "host": "other-host", "token": "competitor-token"}
     real_create = other._try_create_lock
 
@@ -488,9 +461,7 @@ def test_remote_reclaim_never_deletes_a_fresh_lock(spark, tmp_path):
     fresh = {"pid": 1, "host": "other-host", "token": "fresh-token"}
     with open(_lock_path(path), "w") as fh:
         json.dump(fresh, fh)
-    other = LogTable.open(spark, path)
-    other.lease_seconds = 0.5
-    _simulate_remote_store(other, path)
+    other = _remote_handle(spark, path)
     assert other._reclaim_lock_remote(stale) is False
     assert json.load(open(_lock_path(path))) == fresh
 

@@ -6,9 +6,12 @@ tiny buckets, truncate visibility, dense offsets from a non-zero base.
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import on_store
 from proglog_spark import LogTable, OffsetOutOfRangeError
 from proglog_spark.log.offsets import assign_dense_offsets
 
@@ -166,12 +169,11 @@ def test_create_rejects_mismatched_config(spark, tmp_path):
 def test_truncate_crash_recovery(spark, tmp_path):
     """A truncate interrupted between protocol steps must never lose
     surviving records: open() either completes or rolls it back."""
+    import os
+
     path = str(tmp_path / "log_crash")
     log = LogTable.create(spark, path, bucket_size=8)
     log.append([f"v{i}" for i in range(12)])  # buckets 0 (0-7), 1 (8-11)
-
-    fs, _, jvm = log._fs()
-    P = jvm.org.apache.hadoop.fs.Path
 
     # simulate a crash between steps (2) and (3): survivors staged in
     # .truncate-new-0, live bucket already moved aside
@@ -179,8 +181,8 @@ def test_truncate_crash_recovery(spark, tmp_path):
         "offset", "value", "term", "type"
     )
     survivors.write.mode("overwrite").parquet(f"{path}/.truncate-new-0")
-    fs.delete(P(f"{path}/.truncate-new-0/_SUCCESS"), False)
-    fs.rename(P(f"{path}/bucket=0"), P(f"{path}/.truncate-old-0"))
+    os.remove(f"{path}/.truncate-new-0/_SUCCESS")
+    os.rename(f"{path}/bucket=0", f"{path}/.truncate-old-0")
 
     reopened = LogTable.open(spark, path)
     got = sorted((r.offset, r.value) for r in reopened.reader().collect())
@@ -191,8 +193,7 @@ def test_truncate_crash_recovery(spark, tmp_path):
         [(i, f"v{i}") for i in range(12)],
     )
     # no hidden protocol dirs left behind
-    names = [s.getPath().getName() for s in fs.listStatus(P(path))]
-    assert not any(n.startswith(".truncate-") for n in names)
+    assert not any(n.startswith(".truncate-") for n in os.listdir(path))
 
 
 def test_produce_stream_replay_is_noop(spark, tmp_path):
@@ -264,12 +265,7 @@ def test_compact_collapses_small_files_preserving_data(spark, tmp_path):
     before = [(r.offset, r.value) for r in log.reader().collect()]
 
     def n_files(b):
-        fs, _, jvm = log._fs()
-        d = jvm.org.apache.hadoop.fs.Path(f"{log.path}/bucket={b}")
-        return sum(
-            1 for s in fs.listStatus(d)
-            if s.getPath().getName().endswith(".parquet")
-        )
+        return len(glob.glob(f"{log.path}/bucket={b}/*.parquet"))
 
     assert n_files(0) >= 12
     assert log.read(17).value == "v17"  # cached before the rewrite
@@ -296,10 +292,7 @@ def test_compact_respects_max_records_per_file(spark, tmp_path):
     for i in range(8):
         log.append([f"v{i}-{j}" for j in range(4)])  # 32 rows, 8 files
     assert log.compact() == 1
-    fs, _, jvm = log._fs()
-    d = jvm.org.apache.hadoop.fs.Path(f"{log.path}/bucket=0")
-    files = [s for s in fs.listStatus(d) if s.getPath().getName().endswith(".parquet")]
-    assert len(files) == 4  # ceil(32 / 10)
+    assert len(glob.glob(f"{log.path}/bucket=0/*.parquet")) == 4  # ceil(32 / 10)
     assert log.count() == 32 and log.read(31).value == "v7-3"
 
 
@@ -315,40 +308,28 @@ def test_compact_never_writes_oversized_files(spark, tmp_path):
     for i in range(12):
         log.append([f"b{i}"])                     # twelve 1-row files
     assert log.compact() == 1
-    fs, _, jvm = log._fs()
-    d = jvm.org.apache.hadoop.fs.Path(f"{log.path}/bucket=0")
     sizes = [
-        spark.read.parquet(str(s.getPath())).count()
-        for s in fs.listStatus(d)
-        if s.getPath().getName().endswith(".parquet")
+        spark.read.parquet(f).count()
+        for f in glob.glob(f"{log.path}/bucket=0/*.parquet")
     ]
     assert sum(sizes) == 21 and max(sizes) <= 10, sizes
     assert log.count() == 21 and log.read(20).value == "b11"
 
 
 def test_point_read_spark_fallback_matches_native(spark, tmp_path):
-    """read() has two implementations (in-process pyarrow fast path,
-    Spark plan fallback for remote stores) — both must return the same
-    row and the same out-of-range error."""
-    from proglog_spark import LogTable
-    from proglog_spark.errors import OffsetOutOfRangeError
-
-    log = LogTable.create(spark, str(tmp_path / "log"), bucket_size=4)
+    """read() has two implementations (in-process pyarrow on the os
+    store, the Spark plan on the Hadoop store) — over one log, both
+    must return the same row and the same out-of-range error."""
+    path = str(tmp_path / "log")
+    log = LogTable.create(spark, path, bucket_size=4)
     log.append([f"v{i}" for i in range(10)])
 
-    native = log.read(7)
-    try:
-        log._read_native = lambda _off: None  # force the Spark plan
-        via_spark = log.read(7)
-        assert tuple(via_spark) == tuple(native) == (7, "v7", 0, 0)
-        import pytest as _pytest
-
-        with _pytest.raises(OffsetOutOfRangeError):
-            log.read(99)
-    finally:
-        del log._read_native
-    with pytest.raises(OffsetOutOfRangeError):
-        log.read(99)  # native path: definitive local miss
+    for kind in ("os", "hadoop"):
+        with on_store(kind):
+            handle = LogTable.open(spark, path)
+        assert tuple(handle.read(7)) == (7, "v7", 0, 0), kind
+        with pytest.raises(OffsetOutOfRangeError):
+            handle.read(99)
 
 
 def test_row_group_bytes_knob_persists_and_reads(spark, tmp_path):
@@ -556,3 +537,150 @@ def test_append_and_read_cost_stays_flat(spark, tmp_path, monkeypatch):
         counts["opened"] = 0
         assert log.read(off).value == f"r{off}"
         assert counts["opened"] == 0, (off, counts["opened"])
+
+
+class _NoSpark:
+    """A ``spark`` stand-in whose every attribute access raises."""
+
+    def __getattribute__(self, name):
+        raise AssertionError(f"spark.{name} touched")
+
+
+def test_local_log_needs_no_spark(tmp_path):
+    """On a local path the log's serving surface never touches the
+    session: create, open, append, read, bounds, count, consume_iter
+    and close run on os and pyarrow alone (the JVM-free contract)."""
+    import threading
+
+    path = str(tmp_path / "log")
+    no_spark = _NoSpark()
+    log = LogTable.create(no_spark, path, bucket_size=4)
+    assert log.append(iter(["a", "b", "c", "d", "e"])) == (0, 4)
+    log.close()
+    log = LogTable.open(no_spark, path)
+    assert log.append(["f"]) == (5, 5)
+    assert tuple(log.read(3)) == (3, "d", 0, 0)
+    assert (log.lowest_offset(), log.highest_offset(), log.count()) == (0, 5, 6)
+    stop = threading.Event()
+    got = []
+    for row in log.consume_iter(from_offset=2, stop=stop):
+        got.append(row[0])
+        if len(got) == 4:
+            stop.set()
+    assert got == [2, 3, 4, 5]
+    log.close()
+
+
+def test_reader_handle_sees_writer_appends(spark, tmp_path):
+    """A second handle's bounds follow the writer's appends: a local
+    path answers them from the footer index on every call, not from a
+    cache that only the appending handle clears."""
+    path = str(tmp_path / "log")
+    writer = LogTable.create(spark, path, bucket_size=4)
+    writer.append(["a"])
+    reader = LogTable.open(spark, path)
+    assert (reader.highest_offset(), reader.count()) == (0, 1)
+    writer.append(["b", "c"])
+    assert (reader.lowest_offset(), reader.highest_offset(), reader.count()) == (0, 2, 3)
+    writer.append(["d", "e", "f"])  # into the next bucket
+    assert (reader.highest_offset(), reader.count()) == (5, 6)
+
+
+def test_consume_iter_idle_polls_open_no_dataset(tmp_path, monkeypatch):
+    """An idle tail poll checks the footer index and opens no pyarrow
+    dataset; a later append is still delivered."""
+    import threading
+    import time
+
+    import pyarrow.dataset as pads
+
+    log = LogTable.create(_NoSpark(), str(tmp_path / "log"), bucket_size=1 << 20)
+    log.append([f"r{i}" for i in range(3)])
+    counts = {"opened": 0, "polls": 0}
+    dataset, highest = pads.dataset, log.highest_offset
+
+    def counted_dataset(*args, **kwargs):
+        counts["opened"] += 1
+        return dataset(*args, **kwargs)
+
+    def counted_highest():
+        counts["polls"] += 1
+        return highest()
+
+    monkeypatch.setattr(pads, "dataset", counted_dataset)
+    monkeypatch.setattr(log, "highest_offset", counted_highest)
+    got, stop = [], threading.Event()
+
+    def consume():
+        for row in log.consume_iter(from_offset=3, poll_interval=0.01, stop=stop):
+            got.append(row)
+            stop.set()
+
+    t = threading.Thread(target=consume)
+    t.start()
+    try:
+        deadline = time.time() + 10
+        while counts["polls"] < 10 and time.time() < deadline:
+            time.sleep(0.01)
+        assert counts["polls"] >= 10
+        assert counts["opened"] == 0
+        log.append(["late"])
+        t.join(timeout=30)
+        assert not t.is_alive()
+        assert got == [(3, "late", 0, 0)]
+    finally:
+        stop.set()
+        t.join(timeout=30)
+
+
+def test_footer_without_offset_stats_names_the_file(tmp_path):
+    """The native read path is the only one on a local path, so a
+    footer it cannot route by raises, naming the file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from proglog_spark.errors import ProglogError
+
+    path = str(tmp_path / "log")
+    log = LogTable.create(_NoSpark(), path, bucket_size=4)
+    bad = os.path.join(path, "bucket=0", "nostats.parquet")
+    os.makedirs(os.path.dirname(bad))
+    table = pa.table(
+        {
+            "offset": pa.array([0], pa.int64()),
+            "value": ["a"],
+            "term": pa.array([0], pa.int64()),
+            "type": pa.array([0], pa.int32()),
+        }
+    )
+    pq.write_table(table, bad, write_statistics=False)
+    with pytest.raises(ProglogError, match="nostats.parquet"):
+        log.read(0)
+
+
+@pytest.mark.parametrize("first, second", [("os", "hadoop"), ("hadoop", "os")])
+def test_log_crosses_stores(spark, tmp_path, first, second):
+    """Both stores keep one on-disk format: a log written through one
+    is opened, read, appended to and truncated through the other, and
+    the first reads the result back."""
+    path = str(tmp_path / "log")
+    with on_store(first):
+        log = LogTable.create(spark, path, bucket_size=4)
+    log.append([f"v{i}" for i in range(6)])
+    log.close()
+    with on_store(second):
+        other = LogTable.open(spark, path)
+    assert tuple(other.read(5)) == (5, "v5", 0, 0)
+    assert other.append(["w6", "w7"]) == (6, 7)
+    other.truncate(2)  # rewrites bucket 0, keeping offset 3
+    assert (other.lowest_offset(), other.highest_offset(), other.count()) == (3, 7, 5)
+    other.close()
+    with on_store(first):
+        back = LogTable.open(spark, path)
+    assert [(r.offset, r.value) for r in back.reader().collect()] == [
+        (3, "v3"), (4, "v4"), (5, "v5"), (6, "w6"), (7, "w7"),
+    ]
+    assert (back.lowest_offset(), back.highest_offset()) == (3, 7)
+    assert back.read(6).value == "w6"
