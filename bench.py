@@ -1,19 +1,20 @@
 #!/usr/bin/env python
 """Benchmark harness — runs the declared query suite and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {"see": artifact}, "sf": ...}.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_ONLY (comma list),
-SPARK_GRAFT_BENCH_COLD=family (cold-attribution mode, below),
-SPARK_GRAFT_BENCH_GATE=N (canary-gated round-close mode: probe the
-machine with a 3-pass solo canary and only start the full suite on a
-quiet reading, retrying up to N times — see _gate_until_quiet).
+SPARK_GRAFT_BENCH_COLD=family (cold-attribution mode, below).
 
 Each query is timed end-to-end (plan + execute + collect), after one
-untimed warmup action to absorb JVM/codegen startup. Results are
+untimed warmup to absorb JVM/codegen startup. Results are
 materialized with ``collect()`` exactly as the driver's correctness
-gate does.
+gate does. After each wall is taken, the query's layer record is read:
+its Spark jobs, stages, tasks and executor time, shuffle and spill
+bytes, Catalyst phases, join output rows, generated classes compiled
+and, for a streamed gate, its micro-batches. The per-query walls and
+records go to the artifact that ``artifact_path`` names.
 """
 
 from __future__ import annotations
@@ -22,13 +23,22 @@ import json
 import os
 import sys
 import time
+import uuid
 
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# perfbench's counter readers; its oracle module imports from tools/
+sys.path += [os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "tools")]
 
 from proglog_spark import queries as q  # noqa: E402
 from proglog_spark.session import build_session  # noqa: E402
+from query_workloads import (  # noqa: E402
+    _jobs_counters,
+    _plan_counters,
+    _progress_listener,
+)
 
 
 def stdout_line(
@@ -36,17 +46,13 @@ def stdout_line(
     sf: str,
     n_queries: int,
     load: list,
-    queries_file: str = "bench_queries.latest.json",
+    queries_file: str = "bench_queries.json",
 ) -> str:
     """The ONE line the driver tail-captures from stdout — built here
     so tests can assert it stays under the driver's ~200-byte buffer
     at worst-case field widths (the per-query map deliberately lives
-    in a side file, not here). The pointer names the PER-RUN snapshot
-    (VERDICT-r11 #1): bench_queries.latest*.json always holds THIS
-    run's per-query map and matches this line's value, whereas
-    bench_queries.json is the quietest-known run the no-clobber guard
-    may have refused to replace. Subset runs point at their own
-    diverted artifact instead (no latest snapshot is written there)."""
+    in a side file, not here). The pointer names the artifact this run
+    wrote, which always holds this run's per-query map."""
     return json.dumps(
         {
             "metric": "declared_suite_wall_seconds",
@@ -68,7 +74,7 @@ def stdout_line(
 # with the session DataFrame cache CLEARED before every single query
 # (spark.catalog.clearCache()), so each member pays its own full cost
 # — the number a capacity planner wants for a query run in isolation.
-# Results merge into bench_queries.json under "cold_queries" and are
+# Results merge into the run's artifact under "cold_queries" and are
 # PRESERVED by subsequent plain runs, so one artifact carries both.
 COLD_FAMILIES: dict[str, list[str]] = {
     "jaccard_dedup": [
@@ -131,306 +137,96 @@ COLD_FAMILIES: dict[str, list[str]] = {
     ],
 }
 
-# CANARY INFLATION (VERDICT-r8 #2, refs per-phase since VERDICT-r9 #2):
-# the r8 artifact's per-query numbers were ~2x quiet-class for
-# code-untouched queries — external CPU throttling, verified
-# independently by builder and judge, but only attributable through
-# BASELINE prose archaeology. This makes the correction IN-BAND: a
-# fixed pure-JVM subset (no Python stage, no streaming state,
-# untouched since their quiet reference runs) is timed at suite START
-# and END; the artifact records
-#   canary_inflation_<phase> = median(measured_sec / pinned_quiet_sec)
-# for each pass. A reviewer divides suite walls by the factor before
-# calling anything a regression.
-#
-# Each pass compares against ITS OWN phase's reference. References
-# RE-PINNED at r11 round close (BASELINE "Reading the canary"): the
-# r11 optimization waves sped up the canary members themselves (the
-# load_table handle memo halves their plan-build floor; tpch_q5 end
-# 0.83 -> 0.59 s), so against the old r9-era refs a QUIET machine
-# read inflation 0.69-0.92 and the spread band was drifting toward a
-# false STRUCTURAL on tpch_q5 — a CODE improvement misread as machine
-# state. New refs are the corresponding passes of the r11 round-close
-# QUIET gated run (264.4 s / 203, launch loadavg 0.19, old-ref
-# inflation_end 0.92). NOTE both phases' refs now come from a GATED
-# run, whose start pass executes after the gate's probe passes and so
-# reads steady-state (the gate is the standard round-close procedure
-# since r11); an UNGATED run's start pass carries the residual
-# JIT/page-cache ramp the old refs included and will read its
-# inflation_start high by ~1.2-1.4x — gate round-close runs, or read
-# start-phase inflation of ungated runs with that bias in mind.
-# Pinned at sf0.1 — the canary is skipped at other SFs and on subset
-# runs.
-CANARY_QUIET_REF: dict[str, dict[str, float]] = {
-    "start": {
-        "tpch_q1_pricing": 0.328,
-        "tpch_q3_shipping": 0.429,
-        "tpch_q5_nation_revenue": 0.461,
-        "tpch_q9_product_profit": 0.558,
-        "events_markov_transitions": 0.439,
-        "events_hourly_counts": 0.329,
-    },
-    "end": {
-        "tpch_q1_pricing": 0.41,
-        "tpch_q3_shipping": 0.543,
-        "tpch_q5_nation_revenue": 0.588,
-        "tpch_q9_product_profit": 0.506,
-        "events_markov_transitions": 0.723,
-        "events_hourly_counts": 0.328,
-    },
-}
-
-# STRUCTURAL-REGRESSION FLAG (VERDICT-r9 #3): machine throttling moves
-# all six canaries TOGETHER (historical noisy runs spread ~1.2-1.4x
-# between the most- and least-inflated member); a plan regression in
-# one canary moves that one alone. If the end pass's max/min per-query
-# ratio exceeds this band, the artifact is flagged STRUCTURAL with the
-# outlier named — machine load alone cannot produce it.
-CANARY_SPREAD_BAND = 1.8
-
-
-def _run_canary(spark, sf_dir: str, fns) -> dict[str, float]:
-    """Time the pinned pure-JVM canary subset once, in fixed name
-    order. None of these ride a family cache, so one timed pass
-    approximates their isolated-quiet cost on a quiet machine."""
-    out: dict[str, float] = {}
-    for name in sorted(CANARY_QUIET_REF["end"]):
-        if name not in fns:
-            continue
-        t0 = time.perf_counter()
-        fns[name](spark, sf_dir).collect()
-        out[name] = round(time.perf_counter() - t0, 4)
-    return out
-
-
-def _canary_ratios(measured: dict[str, float], phase: str) -> dict[str, float]:
-    """Per-query measured/pinned-quiet ratios vs the given phase's refs."""
-    refs = CANARY_QUIET_REF[phase]
-    return {
-        n: measured[n] / refs[n]
-        for n in measured
-        if n in refs and refs[n] > 0
-    }
-
-
-def _median(vals: list[float]) -> float:
-    mid = len(vals) // 2
-    return vals[mid] if len(vals) % 2 else (vals[mid - 1] + vals[mid]) / 2
-
-
-def _canary_inflation(measured: dict[str, float], phase: str = "end") -> float | None:
-    """Median of measured/pinned ratios — robust to one outlier query."""
-    ratios = sorted(_canary_ratios(measured, phase).values())
-    if not ratios:
-        return None
-    return round(_median(ratios), 3)
-
-
-def _canary_spread(
-    measured: dict[str, float], phase: str = "end"
-) -> tuple[float, str] | None:
-    """(max/min per-query ratio, name of the OUTLIER query) for the
-    given pass — the machine-vs-structural discriminator. The named
-    query is the one farthest from the median in log-ratio, not
-    simply the max: a canary that got FASTER (plan improvement /
-    stale ref) is the outlier even though every other query sits
-    above it, and naming the max would send the regression hunt at
-    an innocent query. None when fewer than two canaries were
-    measured."""
-    import math
-
-    ratios = _canary_ratios(measured, phase)
-    if len(ratios) < 2:
-        return None
-    vals = sorted(ratios.values())
-    med = _median(vals)
-    outlier = max(ratios, key=lambda n: abs(math.log(ratios[n] / med)))
-    return round(max(vals) / min(vals), 3), outlier
-
-
-# CANARY-GATED ROUND-CLOSE MODE (VERDICT-r10 #2): the 2026-08 host
-# throttles under sustained load most evenings (solo canary swung
-# 1.04 -> 4.7x across one evening; four full r10 runs all started
-# quiet and degraded mid-suite). Chasing a quiet bench by hand meant
-# babysitting retries. With SPARK_GRAFT_BENCH_GATE=N set, bench.py
-# probes the machine FIRST — three timed solo canary passes — and
-# only starts the ~6 min full suite when the best pass's median
-# inflation (vs the pinned end-phase quiet refs; the probe runs after
-# the warm pass, so steady-JVM state) is at or under
-# SPARK_GRAFT_BENCH_GATE_MAX (default 1.3, the VERDICT-r10 bar).
-# A loud reading sleeps SPARK_GRAFT_BENCH_GATE_WAIT seconds (default
-# 300 — throttle episodes are minutes-scale) and re-probes, up to N
-# times. If every probe reads loud, the suite runs anyway — the
-# no-clobber guard diverts a noisier-than-committed result to
-# bench_queries.noisy.json, so the committed artifact stays the
-# quietest seen and the command still honors the driver contract
-# (one stdout JSON line) either way.
-def _gate_until_quiet(spark, sf_dir: str, fns) -> dict:
-    """Block until a 3-pass solo canary reads quiet (or retries are
-    exhausted). Returns the gate record for the artifact."""
-    max_infl = float(os.environ.get("SPARK_GRAFT_BENCH_GATE_MAX", "1.3"))
-    wait_s = float(os.environ.get("SPARK_GRAFT_BENCH_GATE_WAIT", "300"))
-    tries = int(os.environ.get("SPARK_GRAFT_BENCH_GATE", "0") or "0")
-    probes: list[float] = []
-    for attempt in range(1, tries + 1):
-        passes = [
-            _canary_inflation(_run_canary(spark, sf_dir, fns), "end")
-            for _ in range(3)
-        ]
-        passes = [p for p in passes if p is not None]
-        best = min(passes) if passes else None
-        probes.append(best)
-        if best is not None and best <= max_infl:
-            print(
-                f"GATE: quiet (best-of-3 inflation {best} <= {max_infl} "
-                f"on attempt {attempt}/{tries}); starting full suite",
-                file=sys.stderr,
-            )
-            return {
-                "probes": probes,
-                "threshold": max_infl,
-                "proceeded": "quiet",
-            }
-        print(
-            f"GATE: loud (best-of-3 inflation {best} > {max_infl}, "
-            f"attempt {attempt}/{tries}); sleeping {wait_s:.0f}s",
-            file=sys.stderr,
-        )
-        if attempt < tries:
-            time.sleep(wait_s)
-    print(
-        "GATE: retries exhausted; running anyway (no-clobber guard "
-        "will divert a noisier-than-committed result)",
-        file=sys.stderr,
-    )
-    return {"probes": probes, "threshold": max_infl, "proceeded": "exhausted"}
-
 
 def _code_rev() -> str:
     """Digest of the SOURCE the bench actually measures — bench.py,
-    __spark_entry__.py, and every proglog_spark/**/*.py — so the
-    no-clobber guard's same-code test ignores commits that touch only
-    docs/artifacts (r12: a docs-only commit changed git_head and let a
-    hot-host rerun displace the quiet map TWICE). Pure file contents:
-    stable across machines, independent of git state."""
+    __spark_entry__.py, and every proglog_spark/**/*.py — which keys
+    the artifact together with ``cpus``. Pure file contents: stable
+    across machines, independent of git state, unmoved by commits that
+    touch only docs or artifacts."""
     import hashlib
 
-    root = os.path.dirname(os.path.abspath(__file__))
     files = [
-        os.path.join(root, "bench.py"),
-        os.path.join(root, "__spark_entry__.py"),
+        os.path.join(ROOT, "bench.py"),
+        os.path.join(ROOT, "__spark_entry__.py"),
     ]
-    for r, dirs, fs in os.walk(os.path.join(root, "proglog_spark")):
+    for r, dirs, fs in os.walk(os.path.join(ROOT, "proglog_spark")):
         dirs[:] = [d for d in dirs if d != "__pycache__"]
         files += [os.path.join(r, f) for f in fs if f.endswith(".py")]
     h = hashlib.sha256()
     for f in sorted(files):
-        h.update(os.path.relpath(f, root).encode())
+        h.update(os.path.relpath(f, ROOT).encode())
         with open(f, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:16]
 
 
-def _git_head() -> str | None:
-    """Current repo revision (short hash, '-dirty' suffixed when the
-    working tree has modifications) — recorded in the artifact so the
-    no-clobber guard can tell a same-code rerun from a run of CHANGED
-    code. None when git is unavailable."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "describe", "--always", "--dirty"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        return out.stdout.strip() or None
-    except (OSError, subprocess.SubprocessError):
-        return None
+def artifact_path(sf: str, cpus: str) -> str:
+    """Where a run at this scale factor and core count writes its
+    per-query map: ``bench_queries.json`` for sf0.1 at 32 cores (the
+    width of the r1-r12 history), ``bench_queries.sf<sf>.c<cpus>.json``
+    for anything else, so runs that are not comparable never share a
+    file."""
+    name = (
+        "bench_queries.json"
+        if (sf, cpus) == ("0.1", "32")
+        else f"bench_queries.sf{sf}.c{cpus}.json"
+    )
+    return os.path.join(ROOT, name)
 
 
-def _noisier_than_committed(full: dict, prior: dict) -> str | None:
-    """Reason string when this run must NOT replace the existing
-    artifact: (a) a DIFFERENT scale factor — the committed artifact is
-    the canonical sf0.1 map and a run at another sf (where the canary
-    is skipped) must never clobber it; or (b) same surface (equal
-    n_queries at the same sf — a differing n_queries means the
-    artifact is stale and is always replaced), both carry a canary,
-    and this run's end-pass inflation is meaningfully worse than the
-    committed run's. None = safe to overwrite.
-
-    Clauses (b)/(c) are SAME-CODE guards (VERDICT-r11 #3 / ADVICE-r11):
-    the quietest-known-run contract only makes sense across reruns of
-    the same code — a genuine plan regression with unchanged n_queries
-    would otherwise never land in the committed map (the numbers would
-    ratchet to best-ever and silently stop representing HEAD). When
-    the artifact's recorded git_head differs from this run's (or the
-    artifact predates the field), the run always replaces. A dirty
-    working tree reads as '<hash>-dirty' for every edit state, so two
-    DIFFERENT uncommitted edits compare equal — dev-loop limitation,
-    committed runs are unaffected."""
-    if not prior:
-        return None
-    if prior.get("sf") is not None and full.get("sf") != prior.get("sf"):
-        return f"sf {full.get('sf')} vs committed sf {prior.get('sf')}"
-    if full.get("n_queries") != prior.get("n_queries"):
-        return None
-    # (b0) a MACHINE-flagged run never displaces a QUIET artifact —
-    # REGARDLESS of revision (r12: a docs-only commit changed git_head
-    # and let a 321 s MACHINE run clobber the 306.8 s QUIET map; the
-    # MACHINE flag is the canary's own statement that the delta is
-    # uniform external load, not code). QUIET and STRUCTURAL runs of
-    # changed code still always replace, so a genuine code regression
-    # — including one that trips a canary — lands in the map.
-    new_flag = (full.get("canary") or {}).get("flag")
-    old_flag = (prior.get("canary") or {}).get("flag")
-    if new_flag == "MACHINE" and old_flag == "QUIET":
-        return f"flag MACHINE vs committed QUIET (external load, any code)"
-    # same-code test: prefer the measured-source digest (code_rev,
-    # r12 — immune to docs-only commits moving git_head); fall back to
-    # the revision for artifacts that predate the field
-    if prior.get("code_rev") is not None and full.get("code_rev") is not None:
-        if prior["code_rev"] != full["code_rev"]:
-            return None
-    elif prior.get("git_head") is None or prior.get("git_head") != full.get(
-        "git_head"
-    ):
-        return None
-    new_c = (full.get("canary") or {}).get("inflation_end")
-    old_c = (prior.get("canary") or {}).get("inflation_end")
-    if new_c is None or old_c is None:
-        return None
-    if new_c > old_c + 0.05:
-        return f"inflation_end {new_c} vs committed {old_c}"
-    # (c) the canary is six quick JVM queries and can read quiet while
-    # the SUITE absorbed mid-run contention the canary windows missed
-    # (observed at r11 close: a 331.8 s run at launch loadavg 5.0 read
-    # inflation_end 1.01 and clobbered the 264.4 s quiet map). The
-    # committed map's stated contract is "the quietest known run of
-    # the canonical surface": when this run is NOT meaningfully
-    # quieter by the canary (checked above) AND its total wall is
-    # higher, keep the committed map. A genuinely slower-after-a-code-
-    # change map still lands via the n_queries path or a deliberate
-    # removal of the old artifact; routine reruns only replace on
-    # equal-or-better walls.
-    new_v, old_v = full.get("value"), prior.get("value")
-    if (
-        isinstance(new_v, (int, float))
-        and isinstance(old_v, (int, float))
-        and new_v > old_v * 1.02
-    ):
-        return (
-            f"wall {new_v} vs committed {old_v} with canary not quieter "
-            f"({new_c} vs {old_c})"
-        )
-    return None
+def compile_counters(spark) -> tuple[int, float]:
+    """(generated classes compiled, Janino ms) so far in this JVM. In
+    local mode the planner and every task share one JVM, so these count
+    every class the session compiles; compileTime() is the exact Janino
+    total in ns, the histogram only keeps a sample of times."""
+    jvm = spark._jvm
+    classes = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return classes, ns / 1e6
 
 
-def _run_cold(spark, sf_dir: str, sf: str, out_path: str) -> None:
+def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict]:
+    """Run one query, time its plan build, execute and ``collect``, and
+    return (wall seconds, layer record). The query runs under a job
+    group of its own, so the record counts this call's jobs and no
+    earlier call's; ``listener`` (``_progress_listener``, added to
+    ``spark.streams``) supplies a streamed gate's micro-batches. The
+    record is read after the wall is taken, once the listener bus has
+    delivered every event of the query."""
+    sc = spark.sparkContext
+    group = f"bench-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, name)
+    n_started, n_batches = len(listener.started), len(listener.batches)
+    classes0, janino0 = compile_counters(spark)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    rows = df.collect()
+    wall = time.perf_counter() - t0
+    classes, janino = compile_counters(spark)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = listener.started[n_started:]
+    rec = {"plan_build_s": round(t1 - t0, 4), "rows": len(rows)}
+    rec |= _jobs_counters(spark, [group, *runs]) | _plan_counters(df)
+    rec |= {
+        "cpu_ms": round(rec["cpu_ms"], 1),
+        "compiled_classes": classes - classes0,
+        "janino_ms": round(janino - janino0, 1),
+    }
+    if runs:
+        rec["micro_batch_jobs"] = _jobs_counters(spark, runs)["jobs"]
+        rec["batches"] = [
+            b for b in listener.batches[n_batches:] if b["run_id"] in runs
+        ]
+    return round(wall, 4), rec
+
+
+def _run_cold(spark, sf_dir: str, sf: str, out_path: str, listener) -> None:
     """Time every COLD_FAMILIES member with the session cache cleared
-    before each query, merge into bench_queries.json (keeping any
+    before each query, merge the walls into the artifact (keeping any
     in-suite numbers already there), and print one small JSON line."""
     fns = q.queries()
     missing = [
@@ -455,9 +251,7 @@ def _run_cold(spark, sf_dir: str, sf: str, out_path: str) -> None:
             # them too so each cold-timed member pays its own model
             # build, exactly as it pays its own cache build
             q.clear_value_memos()
-            t0 = time.perf_counter()
-            fns[name](spark, sf_dir).collect()
-            cold[name] = round(time.perf_counter() - t0, 4)
+            cold[name], _ = time_query(spark, name, fns[name], sf_dir, listener)
     existing: dict = {}
     if os.path.exists(out_path):
         try:
@@ -465,21 +259,7 @@ def _run_cold(spark, sf_dir: str, sf: str, out_path: str) -> None:
                 existing = json.load(fh)
         except (OSError, json.JSONDecodeError):
             existing = {}
-    # COLD SF GUARD (ADVICE-r10): the committed artifact's in-suite map
-    # is canonical at ONE sf; a cold run at a different SPARK_GRAFT_SF_DIR
-    # must not pair its walls with it. Divert to a per-sf side file
-    # (covered by the bench_queries.*.json gitignore pattern).
-    if existing.get("sf") is not None and existing.get("sf") != sf:
-        committed_sf = existing.get("sf")
-        out_path = out_path.replace(".json", f".cold-sf{sf}.json")
-        existing = {}
-        print(
-            f"NOTE: committed artifact is sf{committed_sf}; "
-            f"diverting sf{sf} cold map to {os.path.basename(out_path)}",
-            file=sys.stderr,
-        )
     existing["cold_queries"] = cold
-    existing["cold_sf"] = sf
     existing["cold_note"] = (
         "per-query wall with spark.catalog.clearCache() before EACH "
         "query (no shared-cache riding); families in bench.COLD_FAMILIES"
@@ -494,10 +274,58 @@ def _run_cold(spark, sf_dir: str, sf: str, out_path: str) -> None:
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(cold),
-                "queries": {"see": "bench_queries.json"},
+                "queries": {"see": os.path.basename(out_path)},
             }
         )
     )
+
+
+def session(cpus: str):
+    """The bench's session at ``local[cpus]``. Its status store keeps
+    every stage of the run: ``_jobs_counters`` looks up each stage of
+    a job, skipped ones included, and past Spark's default of 1,000
+    retained stages the store evicts skipped stages first, so a
+    suite-long session would lose the ones a record still asks for."""
+    spark = build_session(
+        app_name="proglog-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={"spark.ui.retainedStages": str(10**6)},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Untimed warmup: touch every fixture once so IO cache + codegen
+    are hot, and pay the session's one-time start-up costs."""
+    from pyspark.sql import functions as F
+
+    from proglog_spark.sources.tables import TABLES, load_table
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for t in TABLES:
+        load_table(spark, sf_dir, t).count()
+    # pre-spawn the Python/Arrow UDF workers (one per core, ~5 s once)
+    # so the first Pandas-UDF query measures steady state, not forks
+
+    @F.pandas_udf("long")
+    def _noop(s: pd.Series) -> pd.Series:
+        return s
+
+    spark.range(10_000).repartition(cpus).select(_noop("id")).collect()
+    # first use of the JSON codec loads Jackson + evaluator classes
+    # (~2 s once, data-independent) — absorb it here, one row
+    spark.sql(
+        "SELECT from_json(to_json(named_struct('a', id)), 'a BIGINT'), "
+        "unbase64(base64(CAST('x' AS BINARY))) FROM range(1)"
+    ).collect()
+    # the session's FIRST stateful streaming query pays ~4 s extra
+    # (state-channel Python workers + streaming codegen spin up once
+    # per JVM; measured in BASELINE's streaming-fixed-cost section) —
+    # absorb it with a minimal 1-row applyInPandasWithState run so the
+    # streamed gate entries all measure steady-state engine cost
+    _streaming_warmup(spark)
 
 
 def _streaming_warmup(spark) -> None:
@@ -544,12 +372,7 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    spark = build_session(
-        app_name="proglog-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus)
 
     # CACHE-ORDER POLICY (VERDICT-r5 item 3): queries run in FIXED
     # alphabetical order, NOT the rotation order queries() emits for
@@ -567,48 +390,11 @@ def main() -> None:
         keep = set(only.split(","))
         names = [n for n in names if n in keep]
 
-    # warmup: touch every fixture once so IO cache + codegen are hot
-    from proglog_spark.sources.tables import TABLES, load_table
+    warm_up(spark, sf_dir, int(cpus))
+    listener = _progress_listener()
+    spark.streams.addListener(listener)
 
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-    # pre-spawn the Python/Arrow UDF workers (one per core, ~5 s once)
-    # so the first Pandas-UDF query measures steady state, not forks
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _noop(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(10_000).repartition(int(cpus)).select(_noop("id")).collect()
-    # first use of the JSON codec loads Jackson + evaluator classes
-    # (~2 s once, data-independent) — absorb it here, one row
-    spark.sql(
-        "SELECT from_json(to_json(named_struct('a', id)), 'a BIGINT'), "
-        "unbase64(base64(CAST('x' AS BINARY))) FROM range(1)"
-    ).collect()
-    # the session's FIRST stateful streaming query pays ~4 s extra
-    # (state-channel Python workers + streaming codegen spin up once
-    # per JVM; measured in BASELINE's streaming-fixed-cost section) —
-    # absorb it with a minimal 1-row applyInPandasWithState run so the
-    # six streamed gate entries all measure steady-state engine cost
-    _streaming_warmup(spark)
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_queries.json"
-    )
-    # CPUS KEYING (VERDICT-r11 #2): the committed artifact is the
-    # canonical 32-core map; the driver ALSO reruns the bench at a
-    # lower core count to measure scaling, and at r11 that 8-core run
-    # replaced the 32-core map (the old guard keyed on sf but not
-    # cpus) and tripped a spurious STRUCTURAL flag against the
-    # 32-core-pinned canary refs. Runs at any other core count divert
-    # to bench_queries.c<N>.json (gitignored) and skip the canary —
-    # its quiet references are wall-clock numbers measured at 32
-    # cores, meaningless at another width.
-    if cpus != "32":
-        out_path = out_path.replace(".json", f".c{cpus}.json")
+    out_path = artifact_path(sf, cpus)
     if os.environ.get("SPARK_GRAFT_BENCH_COLD") == "family":
         # cold mode ignores SPARK_GRAFT_BENCH_ONLY (it always times
         # every COLD_FAMILIES member), so it must also ignore the
@@ -620,7 +406,7 @@ def main() -> None:
                 "NOTE: SPARK_GRAFT_BENCH_ONLY is ignored in cold mode",
                 file=sys.stderr,
             )
-        _run_cold(spark, sf_dir, sf, out_path)
+        _run_cold(spark, sf_dir, sf, out_path, listener)
         spark.stop()
         return
     if only:
@@ -630,55 +416,16 @@ def main() -> None:
         # round close too). Subset artifacts now live in their own file.
         out_path = out_path.replace(".json", ".subset.json")
 
-    # machine-load attribution: the driver may bench under shared
-    # load; recording 1-min loadavg at start/end lets a reviewer tell
-    # a noisy run from a regression (r5's >1.5x per-query outliers
-    # were unattributable without this)
+    # 1-min loadavg at start/end, beside the walls: the counters in
+    # the records do not move with outside load, the walls do
     load_start = round(os.getloadavg()[0], 2)
     timings: dict[str, float] = {}
-    n_rows: dict[str, int] = {}
+    records: dict[str, dict] = {}
     fns = q.queries()
-    # canary pass 1 (references pinned at sf0.1 / 32 cores; skip
-    # elsewhere and on SPARK_GRAFT_BENCH_ONLY subset runs, whose walls
-    # nobody trends)
-    run_canary = sf == "0.1" and not only and cpus == "32"
-    if run_canary:
-        # untimed warm pass first: the pinned references are mid-suite
-        # numbers from warm sessions, so a cold first execution of the
-        # canary plans would bake one-time codegen into
-        # inflation_start (observed 3.68 vs 1.65 end in the first
-        # recorded run) — absorb it so both passes measure machine
-        # state, not compile state
-        _run_canary(spark, sf_dir, fns)
-    gate_rec = None
-    if os.environ.get("SPARK_GRAFT_BENCH_GATE"):
-        if run_canary:
-            gate_rec = _gate_until_quiet(spark, sf_dir, fns)
-        else:
-            # the gate reads the pinned sf0.1 canary refs — at another
-            # sf or on a subset run there is nothing to gate on
-            print(
-                "NOTE: SPARK_GRAFT_BENCH_GATE ignored (canary refs "
-                "are pinned at sf0.1 full-suite runs only)",
-                file=sys.stderr,
-            )
-    canary_start = _run_canary(spark, sf_dir, fns) if run_canary else {}
-    # a MID-suite pass localizes throttle ramps: the 2026-08-16 host
-    # repeatedly STARTED quiet and degraded mid-run (0.95->1.20,
-    # 1.11->1.64 across four runs), and with only start/end passes a
-    # reviewer cannot tell whether the ramp hit the first or second
-    # half of the alphabetical order. Compared against the END refs
-    # (mid-suite is the same steady-JVM state as suite end).
-    canary_mid: dict[str, float] = {}
-    mid_at = len(names) // 2
-    for i, name in enumerate(names):
-        if run_canary and i == mid_at:
-            canary_mid = _run_canary(spark, sf_dir, fns)
-        t0 = time.perf_counter()
-        rows = fns[name](spark, sf_dir).collect()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        n_rows[name] = len(rows)
-    canary_end = _run_canary(spark, sf_dir, fns) if run_canary else {}
+    for name in names:
+        timings[name], records[name] = time_query(
+            spark, name, fns[name], sf_dir, listener
+        )
     load_end = round(os.getloadavg()[0], 2)
 
     total = round(sum(timings.values()), 4)
@@ -687,62 +434,17 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "records": records,
         "sf": sf,
         "n_queries": len(timings),
-        "rows": sum(n_rows.values()),
+        "rows": sum(r["rows"] for r in records.values()),
         "loadavg_1m": [load_start, load_end],
         "query_order": "alphabetical (see cache-order policy above)",
-        # provenance: core count + code revision, so artifacts are
-        # attributable and the no-clobber guard can scope itself to
-        # same-code reruns (VERDICT-r11 #2/#3)
         "cpus": int(cpus),
-        "git_head": _git_head(),
         "code_rev": _code_rev(),
     }
-    if run_canary:
-        spread = _canary_spread(canary_end, "end")
-        infl_end = _canary_inflation(canary_end, "end")
-        if spread is not None and spread[0] > CANARY_SPREAD_BAND:
-            flag = f"STRUCTURAL({spread[1]})"
-        elif infl_end is not None and infl_end > 1.15:
-            flag = "MACHINE"
-        else:
-            flag = "QUIET"
-        full["canary"] = {
-            "quiet_ref": CANARY_QUIET_REF,
-            "start": canary_start,
-            "mid": canary_mid,
-            "end": canary_end,
-            "inflation_start": _canary_inflation(canary_start, "start"),
-            "inflation_mid": _canary_inflation(canary_mid, "end"),
-            "inflation_end": infl_end,
-            "spread_start": _canary_spread(canary_start, "start"),
-            "spread_end": spread,
-            "flag": flag,
-            "note": (
-                "measured/pinned-quiet median over a fixed pure-JVM "
-                "subset, timed before / halfway through / after the "
-                "suite, each pass vs its phase's pinned-quiet-run "
-                "reference (VERDICT-r9 #2; the mid pass shares the "
-                "end refs — same steady-JVM state — and exists to "
-                "localize mid-run throttle ramps). Divide suite "
-                "walls by inflation_end before trending "
-                "round-over-round. flag=MACHINE means uniform "
-                "external load (ratios move together); "
-                "flag=STRUCTURAL(name) means ONE canary's ratio "
-                "diverged past the spread band — a plan/code "
-                "regression, not load (VERDICT-r9 #3)."
-            ),
-        }
-        if gate_rec is not None:
-            # gate probes execute the canary plans repeatedly BEFORE
-            # the start pass, so in gated runs inflation_start reads
-            # steady-state (typically <1 vs the ramp-inclusive start
-            # refs) — interpret the start pass accordingly
-            full["canary"]["gate"] = gate_rec
     # cold-attribution numbers from a prior SPARK_GRAFT_BENCH_COLD run
     # survive plain rewrites, so one artifact carries both views
-    prior: dict = {}
     if os.path.exists(out_path):
         try:
             with open(out_path) as fh:
@@ -751,57 +453,17 @@ def main() -> None:
                 if k in prior:
                     full[k] = prior[k]
         except (OSError, json.JSONDecodeError):
-            prior = {}
-    # NO-CLOBBER GUARD (VERDICT-r9 #4): a full-suite rerun on a noisier
-    # machine (the driver benches under shared load) must not silently
-    # replace a quieter committed artifact — r9's round-close quiet map
-    # was overwritten by the driver's 1.12-inflation run. If the
-    # existing artifact covers the same query surface and reads
-    # meaningfully quieter, divert this run to bench_queries.noisy.json
-    # (stdout metric line still prints — the driver contract is
-    # unaffected). A differing n_queries means the artifact is stale
-    # and is always replaced.
-    divert = _noisier_than_committed(full, prior)
-    if divert:
-        out_path = out_path.replace(".json", ".noisy.json")
-        # the cold keys merged above belong to the COMMITTED artifact's
-        # machine state — carrying them into the diverted file would
-        # pair a quiet cold map with noisy in-suite walls
-        full.pop("cold_queries", None)
-        full.pop("cold_note", None)
-        print(
-            "NOTE: not replacing the committed artifact "
-            f"({divert}); writing {os.path.basename(out_path)} and "
-            "leaving bench_queries.json untouched",
-            file=sys.stderr,
-        )
+            pass
     # The driver tail-captures stdout with a bounded buffer, so the
     # LAST line must stay small (<200 bytes).  The per-query map goes
-    # to bench_queries.json next to this script instead of stdout.
+    # to the artifact next to this script instead of stdout.
     with open(out_path, "w") as fh:
         json.dump(full, fh, indent=1, sort_keys=True)
-    # PER-RUN SNAPSHOT (VERDICT-r11 #1): bench_queries.json is by
-    # contract the quietest-known run, which the no-clobber guard may
-    # refuse to replace — so THIS run's full per-query map additionally
-    # lands in bench_queries.latest.json unconditionally (full-suite
-    # runs only; gitignored, overwritten every run). Anyone needing
-    # the numbers behind the stdout wall — the driver's per-query
-    # regression diff, the c8-vs-c32 scaling intersection — reads the
-    # snapshot, whose value always matches the stdout line.
-    pointer = os.path.basename(out_path)
-    if not only:
-        suffix = "" if cpus == "32" else f".c{cpus}"
-        latest = os.path.join(
-            os.path.dirname(out_path), f"bench_queries.latest{suffix}.json"
-        )
-        snap = dict(full)
-        snap.pop("cold_queries", None)
-        snap.pop("cold_note", None)
-        with open(latest, "w") as fh:
-            json.dump(snap, fh, indent=1, sort_keys=True)
-        pointer = os.path.basename(latest)
     print(
-        stdout_line(total, sf, len(timings), [load_start, load_end], pointer)
+        stdout_line(
+            total, sf, len(timings), [load_start, load_end],
+            os.path.basename(out_path),
+        )
     )
     spark.stop()
 

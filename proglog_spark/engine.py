@@ -131,11 +131,16 @@ class Engine:
         self.authorizer.authorize(subject, "*", PRODUCE)
         self.log.truncate(lowest)
 
-    def get_servers(self, subject: str = "root") -> DataFrame:
+    def get_servers(self, subject: str = "root") -> list[Row]:
         """Cluster metadata (O22) — consume-gated like the log extent
-        (topology must not leak to subjects the ACL denies)."""
+        (topology must not leak to subjects the ACL denies). The
+        validated catalog as plain rows, typed like the ``servers``
+        view: a handful of constants needs no Spark plan."""
         self.authorizer.authorize(subject, "*", CONSUME)
-        return servers_df(self.spark, self._servers)
+        return [
+            Row(id=str(i), rpc_addr=str(a), is_leader=bool(leader))
+            for i, a, leader in self._servers
+        ]
 
     # -- SQL surface -------------------------------------------------------
 

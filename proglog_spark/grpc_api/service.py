@@ -95,7 +95,7 @@ class LogService:
     def get_servers(self, subject: str, request: bytes) -> bytes:
         wire.GetServersRequest.decode(request)  # validate framing
         try:
-            rows = self.engine.get_servers(subject).collect()
+            rows = self.engine.get_servers(subject)
         except PermissionDeniedError as e:
             # consume-gated like Consume itself (server.go:138-143's
             # authorize-first contract): denial is PERMISSION_DENIED

@@ -19,7 +19,7 @@ Three recipes:
   reference's consume surface feeding the extension operators).
 
 Each returns accounting DataFrames rather than printing — pipelines
-are library calls, observability rides `plans/observe.py` if wanted.
+are library calls.
 """
 
 from __future__ import annotations

@@ -6,7 +6,6 @@ from proglog_spark.plans.audit import (
     pushed_filters,
     read_schema,
 )
-from proglog_spark.plans.observe import with_audit
 
 __all__ = [
     "assert_no_shuffle",
@@ -15,5 +14,4 @@ __all__ = [
     "optimized_plan",
     "pushed_filters",
     "read_schema",
-    "with_audit",
 ]

@@ -112,6 +112,10 @@ class HttpLogServer:
 
             def _body_json(self) -> dict:
                 n = int(self.headers.get("Content-Length") or 0)
+                if n < 0:
+                    # rfile.read(-1) would block until the client
+                    # half-closes, then parse whatever arrived
+                    raise ValueError(f"negative Content-Length {n}")
                 if n == 0:
                     return {}
                 return json.loads(self.rfile.read(n) or b"{}")
@@ -168,10 +172,8 @@ class HttpLogServer:
                 try:
                     url = urlparse(self.path)
                     if url.path == "/servers":
-                        with outer._lock:
-                            rows = outer.engine.get_servers(
-                                self._subject()
-                            ).collect()
+                        # a constant catalog: no engine state to lock
+                        rows = outer.engine.get_servers(self._subject())
                         self._reply(
                             200,
                             {"servers": [r.asDict() for r in rows]},

@@ -58,6 +58,13 @@ def quiet_expected_aborts(srv, *extra_classes):
     srv._server.handle_error = _handle_error
 
 
+class NoSpark:
+    """A ``spark`` stand-in whose every attribute access raises."""
+
+    def __getattribute__(self, name):
+        raise AssertionError(f"spark.{name} touched")
+
+
 def raw_hadoop_store(spark, path):
     """The Hadoop store over a local dir, through Hadoop's raw local FS
     (no ``.crc`` sidecars, so files planted with plain ``open`` stay

@@ -177,221 +177,73 @@ def test_bench_stdout_line_stays_small():
 
 
 def test_bench_canary_and_cold_families_name_real_queries():
-    """Every canary / cold-family member must be a registered query —
-    a rename that silently drops one from the inflation factor or the
-    cold report is the 'silent cap reads as full coverage' failure."""
+    """Every cold-family member must be a registered query — a rename
+    that silently drops one from the cold report is the 'silent cap
+    reads as full coverage' failure."""
     import bench
     from proglog_spark.queries import REGISTRY
 
-    assert set(bench.CANARY_QUIET_REF) == {"start", "end"}
-    # both phases must pin the SAME subset (the two passes time the
-    # same queries; a name present in one phase only would silently
-    # drop out of that phase's median)
-    assert set(bench.CANARY_QUIET_REF["start"]) == set(
-        bench.CANARY_QUIET_REF["end"]
-    )
-    for phase, refs in bench.CANARY_QUIET_REF.items():
-        for name, ref in refs.items():
-            assert name in REGISTRY, f"{phase}:{name}"
-            assert ref > 0, f"{phase}:{name}"
     for fam, members in bench.COLD_FAMILIES.items():
         for name in members:
             assert name in REGISTRY, f"{fam}:{name}"
 
 
-def test_bench_canary_inflation_median():
-    """The inflation factor is the MEDIAN of measured/pinned ratios
-    vs the measured pass's OWN phase references (VERDICT-r9 #2 —
-    the start pass reads ~20% high against end-of-suite numbers even
-    warm, so each phase pins its own quiet-run pass), robust to a
-    single outlier canary, None when nothing measured."""
-    import bench
+_RECORD_PROBE = """
+import json, sys
+import bench
+from proglog_spark import queries as q
 
-    for phase in ("start", "end"):
-        refs = bench.CANARY_QUIET_REF[phase]
-        names = sorted(refs)
-        # all exactly at reference -> 1.0 (the "quiet machine reads
-        # ~1.0 at BOTH ends" property the per-phase refs exist for)
-        assert bench._canary_inflation(dict(refs), phase) == 1.0
-        # one wild outlier barely moves the median
-        measured = dict(refs)
-        measured[names[0]] = refs[names[0]] * 100
-        assert bench._canary_inflation(measured, phase) == 1.0
-        # uniform 2x throttling -> 2.0
-        assert bench._canary_inflation(
-            {n: refs[n] * 2 for n in names}, phase
-        ) == 2.0
-        assert bench._canary_inflation({}, phase) is None
+spark = bench.session("2")
+listener = bench._progress_listener()
+spark.streams.addListener(listener)
+fns = q.queries()
+names = ["tpch_q1_pricing"] * 3 + ["events_dedup_streamed"]
+print(json.dumps(
+    [bench.time_query(spark, n, fns[n], sys.argv[1], listener)[1] for n in names]
+))
+spark.stop()
+"""
 
 
-def test_bench_canary_spread_discriminates_structural():
-    """Uniform machine load keeps the max/min ratio spread at 1.0;
-    one diverging canary pushes the spread past the band and NAMES
-    the outlier (VERDICT-r9 #3 — a regression in a canary query must
-    not masquerade as machine load)."""
-    import bench
+def test_bench_record_counts_one_call(sf_dir):
+    """bench.time_query runs every call under a job group of its own,
+    so the third run of a query reports no more jobs than the first (a
+    group shared across calls would report the sum of all three), and
+    a streamed gate's record carries its micro-batches. It runs in the
+    bench's own session, whose status store keeps every stage."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
 
-    refs = bench.CANARY_QUIET_REF["end"]
-    names = sorted(refs)
-    # uniform 3x throttling: every ratio identical -> spread 1.0
-    spread = bench._canary_spread({n: refs[n] * 3 for n in names}, "end")
-    assert spread == (1.0, spread[1])
-    # one query 2.5x, rest at reference -> spread 2.5, outlier named
-    measured = dict(refs)
-    measured[names[2]] = refs[names[2]] * 2.5
-    spread = bench._canary_spread(measured, "end")
-    assert spread == (2.5, names[2])
-    assert spread[0] > bench.CANARY_SPREAD_BAND
-    # one query FASTER (plan improvement / stale ref) under uniform
-    # 1.2x load: the fast one is the outlier — naming the max-ratio
-    # query would blame an innocent one
-    measured = {n: refs[n] * 1.2 for n in names}
-    measured[names[1]] = refs[names[1]] * 0.4
-    spread = bench._canary_spread(measured, "end")
-    assert spread == (3.0, names[1])
-    # fewer than two measured -> None
-    assert bench._canary_spread({names[0]: refs[names[0]]}, "end") is None
-    assert bench._canary_spread({}, "end") is None
-
-
-def test_bench_noisier_run_does_not_clobber():
-    """A full-suite rerun whose end-pass canary reads meaningfully
-    worse than the committed artifact's must divert (VERDICT-r9 #4 —
-    the driver's loaded run must not replace a quiet round-close
-    map); a different query surface always replaces; the guard only
-    applies between SAME-CODE runs (VERDICT-r11 #3: a changed git
-    revision always replaces, so a genuine regression lands)."""
-    import bench
-
-    quiet = {"n_queries": 201, "git_head": "abc1234",
-             "canary": {"inflation_end": 1.06}}
-    noisy = {"n_queries": 201, "git_head": "abc1234",
-             "canary": {"inflation_end": 1.32}}
-    assert bench._noisier_than_committed(noisy, quiet) is not None
-    # VERDICT-r11 #3: the quietest-known contract is scoped to reruns
-    # of the SAME code — a run of CHANGED code always replaces, even
-    # when noisier (a real plan regression must land in the map), and
-    # an artifact that predates the git_head field is always replaced
-    changed = dict(noisy, git_head="def5678")
-    assert bench._noisier_than_committed(changed, quiet) is None
-    # r12: EXCEPT when the rerun is MACHINE-flagged and the committed
-    # map is QUIET — the flag is the canary's own statement that the
-    # delta is uniform external load, so it must not displace a quiet
-    # map even across revisions (a docs-only commit changes git_head);
-    # QUIET and STRUCTURAL runs of changed code still always replace
-    quiet_flagged = {"n_queries": 201, "sf": "0.1", "git_head": "abc1234",
-                     "canary": {"inflation_end": 1.01, "flag": "QUIET"}}
-    machine_new_code = {"n_queries": 201, "sf": "0.1", "git_head": "zzz9",
-                        "canary": {"inflation_end": 1.3, "flag": "MACHINE"}}
-    assert bench._noisier_than_committed(machine_new_code, quiet_flagged)
-    structural_new_code = dict(
-        machine_new_code,
-        canary={"inflation_end": 1.0, "flag": "STRUCTURAL(tpch_q1)"},
+    out = subprocess.run(
+        [sys.executable, "-c", _RECORD_PROBE, sf_dir],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        timeout=600,
     )
-    assert (
-        bench._noisier_than_committed(structural_new_code, quiet_flagged)
-        is None
-    )
-    # r12: same-code is decided by the measured-SOURCE digest when both
-    # artifacts carry it — a docs-only commit moves git_head but not
-    # code_rev, so the quietest-known guard still applies; a differing
-    # code_rev always replaces
-    prior_cr = {"n_queries": 201, "sf": "0.1", "git_head": "doc1",
-                "code_rev": "c0de", "value": 300.0,
-                "canary": {"inflation_end": 1.0, "flag": "QUIET"}}
-    rerun_docs_moved = {"n_queries": 201, "sf": "0.1", "git_head": "doc2",
-                        "code_rev": "c0de", "value": 400.0,
-                        "canary": {"inflation_end": 1.1, "flag": "QUIET"}}
-    assert bench._noisier_than_committed(rerun_docs_moved, prior_cr)
-    rerun_code_moved = dict(rerun_docs_moved, code_rev="feed")
-    assert bench._noisier_than_committed(rerun_code_moved, prior_cr) is None
-    # _code_rev is deterministic and ignores non-source files
+    assert out.returncode == 0, out.stderr[-3000:]
+    *runs, gate = json.loads(out.stdout.splitlines()[-1])
+    assert runs[0]["jobs"] > 0 and runs[0]["rows"] > 0
+    assert runs[2]["jobs"] <= runs[0]["jobs"]
+    assert gate["micro_batch_jobs"] >= 1 and len(gate["batches"]) >= 1
+    assert gate["jobs"] >= gate["micro_batch_jobs"]
+
+
+def test_bench_artifact_is_keyed_by_sf_and_cores():
+    """One rule names the artifact: the sf0.1 map at 32 cores keeps
+    bench_queries.json, every other scale factor or core count gets a
+    file of its own, so runs that cannot be compared never overwrite
+    each other. The code digest stored beside them is deterministic."""
+    import os
+
+    import bench
+
+    def name(sf, cpus):
+        return os.path.basename(bench.artifact_path(sf, cpus))
+
+    assert name("0.1", "32") == "bench_queries.json"
+    assert name("0.1", "4") == "bench_queries.sf0.1.c4.json"
+    assert name("0.01", "32") == "bench_queries.sf0.01.c32.json"
     assert bench._code_rev() == bench._code_rev()
-    legacy_prior = {"n_queries": 201, "canary": {"inflation_end": 1.06}}
-    assert bench._noisier_than_committed(noisy, legacy_prior) is None
-    # a full run at a DIFFERENT sf (canary skipped there) must never
-    # replace the canonical sf0.1 artifact, whatever its n_queries
-    sf_committed = {"n_queries": 201, "sf": "0.1",
-                    "canary": {"inflation_end": 1.06}}
-    other_sf = {"n_queries": 201, "sf": "0.01"}
-    assert bench._noisier_than_committed(other_sf, sf_committed) is not None
-    assert (
-        bench._noisier_than_committed(
-            {"n_queries": 205, "sf": "0.01"}, sf_committed
-        )
-        is not None
-    )
-    # same sf, stale surface -> replaced as before
-    assert (
-        bench._noisier_than_committed(
-            {"n_queries": 205, "sf": "0.1"}, sf_committed
-        )
-        is None
-    )
-    # quieter (or equal within tolerance) overwrites
-    assert bench._noisier_than_committed(quiet, noisy) is None
-    assert bench._noisier_than_committed(quiet, dict(quiet)) is None
-    # stale surface (different n_queries) always overwrites
-    assert (
-        bench._noisier_than_committed(
-            {"n_queries": 205, "canary": {"inflation_end": 2.0}}, quiet
-        )
-        is None
-    )
-    # no prior artifact / no canary on either side -> overwrite
-    assert bench._noisier_than_committed(noisy, {}) is None
-    assert (
-        bench._noisier_than_committed({"n_queries": 201}, quiet) is None
-    )
-
-
-def test_bench_gate_until_quiet(monkeypatch):
-    """The round-close gate (VERDICT-r10 #2) probes with 3 solo canary
-    passes and takes the BEST pass per attempt: it proceeds on the
-    first quiet attempt, retries on loud readings, and after
-    exhausting retries still proceeds (the no-clobber guard diverts a
-    noisy result) — the command must always produce an artifact."""
-    import bench
-
-    refs = bench.CANARY_QUIET_REF["end"]
-    quiet_pass = dict(refs)  # inflation exactly 1.0
-    loud_pass = {n: v * 2 for n, v in refs.items()}  # inflation 2.0
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_GATE", "3")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_GATE_WAIT", "0")
-
-    def fake_runner(passes):
-        it = iter(passes)
-        return lambda spark, sf_dir, fns: next(it)
-
-    # quiet on the very first attempt: one probe recorded, no retry
-    monkeypatch.setattr(bench, "_run_canary", fake_runner([quiet_pass] * 3))
-    rec = bench._gate_until_quiet(None, "sf", {})
-    assert rec["proceeded"] == "quiet"
-    assert rec["probes"] == [1.0]
-    assert rec["threshold"] == 1.3
-    # best-of-3 within one attempt: two loud passes + one quiet pass
-    # still reads quiet (a stray interrupt must not burn an attempt)
-    monkeypatch.setattr(
-        bench, "_run_canary", fake_runner([loud_pass, loud_pass, quiet_pass])
-    )
-    rec = bench._gate_until_quiet(None, "sf", {})
-    assert rec["proceeded"] == "quiet"
-    assert rec["probes"] == [1.0]
-    # loud attempt then quiet attempt: two probes, proceeds on #2
-    monkeypatch.setattr(
-        bench, "_run_canary", fake_runner([loud_pass] * 3 + [quiet_pass] * 3)
-    )
-    rec = bench._gate_until_quiet(None, "sf", {})
-    assert rec["proceeded"] == "quiet"
-    assert rec["probes"] == [2.0, 1.0]
-    # every attempt loud: retries exhausted, proceeds anyway
-    monkeypatch.setattr(bench, "_run_canary", fake_runner([loud_pass] * 9))
-    rec = bench._gate_until_quiet(None, "sf", {})
-    assert rec["proceeded"] == "exhausted"
-    assert rec["probes"] == [2.0, 2.0, 2.0]
-    # threshold override honored
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_GATE_MAX", "2.5")
-    monkeypatch.setattr(bench, "_run_canary", fake_runner([loud_pass] * 3))
-    rec = bench._gate_until_quiet(None, "sf", {})
-    assert rec["proceeded"] == "quiet" and rec["threshold"] == 2.5

@@ -9,11 +9,12 @@ from __future__ import annotations
 
 import base64
 import json
+import socket
 import urllib.request
 from urllib.error import HTTPError
 
 import pytest
-from conftest import quiet_expected_aborts
+from conftest import NoSpark, quiet_expected_aborts
 
 from proglog_spark.engine import Engine
 from proglog_spark.server import HttpLogServer
@@ -120,6 +121,46 @@ def test_servers_metadata(served_engine):
     assert st == 200
     leaders = [s for s in out["servers"] if s["is_leader"]]
     assert len(leaders) == 1 and {"id", "rpc_addr"} <= set(leaders[0])
+
+
+def test_servers_need_no_spark(tmp_path):
+    """GET /servers answers from the engine's validated catalog: an
+    Engine on a ``spark`` stand-in that raises on any use serves it."""
+    from proglog_spark.cluster import CANONICAL_SERVERS
+
+    engine = Engine.create(NoSpark(), str(tmp_path / "log"), bucket_size=8)
+    srv = HttpLogServer(engine)
+    quiet_expected_aborts(srv)
+    _, port = srv.start()
+    try:
+        st, out = _call(port, "GET", "/servers")
+    finally:
+        srv.stop()
+        engine.log.close()
+    assert st == 200
+    assert out["servers"] == [
+        {"id": i, "rpc_addr": a, "is_leader": leader}
+        for i, a, leader in CANONICAL_SERVERS
+    ]
+
+
+def test_bad_content_length_is_400_at_once(served_engine):
+    """A negative or non-integer Content-Length is refused before any
+    read: taken as "read to EOF", a negative length would hold the
+    request until the client half-closes and then append its body."""
+    engine, port = served_engine
+    before = engine.highest_offset()
+    body = json.dumps({"record": {"value": _b64("late")}}).encode()
+    for length in (b"-1", b"ten"):
+        with socket.create_connection(("127.0.0.1", port), timeout=5) as s:
+            s.sendall(
+                b"POST / HTTP/1.1\r\nHost: t\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Content-Length: " + length + b"\r\n\r\n" + body
+            )
+            status = s.makefile("rb").readline()
+        assert status.split()[1] == b"400", (length, status)
+    assert engine.highest_offset() == before
 
 
 def test_malformed_request_is_400(served_engine):

@@ -11,7 +11,7 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import on_store
+from conftest import NoSpark, on_store
 from proglog_spark import LogTable, OffsetOutOfRangeError
 from proglog_spark.log.offsets import assign_dense_offsets
 
@@ -539,13 +539,6 @@ def test_append_and_read_cost_stays_flat(spark, tmp_path, monkeypatch):
         assert counts["opened"] == 0, (off, counts["opened"])
 
 
-class _NoSpark:
-    """A ``spark`` stand-in whose every attribute access raises."""
-
-    def __getattribute__(self, name):
-        raise AssertionError(f"spark.{name} touched")
-
-
 def test_local_log_needs_no_spark(tmp_path):
     """On a local path the log's serving surface never touches the
     session: create, open, append, read, bounds, count, consume_iter
@@ -553,7 +546,7 @@ def test_local_log_needs_no_spark(tmp_path):
     import threading
 
     path = str(tmp_path / "log")
-    no_spark = _NoSpark()
+    no_spark = NoSpark()
     log = LogTable.create(no_spark, path, bucket_size=4)
     assert log.append(iter(["a", "b", "c", "d", "e"])) == (0, 4)
     log.close()
@@ -594,7 +587,7 @@ def test_consume_iter_idle_polls_open_no_dataset(tmp_path, monkeypatch):
 
     import pyarrow.dataset as pads
 
-    log = LogTable.create(_NoSpark(), str(tmp_path / "log"), bucket_size=1 << 20)
+    log = LogTable.create(NoSpark(), str(tmp_path / "log"), bucket_size=1 << 20)
     log.append([f"r{i}" for i in range(3)])
     counts = {"opened": 0, "polls": 0}
     dataset, highest = pads.dataset, log.highest_offset
@@ -644,7 +637,7 @@ def test_footer_without_offset_stats_names_the_file(tmp_path):
     from proglog_spark.errors import ProglogError
 
     path = str(tmp_path / "log")
-    log = LogTable.create(_NoSpark(), path, bucket_size=4)
+    log = LogTable.create(NoSpark(), path, bucket_size=4)
     bad = os.path.join(path, "bucket=0", "nostats.parquet")
     os.makedirs(os.path.dirname(bad))
     table = pa.table(

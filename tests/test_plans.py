@@ -491,27 +491,6 @@ def test_bloom_probe_filters_before_join_exchange(spark, sf_dir):
     assert jp.index("shiftright") > jp.index(SHUFFLE_MARKER)
 
 
-def test_observe_audit_rides_the_same_pass(spark, sf_dir, tmp_path):
-    """Observation metrics (rows / null counts / domain violations)
-    are computed by the SAME job that runs the query — the write
-    below is the only action, and the audit bundle arrives with it."""
-    from proglog_spark.plans.observe import with_audit
-
-    e = load_table(spark, sf_dir, "events")
-    observed, obs = with_audit(
-        e.where(F.col("event_type") != "zzz"),
-        cols=["user_id", "props"],
-        expect="value >= -1000000",
-    )
-    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-
-    audit = obs.get
-    assert audit["rows"] == e.count()
-    assert audit["nulls_user_id"] == 0
-    assert audit["nulls_props"] == e.where(F.col("props").isNull()).count()
-    assert audit["violations"] == e.where(~F.expr("value >= -1000000")).count()
-
-
 def test_chunker_is_zero_shuffle_narrow_plan(spark, sf_dir):
     """docs_chunk_spans before its presentation sort: length/sequence/
     explode/substring must compose into one codegen stage with no

@@ -2,14 +2,16 @@
 """Per-query optimization profiler (r11).
 
 Times one or more declared queries in isolation with the bench's
-session + warmup shape, optionally repeating with the session cache
-cleared (cold) or warm (ride), and writes the
-``.explain("formatted")`` output to plans/r11/<query>_<tag>.txt.
+session shape and its warmup (``bench.warm_up``), optionally
+repeating with the session cache cleared (cold) or warm (ride), and
+writes the ``.explain("formatted")`` output to
+plans/r11/<query>_<tag>.txt.
 
 Each rep runs every named query once, in order, so rep 1 onwards is a
 warm re-run of the whole list. Every line also gives the generated
-classes the query compiled and their Janino milliseconds: a query
-that still compiles on a warm rep either has code that changes on
+classes the query compiled and their Janino milliseconds, read by
+``bench.compile_counters`` as the bench's layer record reads them: a
+query that still compiles on a warm rep either has code that changes on
 every run (a literal that differs per run, or an AQE stage id in a
 class name) or was evicted from the session's generated-class cache.
 
@@ -24,14 +26,13 @@ scratch instrument for the optimization rounds.
 from __future__ import annotations
 
 import argparse
-
-import pandas as pd
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from proglog_spark import queries as q  # noqa: E402
 from proglog_spark.session import build_session  # noqa: E402
 
@@ -55,24 +56,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # bench-equivalent warmup (JVM, IO cache, Python workers, codecs)
-    from pyspark.sql import functions as F
-
-    from proglog_spark.sources.tables import TABLES, load_table
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLES:
-        load_table(spark, args.sf, t).count()
-
-    @F.pandas_udf("long")
-    def _noop(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(10_000).repartition(int(cpus)).select(_noop("id")).collect()
-    spark.sql(
-        "SELECT from_json(to_json(named_struct('a', id)), 'a BIGINT'), "
-        "unbase64(base64(CAST('x' AS BINARY))) FROM range(1)"
-    ).collect()
+    bench.warm_up(spark, args.sf, int(cpus))
 
     fns = q.queries()
     names = list(fns) if args.queries == "all" else args.queries.split(",")
@@ -84,25 +68,18 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", args.round,
     )
-    # one JVM runs driver and executors in local mode, so these count
-    # every class the session compiles; compileTime() is the exact
-    # Janino total in ns, the histogram only keeps a sample of times
-    jvm = spark._jvm
-    compilations = jvm.org.apache.spark.metrics.source.CodegenMetrics \
-        .METRIC_COMPILATION_TIME()
-    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     for rep in range(args.reps):
         rep_classes, rep_ms, rep_s = 0, 0.0, 0.0
         for name in names:
             if args.cold:
                 spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"profile:{name}:rep{rep}")
-            c0, ns0 = compilations.getCount(), generator.compileTime()
+            c0, ms0 = bench.compile_counters(spark)
             t0 = time.perf_counter()
             rows = fns[name](spark, args.sf).collect()
             dt = time.perf_counter() - t0
-            classes = compilations.getCount() - c0
-            ms = (generator.compileTime() - ns0) / 1e6
+            c1, ms1 = bench.compile_counters(spark)
+            classes, ms = c1 - c0, ms1 - ms0
             rep_classes, rep_ms, rep_s = rep_classes + classes, rep_ms + ms, rep_s + dt
             print(f"{name} rep{rep} {'cold' if args.cold else 'warm'}: "
                   f"{dt:.3f}s rows={len(rows)} "

@@ -12,8 +12,6 @@ Usage: python tools/profile_stream.py --queries q1,q2 [--sf DIR] [--reps 1]
 from __future__ import annotations
 
 import argparse
-
-import pandas as pd
 import json
 import os
 import sys
@@ -21,6 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from proglog_spark import queries as q  # noqa: E402
 from proglog_spark.session import build_session  # noqa: E402
 
@@ -64,24 +63,7 @@ def main() -> None:
 
     spark.streams.addListener(L())
 
-    from pyspark.sql import functions as F
-
-    from proglog_spark.sources.tables import TABLES, load_table
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLES:
-        load_table(spark, args.sf, t).count()
-
-    @F.pandas_udf("long")
-    def _noop(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(10_000).repartition(int(cpus)).select(_noop("id")).collect()
-
-    # absorb first-stateful-stream fixed cost like bench.py does
-    import bench
-
-    bench._streaming_warmup(spark)
+    bench.warm_up(spark, args.sf, int(cpus))
 
     fns = q.queries()
     for name in args.queries.split(","):
