@@ -11,10 +11,11 @@ Each query is timed end-to-end (plan + execute + collect), after one
 untimed warmup to absorb JVM/codegen startup. Results are
 materialized with ``collect()`` exactly as the driver's correctness
 gate does. After each wall is taken, the query's layer record is read:
-its Spark jobs, stages, tasks and executor time, shuffle and spill
-bytes, Catalyst phases, join output rows, generated classes compiled
-and, for a streamed gate, its micro-batches. The per-query walls and
-records go to the artifact that ``artifact_path`` names.
+its Spark jobs, stages, tasks and executor time, the CPU of its Python
+workers, shuffle and spill bytes, Catalyst phases, join output rows,
+generated classes compiled and, for a streamed gate, its
+micro-batches. The per-query walls and records go to the artifact that
+``artifact_path`` names.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ sys.path += [os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "tools")]
 
 from proglog_spark import queries as q  # noqa: E402
 from proglog_spark.session import build_session  # noqa: E402
+import stats  # noqa: E402
 from query_workloads import (  # noqa: E402
     _jobs_counters,
     _plan_counters,
@@ -188,6 +190,18 @@ def compile_counters(spark) -> tuple[int, float]:
     return classes, ns / 1e6
 
 
+def python_cpu_ms(spark) -> float | None:
+    """CPU ms so far of the Spark JVM's child process trees: the Python
+    worker daemon and the workers it forked, live or reaped. None
+    outside a local master, whose workers run on other hosts."""
+    if not spark.sparkContext.master.startswith("local"):
+        return None
+    jvm = stats.java_descendant(os.getpid())
+    if jvm is None:
+        return None
+    return 1000 * sum(stats.tree_cpu_s(c) for c in stats._children(jvm))
+
+
 def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict]:
     """Run one query, time its plan build, execute and ``collect``, and
     return (wall seconds, layer record). The query runs under a job
@@ -201,12 +215,14 @@ def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict
     sc.setJobGroup(group, name)
     n_started, n_batches = len(listener.started), len(listener.batches)
     classes0, janino0 = compile_counters(spark)
+    py0 = python_cpu_ms(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
     rows = df.collect()
     wall = time.perf_counter() - t0
     classes, janino = compile_counters(spark)
+    py1 = python_cpu_ms(spark)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     runs = listener.started[n_started:]
     rec = {"plan_build_s": round(t1 - t0, 4), "rows": len(rows)}
@@ -215,6 +231,7 @@ def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict
         "cpu_ms": round(rec["cpu_ms"], 1),
         "compiled_classes": classes - classes0,
         "janino_ms": round(janino - janino0, 1),
+        "python_cpu_ms": None if py0 is None else round(py1 - py0, 1),
     }
     if runs:
         rec["micro_batch_jobs"] = _jobs_counters(spark, runs)["jobs"]

@@ -38,10 +38,12 @@ Routes:
   (O12/O13 + density count).
 
 Denied subjects get 403 ``{"error": "PERMISSION_DENIED"}``
-(`server_test.go:286-308` behavior). One lock serializes all engine
-calls: the log is single-writer by contract (SURVEY §7.3.1) and the
-Spark driver session is shared, so the server is a thin serialized
-edge — throughput belongs to batch appends, not request fan-in.
+(`server_test.go:286-308` behavior). A body over ``MAX_BODY_BYTES``
+gets 413 ``{"error": "PAYLOAD_TOO_LARGE:..."}`` before it is read. One
+lock serializes all engine calls: the log is single-writer by contract
+(SURVEY §7.3.1) and the Spark driver session is shared, so the server
+is a thin serialized edge — throughput belongs to batch appends, not
+request fan-in.
 """
 
 from __future__ import annotations
@@ -57,6 +59,14 @@ from proglog_spark.errors import OffsetOutOfRangeError, PermissionDeniedError
 from proglog_spark.tlsconfig import TLSConfig, build_ssl_context, peer_common_name
 
 DEFAULT_SUBJECT = "root"
+
+# the largest request body read into memory: grpc's default receive
+# limit, so neither edge takes a message the other would refuse
+MAX_BODY_BYTES = 4 * 1024 * 1024
+
+
+class _BodyTooLarge(Exception):
+    pass
 
 
 class HttpLogServer:
@@ -116,6 +126,11 @@ class HttpLogServer:
                     # rfile.read(-1) would block until the client
                     # half-closes, then parse whatever arrived
                     raise ValueError(f"negative Content-Length {n}")
+                if n > MAX_BODY_BYTES:
+                    # refused unread, so the rest of the stream is not
+                    # a request: close the connection after the reply
+                    self.close_connection = True
+                    raise _BodyTooLarge(f"{n} > {MAX_BODY_BYTES}")
                 if n == 0:
                     return {}
                 return json.loads(self.rfile.read(n) or b"{}")
@@ -158,6 +173,8 @@ class HttpLogServer:
                         self._reply(200, {"offset": first})
                 except PermissionDeniedError as e:
                     self._reply(403, {"error": str(e)})
+                except _BodyTooLarge as e:
+                    self._reply(413, {"error": f"PAYLOAD_TOO_LARGE:{e}"})
                 except (KeyError, TypeError, ValueError, json.JSONDecodeError) as e:
                     # TypeError covers well-formed JSON of the wrong
                     # SHAPE (array body, non-string value) — a client
@@ -224,6 +241,8 @@ class HttpLogServer:
                     self._reply(404, {"error": str(e)})
                 except PermissionDeniedError as e:
                     self._reply(403, {"error": str(e)})
+                except _BodyTooLarge as e:
+                    self._reply(413, {"error": f"PAYLOAD_TOO_LARGE:{e}"})
                 except (KeyError, TypeError, ValueError, json.JSONDecodeError) as e:
                     # TypeError covers well-formed JSON of the wrong
                     # SHAPE (array body, non-string value) — a client

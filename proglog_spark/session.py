@@ -16,6 +16,15 @@ way:
   default JVM-wide LRU of 100 classes is smaller than one pass's
   working set, so every class was evicted before its next use and
   each warm re-run paid Janino (and then HotSpot) again.
+- Generated class names without the plan's id. AQE numbers its query
+  stages in completion order, and with the id in the name a warm
+  re-run of the same plan compiled new classes.
+- On a local master, Python workers forked by ``worker_daemon``, which
+  re-reads a zip directory only when the archive changed (the stock
+  daemon's workers re-read ``pyspark.zip`` and the ``spark-core`` jar
+  on every task). It is left unset on any other master: there the
+  package arrives with ``--py-files`` after the daemon has started, so
+  the daemon could not import it.
 """
 
 from __future__ import annotations
@@ -38,6 +47,14 @@ def _env_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def worker_conf(master: str) -> dict[str, str]:
+    """Python-worker settings for ``master``: the zip-caching daemon on
+    a local master, nothing elsewhere (see the module docstring)."""
+    if master == "local" or master.startswith("local["):
+        return {"spark.python.daemon.module": "proglog_spark.worker_daemon"}
+    return {}
+
+
 def build_session(
     app_name: str = "proglog_spark",
     master: str | None = None,
@@ -50,17 +67,12 @@ def build_session(
     is configured; on a real cluster, leave it unset and submit through
     spark-submit so the cluster manager decides.
     """
-    builder = SparkSession.builder.appName(app_name)
-    env_master = os.environ.get("SPARK_MASTER_URL")
-    if master is not None:
-        builder = builder.master(master)
-    elif env_master:
+    if master is None:
         # the env var's VALUE is the master URL — pass it through
         # (merely skipping the local default would crash getOrCreate
         # with 'A master URL must be set' outside spark-submit)
-        builder = builder.master(env_master)
-    else:
-        builder = builder.master(f"local[{_env_cpus()}]")
+        master = os.environ.get("SPARK_MASTER_URL") or f"local[{_env_cpus()}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
 
     conf = {
         "spark.sql.session.timeZone": "UTC",
@@ -101,6 +113,12 @@ def build_session(
         # compiled 111 (tools/profile_query.py --queries all --reps 2,
         # BASELINE.md). 4,096 covers the working set with headroom.
         "spark.sql.codegen.cache.maxEntries": "4096",
+        # AQE numbers query stages in completion order, and the stage's
+        # id is part of each generated class name, so a warm re-run of
+        # an AQE plan compiled classes the cache already held under
+        # another name. Without the id, seven such queries compile 0
+        # classes on a warm run (ROADMAP "Fixed per-query costs").
+        "spark.sql.codegen.useIdInClassName": "false",
         # normalize common truthy/falsy spellings: Spark's boolean
         # conf parser rejects "1"/"yes" with an exception at startup
         "spark.ui.enabled": (
@@ -109,7 +127,7 @@ def build_session(
             in ("1", "true", "yes", "on")
             else "false"
         ),
-    }
+    } | worker_conf(master)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -231,6 +231,45 @@ def test_bench_record_counts_one_call(sf_dir):
     assert gate["jobs"] >= gate["micro_batch_jobs"]
 
 
+_PYTHON_CPU_PROBE = """
+import json, sys
+import bench
+from proglog_spark import queries as q
+
+spark = bench.session("2")
+listener = bench._progress_listener()
+fn = q.queries()["docs_media_meta"]
+print(json.dumps(bench.time_query(spark, "docs_media_meta", fn, sys.argv[1], listener)[1]))
+spark.stop()
+"""
+
+
+def test_bench_record_counts_python_worker_cpu(sf_dir):
+    """A pandas-UDF query's record carries the CPU its Python workers
+    used, read from the JVM's child process trees; off a local master,
+    where the workers run on other hosts, there is nothing to read."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+    from types import SimpleNamespace
+
+    import bench
+
+    yarn = SimpleNamespace(sparkContext=SimpleNamespace(master="yarn"))
+    assert bench.python_cpu_ms(yarn) is None
+
+    out = subprocess.run(
+        [sys.executable, "-c", _PYTHON_CPU_PROBE, sf_dir],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert json.loads(out.stdout.splitlines()[-1])["python_cpu_ms"] > 0
+
+
 def test_bench_artifact_is_keyed_by_sf_and_cores():
     """One rule names the artifact: the sf0.1 map at 32 cores keeps
     bench_queries.json, every other scale factor or core count gets a

@@ -163,6 +163,23 @@ def test_bad_content_length_is_400_at_once(served_engine):
     assert engine.highest_offset() == before
 
 
+def test_oversized_body_is_413_unread(served_engine):
+    """A Content-Length over the cap is refused before the body is
+    read: the client sends the header alone, and the reply still comes
+    at once instead of after 4 MiB that never arrive."""
+    engine, port = served_engine
+    before = engine.highest_offset()
+    with socket.create_connection(("127.0.0.1", port), timeout=5) as s:
+        s.sendall(
+            b"POST / HTTP/1.1\r\nHost: t\r\n"
+            b"Content-Type: application/json\r\n"
+            b"Content-Length: %d\r\n\r\n" % (4 * 1024 * 1024 + 1)
+        )
+        status = s.makefile("rb").readline()
+    assert status.split()[1] == b"413", status
+    assert engine.highest_offset() == before
+
+
 def test_malformed_request_is_400(served_engine):
     _, port = served_engine
     with pytest.raises(HTTPError) as e:

@@ -14,6 +14,8 @@ classes the query compiled and their Janino milliseconds, read by
 query that still compiles on a warm rep either has code that changes on
 every run (a literal that differs per run, or an AQE stage id in a
 class name) or was evicted from the session's generated-class cache.
+Each line ends with the CPU the query's Python workers used
+(``bench.python_cpu_ms``).
 
 Usage:
   python tools/profile_query.py --queries name1,name2|all [--tag before]
@@ -75,15 +77,18 @@ def main() -> None:
                 spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"profile:{name}:rep{rep}")
             c0, ms0 = bench.compile_counters(spark)
+            py0 = bench.python_cpu_ms(spark)
             t0 = time.perf_counter()
             rows = fns[name](spark, args.sf).collect()
             dt = time.perf_counter() - t0
             c1, ms1 = bench.compile_counters(spark)
+            py = None if py0 is None else bench.python_cpu_ms(spark) - py0
             classes, ms = c1 - c0, ms1 - ms0
             rep_classes, rep_ms, rep_s = rep_classes + classes, rep_ms + ms, rep_s + dt
             print(f"{name} rep{rep} {'cold' if args.cold else 'warm'}: "
                   f"{dt:.3f}s rows={len(rows)} "
-                  f"compiled={classes} compile_ms={ms:.0f}")
+                  f"compiled={classes} compile_ms={ms:.0f} "
+                  f"python_cpu_ms={'n/a' if py is None else f'{py:.0f}'}")
         print(f"rep{rep} total: {rep_s:.1f}s compiled={rep_classes} "
               f"compile_ms={rep_ms:.0f}")
     for name in names:
