@@ -38,6 +38,17 @@ propagate. Any other scheme gets the Hadoop store, and those calls run
 as Spark jobs. Meta, lock, truncate and compaction swaps go through
 the store either way, and both stores keep one on-disk format.
 
+The local path keeps a footer index (each bucket's files with their
+row-group offset ranges, and the bucket list) and an LRU of decoded row
+groups. A handle re-lists the directories on each call, reading only
+footers it has not seen, except while it holds a writer lease it
+created, inside the lease's first half-life and with no write by any
+handle of this process since its index was last current: then no one
+else can commit, so it serves from memory, and its own native appends
+add their files, footers and row groups to the index and the LRU as
+they write them — the reference's in-memory segment list
+(internal/log/log.go:99-104), which it lists once at open.
+
 Concurrency contract: exactly one writer per LogTable path (the
 reference holds a per-log mutex, internal/log/log.go:81-82). The
 in-process half of that invariant is the caller's (like the
@@ -54,8 +65,12 @@ read-your-committed-writes.
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import json
 import os
+import threading
+import time
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -70,11 +85,7 @@ from proglog_spark.errors import (
 )
 from proglog_spark.log.offsets import assign_dense_offsets
 from proglog_spark.log.store import SUCCESS_MARKER_OPTION, open_store
-from proglog_spark.sources.datasource import (
-    _bucket_dirs,
-    _bucket_files,
-    _scan_rows,
-)
+from proglog_spark.sources.datasource import _bucket_dirs, _bucket_files
 
 RECORD_SCHEMA = T.StructType(
     [
@@ -92,6 +103,70 @@ _DATA_COLS = ["offset", "value", "term", "type"]
 # byte budget of the decoded row-group LRU behind native point reads;
 # a row group decoding to more than this is served but not kept
 _DECODED_CACHE_BYTES = 1 << 27  # 128 MiB in memory
+
+
+class _BucketIndex:
+    """Footer index of one bucket dir. ``files`` maps each committed
+    file to ``(n_rows, ((min, max) offset per row group, ...))``; every
+    row group is also kept sorted by first offset (``los``, ``spans`` of
+    ``(lo, hi, file, g)`` and ``reach``, the running max of ``hi``), so a
+    lookup bisects instead of walking the files. ``gen`` is the handle's
+    index generation the entry was listed in."""
+
+    __slots__ = ("files", "gen", "los", "spans", "reach")
+
+    def __init__(self, files: dict[str, tuple[int, tuple]], gen: int) -> None:
+        self.files = files
+        self.gen = gen
+        self.spans = sorted(
+            (lo, hi, path, g)
+            for path, (_, ranges) in files.items()
+            for g, (lo, hi) in enumerate(ranges)
+        )
+        self.los = [s[0] for s in self.spans]
+        self.reach = list(itertools.accumulate((s[1] for s in self.spans), max))
+
+    def add(self, path: str, entry: tuple[int, tuple]) -> None:
+        """Index a file a native append wrote: its offsets follow every
+        indexed one, so its row groups go at the end, O(1) each."""
+        self.files[path] = entry
+        for g, (lo, hi) in enumerate(entry[1]):
+            self.los.append(lo)
+            self.spans.append((lo, hi, path, g))
+            self.reach.append(max(hi, self.reach[-1]) if self.reach else hi)
+
+    def groups(self, lo: int, hi: int) -> list[tuple[str, int]]:
+        """``(file, row group)`` of every group whose range meets
+        [lo, hi], in first-offset order: bisect to the last group
+        starting at or before ``hi``, then step back while an earlier
+        group can still reach ``lo`` (Spark-written files may overlap)."""
+        out = []
+        i = bisect.bisect_right(self.los, hi) - 1
+        while i >= 0 and self.reach[i] >= lo:
+            if self.spans[i][1] >= lo:
+                out.append(self.spans[i][2:])
+            i -= 1
+        out.reverse()
+        return out
+
+    def bound(self, highest: bool) -> int | None:
+        if not self.spans:
+            return None
+        return self.reach[-1] if highest else self.los[0]
+
+
+def _footer_entry(meta, path: str) -> tuple[int, tuple]:
+    """``(n_rows, ((min, max) offset per row group, ...))`` from a
+    parquet footer; one without offset statistics raises ProglogError
+    naming the file."""
+    col = meta.schema.to_arrow_schema().get_field_index("offset")
+    ranges = []
+    for g in range(meta.num_row_groups):
+        stats = meta.row_group(g).column(col).statistics
+        if stats is None or not stats.has_min_max:
+            raise ProglogError(f"{path}: row group {g} has no offset statistics")
+        ranges.append((int(stats.min), int(stats.max)))
+    return meta.num_rows, tuple(ranges)
 
 
 class _PartialNativeAppend(RuntimeError):
@@ -147,16 +222,28 @@ class LogTable:
         # checkpoint identity that wrote last_produce_batch (None on
         # metas written before the marker was checkpoint-scoped)
         self.last_produce_marker: str | None = None
-        # footer index of the native read path, {bucket dir: {file:
-        # (n_rows, ((min, max) offset per row group, ...))}}: committed
-        # parquet files are immutable, so a footer is read once per file
-        # and a re-listed directory only adds or drops entries
-        self._footers: dict[str, dict[str, tuple[int, tuple]]] = {}
+        # footer index of the native read path, {bucket: _BucketIndex}:
+        # committed parquet files are immutable, so a footer is read
+        # once per file and a re-listed directory only adds or drops
+        # entries. _dirs is the bucket list, {bucket: dir}, listed in
+        # generation _dirs_gen.
+        self._footers: dict[int, _BucketIndex] = {}
+        self._dirs: dict[int, str] = {}
+        self._dirs_gen = -1
         # decoded row groups, {(file, row group): (sorted offsets,
         # offset-sorted table)}, LRU within _DECODED_CACHE_BYTES — the
         # mmap-page-cache analog for µs-class warm point reads
         self._decoded: dict[tuple[str, int], tuple] = {}
         self._decoded_bytes = 0
+        # whether the index may be served without re-listing (see
+        # _trusts_index): _synced is the store's write stamp it was
+        # last brought current at (None: never, or a fresh lock), and
+        # _gen the generation an entry must carry to be trusted. Index
+        # and LRU change under _index_lock: a ConsumeStream runs
+        # consume_iter on the writer's handle beside its appends.
+        self._synced: int | None = None
+        self._gen = 0
+        self._index_lock = threading.Lock()
         # cross-process writer lock state: _lock_owned ⇒ this instance
         # may mutate; _lock_created ⇒ it wrote the lock file and owes
         # the delete on close() (a same-pid sibling instance borrows
@@ -172,7 +259,6 @@ class LogTable:
         # mutating calls costs zero IO; _fenced_owner records a takeover
         # the heartbeat discovered so the next mutating call raises
         # before touching data.
-        import threading
         import uuid
 
         self._lock_token = uuid.uuid4().hex
@@ -281,6 +367,7 @@ class LogTable:
                 self._store.delete(name)
         self.next_offset_floor = self.initial_offset
         self._write_meta()
+        self._store.bump()
         self._highest = None
 
     # ------------------------------------------------------------------
@@ -494,6 +581,7 @@ class LogTable:
                         # vanished (manual cleanup): reassert ownership
                         if self._try_create_lock():
                             self._lock_created = True  # we now owe the delete
+                            self._drop_current()
                             self._lease_deadline = time.time() + self.lease_seconds
                             return True
                         continue
@@ -524,6 +612,7 @@ class LogTable:
                 # vanished (manual cleanup): reassert ownership
                 if self._try_create_lock():
                     self._lock_created = True
+                    self._drop_current()
                     self._lease_deadline = time.time() + self.lease_seconds
                     return True
                 owner = self._read_lock_owner()
@@ -653,6 +742,7 @@ class LogTable:
         for _ in range(3):
             if self._try_create_lock():
                 self._lock_owned = self._lock_created = True
+                self._drop_current()
                 self._fenced_owner = None  # a past fencing is history
                 self._lease_deadline = time.time() + self.lease_seconds
                 self._start_heartbeat()
@@ -669,6 +759,7 @@ class LogTable:
                     # create, not a borrow — own the delete and run the
                     # heartbeat; no sibling exists to do either
                     self._lock_created = True
+                    self._drop_current()
                     self._lease_deadline = time.time() + self.lease_seconds
                     self._start_heartbeat()
                     return
@@ -694,6 +785,7 @@ class LogTable:
             if steal or same_host_dead or expired:
                 if self._reclaim_lock(owner):
                     self._lock_owned = self._lock_created = True
+                    self._drop_current()
                     self._fenced_owner = None
                     self._lease_deadline = time.time() + self.lease_seconds
                     self._start_heartbeat()
@@ -756,9 +848,18 @@ class LogTable:
                 owner = self._read_lock_owner()
                 if owner is None or self._owner_is_self(owner):
                     self._store.delete(_LOCK_FILE)
-        self._footers.clear()
-        self._decoded.clear()
-        self._decoded_bytes = 0
+        with self._index_lock:
+            self._synced = None
+            self._footers.clear()
+            self._dirs, self._dirs_gen = {}, -1
+            self._decoded.clear()
+            self._decoded_bytes = 0
+
+    def _drop_current(self) -> None:
+        """A fresh lock: whatever another process did before it is not
+        in the index yet, so the next call re-lists."""
+        with self._index_lock:
+            self._synced = None
 
     def __enter__(self) -> "LogTable":
         return self
@@ -811,6 +912,7 @@ class LogTable:
             .partitionBy("bucket")
             .parquet(self.path)
         )
+        self._store.bump()
         last = base + n - 1
         self._highest = last
         return (base, last)
@@ -865,6 +967,7 @@ class LogTable:
             .partitionBy("bucket")
             .parquet(self.path)
         )
+        self._store.bump()
         self._highest = last
         return (base, last)
 
@@ -899,7 +1002,11 @@ class LogTable:
         readers skip dot-files, so a crash leaves only invisible junk
         (removed by the next open() or compaction). A failure before
         any rename raises as itself with nothing visible; after one,
-        it raises ``_PartialNativeAppend``."""
+        it raises ``_PartialNativeAppend``.
+
+        Each file's footer comes from the writer (``metadata_collector``)
+        and its table is kept, so once the renames are done the index and
+        the LRU take the new files without reading them back."""
         import uuid
 
         import pyarrow as pa
@@ -923,6 +1030,7 @@ class LogTable:
         # same per-record-durability contract as the reference's
         # Log.Append.
         pending: list[tuple[str, str]] = []
+        written = []  # (bucket, final path, footer entry, table) per file
         i = 0
         while i < n:
             off = base + i
@@ -952,8 +1060,11 @@ class LogTable:
                     kwargs["row_group_size"] = max(
                         self.row_group_bytes // avg, 1
                     )
-                pq.write_table(tbl, tmp, **kwargs)
-                pending.append((tmp, os.path.join(bdir, name)))
+                footer: list = []
+                pq.write_table(tbl, tmp, metadata_collector=footer, **kwargs)
+                final = os.path.join(bdir, name)
+                pending.append((tmp, final))
+                written.append((bucket, final, _footer_entry(footer[0], final), tbl))
                 j = k
             i = bucket_end
         renamed = 0
@@ -962,6 +1073,7 @@ class LogTable:
                 os.replace(tmp, final)
                 renamed += 1
         except Exception as e:
+            self._index_written(written[:renamed], complete=False)
             if renamed == 0:
                 for tmp, _ in pending:
                     try:
@@ -977,6 +1089,34 @@ class LogTable:
                 f"native append made {renamed}/{len(pending)} files "
                 f"visible before failing: {e}"
             ) from e
+        self._index_written(written, complete=True)
+
+    def _index_written(self, written: list, complete: bool) -> None:
+        """Record a native append's renamed files: bump the write stamp,
+        put their row groups in the LRU and, when the index was current
+        before this append and the whole batch landed, add the files to
+        their bucket entries and the bucket list and stay current."""
+        with self._index_lock:
+            current = complete and self._synced == self._store.stamp()
+            stamp = self._store.bump()
+            for bucket, path, entry, tbl in written:
+                first = entry[1][0][0]  # the table's offsets are dense
+                for g, (lo, hi) in enumerate(entry[1]):
+                    part = tbl.slice(lo - first, hi - lo + 1)
+                    self._lru_put((path, g), (part.column("offset").to_numpy(), part))
+                if not current:
+                    continue
+                idx = self._footers.get(bucket)
+                if idx is not None and idx.gen == self._gen:
+                    idx.add(path, entry)
+                elif self._dirs_gen == self._gen and bucket not in self._dirs:
+                    # a bucket this append created holds just its files
+                    self._footers[bucket] = _BucketIndex({path: entry}, self._gen)
+                    self._dirs[bucket] = os.path.dirname(path)
+                    if bucket < max(self._dirs):
+                        self._dirs = dict(sorted(self._dirs.items()))
+            if current:
+                self._synced = stamp
 
     def consume_iter(
         self,
@@ -990,8 +1130,10 @@ class LogTable:
         for new data — the direct analog of the reference's
         ConsumeStream loop (server.go:138-158: read, send, advance,
         busy-retry on out-of-range), with ``poll_interval`` replacing
-        the busy-wait. Latency is poll_interval + one row-group
-        decode (~tens of ms), vs the micro-batch cycle (~0.6 s) of
+        the busy-wait. Batches are read through the footer index and
+        the row-group LRU, so latency is poll_interval plus at most one
+        row-group decode per group (none for a record the same handle
+        appended), vs the micro-batch cycle (~0.6 s) of
         the Spark streaming path (`streaming/consume.tail_follow`),
         which remains the choice for checkpointed, multi-consumer,
         remote-store deployments; THIS is the low-latency in-process
@@ -1017,7 +1159,7 @@ class LogTable:
             lo = self.lowest_offset() if hi is not None and hi >= cursor else None
             if lo is not None:
                 lo = max(cursor, lo)
-                rows = _scan_rows(self.path, lo, lo + max_batch - 1)
+                rows = self._rows_native(lo, min(hi, lo + max_batch - 1))
                 if rows:
                     for r in rows:
                         yield r
@@ -1044,12 +1186,16 @@ class LogTable:
 
         On a local path the lookup runs in-process through pyarrow,
         no Spark job. The footer index (``_footer_index``) reads each
-        file's footer once; the row group is decoded once, sorted by
-        offset, and kept in one LRU bounded by ``_DECODED_CACHE_BYTES``,
-        so a warm read is a directory listing plus a binary search — the
-        analog of the reference's mmap read (internal/log/segment.go:
-        66-79). A remote store runs the Spark plan instead; the test
-        suite reads one log through both and pins equal answers.
+        file's footer once and bisects the bucket's row-group ranges;
+        the row group is decoded once, sorted by offset, and kept in one
+        LRU bounded by ``_DECODED_CACHE_BYTES``, so a warm read is a
+        binary search — the analog of the reference's mmap read
+        (internal/log/segment.go:66-79). The bucket dir is re-listed
+        first unless the handle trusts its index (``_trusts_index``):
+        the lease-holding writer's reads list nothing, and a record it
+        appended is in the LRU already. A remote store runs the Spark
+        plan instead; the test suite reads one log through both and
+        pins equal answers.
         """
         offset = int(offset)
         if self._root is not None:
@@ -1070,81 +1216,140 @@ class LogTable:
     def _read_native(self, offset: int) -> Row:
         """In-process point read via pyarrow; a bucket directory that is
         absent or lacks the offset raises OffsetOutOfRangeError."""
-        bdir = os.path.join(self._root, f"bucket={offset // self.bucket_size}")
-        if not os.path.isdir(bdir):
-            raise OffsetOutOfRangeError(offset)
-        for path, (_, ranges) in self._footer_index(bdir).items():
-            for g, (lo, hi) in enumerate(ranges):
-                if lo <= offset <= hi:
-                    offs, tbl = self._row_group(path, g)
-                    i = int(offs.searchsorted(offset))
-                    if i < len(offs) and int(offs[i]) == offset:
-                        return Row(
-                            **{c: tbl.column(c)[i].as_py() for c in _DATA_COLS}
-                        )
+        bucket = offset // self.bucket_size
+        with self._index_lock:
+            idx = self._footer_index(bucket, self._trusts_index())
+            groups = idx.groups(offset, offset) if idx is not None else []
+        for path, g in groups:
+            offs, tbl = self._row_group(path, g)
+            i = int(offs.searchsorted(offset))
+            if i < len(offs) and int(offs[i]) == offset:
+                return Row(**{c: tbl.column(c)[i].as_py() for c in _DATA_COLS})
         raise OffsetOutOfRangeError(offset)
 
-    def _footer_index(self, bdir: str) -> dict[str, tuple[int, tuple]]:
-        """``{file: (n_rows, ((min, max) offset per row group, ...))}``
-        for the committed files of one bucket dir; a footer without
-        offset statistics raises ProglogError naming the file.
+    def _rows_native(self, lo: int, hi: int) -> list[tuple]:
+        """``(offset, value, term, type)`` for lo <= offset <= hi, in
+        offset order, through the footer index and the LRU."""
+        with self._index_lock:
+            trusted = self._trusts_index()
+            groups = []
+            for bucket in range(lo // self.bucket_size, hi // self.bucket_size + 1):
+                idx = self._footer_index(bucket, trusted)
+                if idx is not None:
+                    groups.extend(idx.groups(lo, hi))
+        rows = []
+        for path, g in groups:
+            offs, tbl = self._row_group(path, g)
+            i = int(offs.searchsorted(lo))
+            part = tbl.slice(i, int(offs.searchsorted(hi, side="right")) - i)
+            rows.extend(zip(*(part.column(c).to_pylist() for c in _DATA_COLS)))
+        rows.sort(key=lambda r: r[0])
+        return rows
 
-        The directory is re-listed on every call, so files committed by
-        any writer are picked up and deleted ones drop out; a footer is
-        read only for a file not indexed before, and an unchanged
-        listing returns the cached dict as is."""
+    def _trusts_index(self) -> bool:
+        """Whether this call may serve the in-memory index without
+        re-listing; the caller holds ``_index_lock``.
+
+        Only while this handle created the writer lock, is not fenced,
+        and is inside its lease's first half-life: then no other process
+        can commit (the same trust ``_verify_or_renew_lease`` places in
+        the lease). A write by any handle of this process since the
+        index was last current moves the store's write stamp; that
+        starts a new generation, so every entry is re-listed once on
+        its next use. A handle's own native append keeps it current."""
+        if not (
+            self._lock_created
+            and self._fenced_owner is None
+            and time.time() < self._lease_deadline - self.lease_seconds / 2
+        ):
+            return False
+        stamp = self._store.stamp()
+        if stamp != self._synced:
+            self._gen += 1
+            self._synced = stamp
+        return True
+
+    def _bucket_list(self, trusted: bool) -> dict[int, str]:
+        """``{bucket: dir}`` in bucket order; re-listed unless trusted
+        and listed in this generation. Index entries of buckets gone
+        from the listing (truncation) are dropped."""
+        if not (trusted and self._dirs_gen == self._gen):
+            self._dirs, self._dirs_gen = dict(_bucket_dirs(self._root)), self._gen
+            for gone in self._footers.keys() - self._dirs.keys():
+                del self._footers[gone]
+        return self._dirs
+
+    def _footer_index(self, bucket: int, trusted: bool) -> _BucketIndex | None:
+        """The footer index of the committed files of one bucket, None
+        when its dir is absent; the caller holds ``_index_lock``.
+
+        A trusted call serves an entry listed in this generation as is,
+        and a bucket missing from a bucket list of this generation as
+        absent. Otherwise the directory is re-listed, so files committed
+        by any writer are picked up and deleted ones drop out; a footer
+        is read only for a file not indexed before, and an unchanged
+        listing keeps the entry as is."""
         import pyarrow.parquet as pq
 
-        files = _bucket_files(bdir)
-        known = self._footers.get(bdir, {})
-        if known.keys() == set(files):
-            return known
-        index = {}
-        for path in files:
-            entry = known.get(path)
-            if entry is None:
-                meta = pq.read_metadata(path)
-                col = meta.schema.to_arrow_schema().get_field_index("offset")
-                ranges = []
-                for g in range(meta.num_row_groups):
-                    stats = meta.row_group(g).column(col).statistics
-                    if stats is None or not stats.has_min_max:
-                        raise ProglogError(
-                            f"{path}: row group {g} has no offset statistics"
-                        )
-                    ranges.append((int(stats.min), int(stats.max)))
-                entry = (meta.num_rows, tuple(ranges))
-            index[path] = entry
-        self._footers[bdir] = index
-        return index
+        idx = self._footers.get(bucket)
+        if trusted and idx is not None and idx.gen == self._gen:
+            return idx
+        if trusted and self._dirs_gen == self._gen and bucket not in self._dirs:
+            return None
+        try:
+            files = _bucket_files(os.path.join(self._root, f"bucket={bucket}"))
+        except FileNotFoundError:
+            self._footers.pop(bucket, None)
+            return None
+        known = idx.files if idx is not None else {}
+        if idx is None or known.keys() != set(files):
+            idx = self._footers[bucket] = _BucketIndex(
+                {
+                    path: known.get(path)
+                    or _footer_entry(pq.read_metadata(path), path)
+                    for path in files
+                },
+                self._gen,
+            )
+        idx.gen = self._gen
+        return idx
 
     def _row_group(self, path: str, g: int) -> tuple:
         """Row group ``g`` of ``path`` decoded as (sorted offsets,
-        offset-sorted table), through the LRU: a hit moves to the back,
-        a miss evicts from the front until the budget holds it, and a
-        group larger than the whole budget is returned without being
-        kept."""
+        offset-sorted table), through the LRU (``_lru_put``)."""
         import pyarrow.dataset as pads
 
         key = (path, g)
-        hit = self._decoded.pop(key, None)
-        if hit is None:
-            frag = next(pads.dataset(path, format="parquet").get_fragments())
-            tbl = frag.subset(row_group_ids=[g]).to_table(columns=_DATA_COLS)
-            offs = tbl.column("offset").to_numpy()
-            if (offs[1:] < offs[:-1]).any():  # Spark writes need not sort
-                tbl = tbl.sort_by("offset")
-                offs = tbl.column("offset").to_numpy()
-            hit = (offs, tbl)
-            if tbl.nbytes > _DECODED_CACHE_BYTES:
+        with self._index_lock:
+            hit = self._decoded.pop(key, None)
+            if hit is not None:
+                self._decoded[key] = hit  # to the back
                 return hit
-            self._decoded_bytes += tbl.nbytes
-            while self._decoded_bytes > _DECODED_CACHE_BYTES:
-                self._decoded_bytes -= self._decoded.pop(
-                    next(iter(self._decoded))
-                )[1].nbytes
-        self._decoded[key] = hit
+        frag = next(pads.dataset(path, format="parquet").get_fragments())
+        tbl = frag.subset(row_group_ids=[g]).to_table(columns=_DATA_COLS)
+        offs = tbl.column("offset").to_numpy()
+        if (offs[1:] < offs[:-1]).any():  # Spark writes need not sort
+            tbl = tbl.sort_by("offset")
+            offs = tbl.column("offset").to_numpy()
+        hit = (offs, tbl)
+        with self._index_lock:
+            self._lru_put(key, hit)
         return hit
+
+    def _lru_put(self, key: tuple[str, int], hit: tuple) -> None:
+        """Keep a decoded group at the back of the LRU, evicting from
+        the front until the budget holds; a group larger than the whole
+        budget is not kept. The caller holds ``_index_lock``."""
+        nbytes = hit[1].nbytes
+        if nbytes > _DECODED_CACHE_BYTES:
+            return
+        old = self._decoded.pop(key, None)
+        if old is not None:
+            self._decoded_bytes -= old[1].nbytes
+        self._decoded[key] = hit
+        self._decoded_bytes += nbytes
+        while self._decoded_bytes > _DECODED_CACHE_BYTES:
+            self._decoded_bytes -= self._decoded.pop(next(iter(self._decoded)))[1].nbytes
 
     def scan(self, lo: int, hi: int) -> DataFrame:
         """Ordered range scan, offsets in [lo, hi] (L5)."""
@@ -1214,18 +1419,17 @@ class LogTable:
         """min offset (max with ``highest``) from the footer index, None
         when empty: walk the bucket dirs up (down) and answer from the
         first bucket holding rows — a truncate-emptied boundary bucket
-        must not shadow later ones."""
-        dirs = _bucket_dirs(self._root)
-        for gone in self._footers.keys() - {d for _, d in dirs}:
-            self._footers.pop(gone, None)  # bucket dropped by truncation
-        for _, bdir in reversed(dirs) if highest else dirs:
-            ends = [
-                hi if highest else lo
-                for _, ranges in self._footer_index(bdir).values()
-                for lo, hi in ranges
-            ]
-            if ends:
-                return max(ends) if highest else min(ends)
+        must not shadow later ones. Re-lists the bucket dirs and the
+        bucket it answers from unless the index is trusted
+        (``_trusts_index``)."""
+        with self._index_lock:
+            trusted = self._trusts_index()
+            buckets = self._bucket_list(trusted).keys()
+            for bucket in reversed(buckets) if highest else buckets:
+                idx = self._footer_index(bucket, trusted)
+                end = idx.bound(highest) if idx is not None else None
+                if end is not None:
+                    return end
         return None
 
     def highest_offset(self) -> int | None:
@@ -1234,9 +1438,11 @@ class LogTable:
         The reference returns 0 for both empty and single-record logs
         (log.go:144-153); we deliberately disambiguate with None
         (SURVEY.md §7.3.4). Only the max bucket directory is read. A
-        local path answers from the footer index on every call, so a
-        handle sees other handles' appends; a remote store caches the
-        Spark answer until this handle appends or truncates.
+        local path answers from the footer index, re-listing the bucket
+        dirs and the top bucket on every call unless the handle trusts
+        its index (``_trusts_index``), so a handle sees other handles'
+        appends; a remote store caches the Spark answer until this
+        handle appends or truncates.
         """
         if self._root is not None:
             return self._native_bound(highest=True)
@@ -1282,6 +1488,7 @@ class LogTable:
                 self._store.delete(f"bucket={b}")
             elif b == boundary and b * self.bucket_size <= lowest:
                 self._rewrite_bucket(b, lowest)
+        self._store.bump()
         self._highest = None
         if lowest + 1 > self.next_offset_floor:
             self.next_offset_floor = lowest + 1
@@ -1348,6 +1555,8 @@ class LogTable:
                     # paranoia: old exists and bucket missing with no
                     # new dir — restore the old bucket untruncated
                     self._store.rename(name, f"bucket={b}")
+        if any(name.startswith(".truncate-") for name in names):
+            self._store.bump()
 
     # ------------------------------------------------------------------
     # compaction (maintenance; reference analog: segment roll keeps
@@ -1399,6 +1608,7 @@ class LogTable:
                 continue
             self._rewrite_bucket(b, lowest=-1, coalesce_to=target)
             compacted += 1
+        self._store.bump()
         return compacted
 
     # ------------------------------------------------------------------
@@ -1438,6 +1648,7 @@ class LogTable:
             .partitionBy("bucket")
             .parquet(path)
         )
+        log._store.bump()
         return log
 
     # ------------------------------------------------------------------
@@ -1494,11 +1705,12 @@ class LogTable:
     def _next_offset(self) -> int:
         """Next dense offset, from the store's truth rather than a
         cache: a local path re-lists the tail bucket through the footer
-        index (reading only footers it has not indexed yet, normally
-        just the previous append's file), a remote one re-runs its
-        max-bucket scan. So a second handle on the same directory — out
-        of contract but easy to do accidentally — continues from the
-        real maximum and cannot double-assign offsets."""
+        index (reading only footers it has not indexed yet) unless the
+        handle trusts its index, a remote one re-runs its max-bucket
+        scan. So a second handle on the same directory — out of contract
+        but easy to do accidentally — continues from the real maximum
+        and cannot double-assign offsets: its writes move the write
+        stamp, and the lease keeps other processes out."""
         self._highest = None
         hi = self.highest_offset()
         nxt = self.initial_offset if hi is None else hi + 1
@@ -1531,9 +1743,16 @@ class LogTable:
             "min_offset long, max_offset long, bytes long"
         )
         if self._root is not None:
+            with self._index_lock:
+                trusted = self._trusts_index()
+                listed = [
+                    (b, list(idx.files.items()))
+                    for b in self._bucket_list(trusted)
+                    if (idx := self._footer_index(b, trusted)) is not None
+                ]
             rows = []
-            for b, bdir in _bucket_dirs(self._root):
-                for path, (n_rows, ranges) in self._footer_index(bdir).items():
+            for b, files in listed:
+                for path, (n_rows, ranges) in files:
                     # a truncate-emptied boundary bucket leaves a
                     # schema-only part file: 0 row groups, no stats
                     lo = min((r[0] for r in ranges), default=None)

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import base64
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -59,6 +60,8 @@ from proglog_spark.errors import OffsetOutOfRangeError, PermissionDeniedError
 from proglog_spark.tlsconfig import TLSConfig, build_ssl_context, peer_common_name
 
 DEFAULT_SUBJECT = "root"
+
+_log = logging.getLogger(__name__)
 
 # the largest request body read into memory: grpc's default receive
 # limit, so neither edge takes a message the other would refuse
@@ -183,6 +186,7 @@ class HttpLogServer:
                 except Exception as e:  # engine/Spark failures → 500,
                     # never a dropped connection (the reference's gRPC
                     # edge maps unknown errors to codes.Internal)
+                    _log.exception("POST %s failed", self.path)
                     self._reply(500, {"error": f"INTERNAL:{e}"})
 
             def do_GET(self):  # noqa: N802
@@ -249,6 +253,7 @@ class HttpLogServer:
                     # error, not a 500
                     self._reply(400, {"error": f"BAD_REQUEST:{e}"})
                 except Exception as e:
+                    _log.exception("GET %s failed", self.path)
                     self._reply(500, {"error": f"INTERNAL:{e}"})
 
         self._server = ThreadingHTTPServer((host, port), Handler)

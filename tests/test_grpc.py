@@ -13,6 +13,7 @@ from __future__ import annotations
 import threading
 
 import pytest
+from conftest import NoSpark
 
 from proglog_spark.engine import Engine
 from proglog_spark.grpc_api import LogService, RpcError, wire
@@ -285,3 +286,122 @@ def test_grpc_transport_streams_end_to_end(spark, tmp_path):
         assert [(r.offset, r.value) for r in got] == [(1, b"second"), (2, b"third")]
     finally:
         srv.stop()
+
+
+def test_consume_stream_follows_concurrent_produces(tmp_path, monkeypatch):
+    """The gRPC edge runs Produce under its lock and ConsumeStream
+    outside it, so the stream reads the writer's handle while appends
+    change its index. Two producer threads send 300 single-record
+    Produces: the stream delivers dense, unique offsets, every
+    producer ack is unique, and no delivered record opens a dataset
+    (each one comes from the LRU its append filled)."""
+    import pyarrow.dataset as pads
+
+    engine = Engine.create(NoSpark(), str(tmp_path / "log"), bucket_size=64)
+    svc, edge_lock = LogService(engine), threading.Lock()
+    opened = []
+    dataset = pads.dataset
+    monkeypatch.setattr(
+        pads, "dataset", lambda *a, **k: opened.append(a) or dataset(*a, **k)
+    )
+    acks, delivered, errors = [], [], []
+    stop = threading.Event()
+
+    def produce(tag: str) -> None:
+        try:
+            for i in range(150):
+                with edge_lock:
+                    acks.append(_produce(svc, f"{tag}{i}".encode()))
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    def follow() -> None:
+        try:
+            for resp in svc.consume_stream(
+                "root", wire.ConsumeRequest(offset=0).encode(),
+                stop=stop, poll_interval=0.001,
+            ):
+                delivered.append(wire.ConsumeResponse.decode(resp).record.offset)
+                if len(delivered) == 300:
+                    stop.set()
+        except Exception as e:
+            errors.append(e)
+
+    follower = threading.Thread(target=follow)
+    producers = [threading.Thread(target=produce, args=(t,)) for t in "ab"]
+    follower.start()
+    for t in producers:
+        t.start()
+    for t in producers:
+        t.join(timeout=120)
+    follower.join(timeout=60)
+    stop.set()
+    follower.join(timeout=10)
+    engine.log.close()
+    assert errors == []
+    assert sorted(acks) == list(range(300))
+    assert delivered == list(range(300))
+    assert opened == []
+
+
+class _FakeGrpc:
+    """Just enough of ``grpc`` to build a ``GrpcLogServer`` and call its
+    handlers directly, without a transport."""
+
+    class StatusCode:
+        PERMISSION_DENIED = INVALID_ARGUMENT = NOT_FOUND = INTERNAL = object()
+
+    class _Server:
+        def add_generic_rpc_handlers(self, handlers):
+            self.handlers = handlers[0]
+
+        def add_insecure_port(self, address):
+            return 0
+
+    @staticmethod
+    def _handler(fn):
+        return fn
+
+    unary_unary_rpc_method_handler = _handler
+    unary_stream_rpc_method_handler = _handler
+    stream_stream_rpc_method_handler = _handler
+
+    @staticmethod
+    def method_handlers_generic_handler(name, handlers):
+        return handlers
+
+    @classmethod
+    def server(cls, executor):
+        return cls._Server()
+
+
+def test_get_servers_answers_while_the_edge_lock_is_held(tmp_path, monkeypatch):
+    """GetServers reads a constant catalog, so it does not wait behind
+    the edge lock that Produce and Consume take."""
+    import sys
+
+    from proglog_spark.grpc_api.server import GrpcLogServer
+
+    monkeypatch.setitem(sys.modules, "grpc", _FakeGrpc)
+    engine = Engine.create(NoSpark(), str(tmp_path / "log"), bucket_size=8)
+    srv = GrpcLogServer(engine)
+
+    class Context:
+        def invocation_metadata(self):
+            return ()
+
+    got = []
+    call = threading.Thread(
+        target=lambda: got.append(
+            srv._server.handlers["GetServers"](
+                wire.GetServersRequest().encode(), Context()
+            )
+        ),
+        daemon=True,
+    )
+    with srv._lock:
+        call.start()
+        call.join(timeout=5)
+        assert not call.is_alive()
+    servers = wire.GetServersResponse.decode(got[0]).servers
+    assert sum(s.is_leader for s in servers) == 1

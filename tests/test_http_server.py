@@ -220,6 +220,28 @@ def test_unexpected_engine_error_is_500_json(served_engine, monkeypatch):
     assert json.loads(e.value.read())["error"].startswith("INTERNAL:")
 
 
+def test_engine_error_500_is_logged(served_engine, monkeypatch, caplog):
+    """A 500 leaves an ERROR record with the traceback in the server's
+    logger; the reply body is unchanged."""
+    import logging
+
+    engine, port = served_engine
+    monkeypatch.setattr(
+        type(engine),
+        "consume",
+        lambda self, *a, **k: (_ for _ in ()).throw(RuntimeError("boom")),
+    )
+    with caplog.at_level(logging.ERROR, logger="proglog_spark.server"):
+        with pytest.raises(HTTPError) as e:
+            _call(port, "GET", "/?offset=0")
+    assert e.value.code == 500
+    assert json.loads(e.value.read()) == {"error": "INTERNAL:boom"}
+    errors = [r for r in caplog.records if r.levelno == logging.ERROR]
+    assert len(errors) == 1
+    assert errors[0].name == "proglog_spark.server"
+    assert errors[0].exc_info[0] is RuntimeError
+
+
 def test_concurrent_producers_get_dense_offsets(served_engine):
     """The single-writer lock serializes racing HTTP producers: every
     append acks a distinct offset range and the final log is dense

@@ -677,3 +677,179 @@ def test_log_crosses_stores(spark, tmp_path, first, second):
     ]
     assert (back.lowest_offset(), back.highest_offset()) == (3, 7)
     assert back.read(6).value == "w6"
+
+
+@pytest.fixture
+def listing_counts(monkeypatch):
+    """Counts directory listings (``os.scandir``/``os.listdir``), footer
+    reads and dataset opens from here on."""
+    import os
+
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    counts = {"listings": 0, "footers": 0, "opened": 0}
+
+    def counted(fn, key):
+        def wrapper(*args, **kwargs):
+            counts[key] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(os, "scandir", counted(os.scandir, "listings"))
+    monkeypatch.setattr(os, "listdir", counted(os.listdir, "listings"))
+    monkeypatch.setattr(pq, "read_metadata", counted(pq.read_metadata, "footers"))
+    monkeypatch.setattr(pads, "dataset", counted(pads.dataset, "opened"))
+    return counts
+
+
+def test_lease_holder_produces_and_consumes_without_listing(tmp_path, listing_counts):
+    """While the handle that created the writer lock is inside its
+    lease, Produce and Consume serve from the footer index and LRU it
+    keeps current: no directory listing, footer read or dataset open."""
+    log = LogTable.create(NoSpark(), str(tmp_path / "log"), bucket_size=1 << 20)
+    log.append([f"p{i}" for i in range(20)])  # takes the lock, lists once
+    counts = listing_counts
+    counts.update(listings=0, footers=0, opened=0)
+    for i in range(50):
+        off, _ = log.append([f"r{i}"])
+        assert log.read(off).value == f"r{i}"
+        assert log.read(i % 20).value == f"p{i % 20}"
+    assert (log.lowest_offset(), log.highest_offset()) == (0, 69)
+    assert counts == {"listings": 0, "footers": 0, "opened": 0}
+    log.close()
+
+
+def test_creator_sees_borrowing_sibling_append(tmp_path, listing_counts):
+    """A same-process sibling borrows the lock and appends: its write
+    moves the write stamp, so the creator re-lists on its next read and
+    its next append continues after the sibling's record."""
+    path = str(tmp_path / "log")
+    creator = LogTable.create(NoSpark(), path, bucket_size=4)
+    creator.append(["a0", "a1", "a2"])
+    assert creator.read(2).value == "a2"
+    sibling = LogTable.open(NoSpark(), path)
+    assert sibling.append(["s3", "s4"]) == (3, 4)
+    assert creator.read(4).value == "s4"
+    assert creator.append(["a5"]) == (5, 5)
+    assert sibling.append(["s6"]) == (6, 6)
+    assert creator.append(["a7"]) == (7, 7)
+    assert [creator.read(o).value for o in range(8)] == [
+        "a0", "a1", "a2", "s3", "s4", "a5", "s6", "a7",
+    ]
+    assert (sibling.lowest_offset(), sibling.highest_offset()) == (0, 7)
+    assert listing_counts["listings"] > 0
+    sibling.close()
+    creator.close()
+
+
+def test_reacquired_lock_sees_other_process_append(tmp_path):
+    """Another process takes the lock and appends, after close() or
+    after the lock file vanished under a live writer; the handle that
+    then re-acquires or re-creates the lock sees those records and
+    continues densely after them."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    path = str(tmp_path / "log")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from proglog_spark import LogTable\n"
+        "log = LogTable.open(None, sys.argv[2])\n"
+        "print(log.append(sys.argv[3:]))\n"
+        "log.close()\n"
+    )
+
+    def other_process(*values):
+        return subprocess.run(
+            [sys.executable, "-c", code, repo, path, *values],
+            capture_output=True, text=True, timeout=120, check=True,
+        ).stdout.strip()
+
+    log = LogTable.create(NoSpark(), path, bucket_size=4)
+    log.append(["a0", "a1"])
+    assert log.read(1).value == "a1"
+    log.close()
+    assert other_process("o2", "o3", "o4") == "(2, 4)"
+    assert log.append(["a5"]) == (5, 5)
+    assert [log.read(o).value for o in range(6)] == ["a0", "a1", "o2", "o3", "o4", "a5"]
+    # the lock file is removed by hand; the next renewal re-creates it
+    os.remove(os.path.join(path, "_proglog_writer.lock"))
+    assert other_process("o6") == "(6, 6)"
+    log._lease_deadline = time.time()  # renew at the next append
+    assert log.append(["a7"]) == (7, 7)
+    assert log.read(6).value == "o6"
+    assert (log.lowest_offset(), log.highest_offset()) == (0, 7)
+    log.close()
+
+
+def test_rewrites_and_spark_append_keep_index_current(spark, tmp_path):
+    """truncate, compact and a Spark-path DataFrame append on the
+    lease-holding handle each move the write stamp: its reads and
+    bounds afterwards match the files on disk."""
+    log = LogTable.create(
+        spark, str(tmp_path / "log"), bucket_size=8, max_records_per_file=4
+    )
+    for i in range(20):
+        log.append([f"v{i}"])
+    assert log.read(19).value == "v19"
+
+    def check():
+        files = log.files().collect()
+        lo = min(f.min_offset for f in files if f.min_offset is not None)
+        hi = max(f.max_offset for f in files if f.max_offset is not None)
+        assert (log.lowest_offset(), log.highest_offset()) == (lo, hi)
+        assert [log.read(o).offset for o in range(lo, hi + 1)] == list(range(lo, hi + 1))
+        with pytest.raises(OffsetOutOfRangeError):
+            log.read(lo - 1)
+        return lo, hi
+
+    log.truncate(7)  # drops bucket 0 whole
+    assert check() == (8, 19)
+    log.truncate(9)  # rewrites bucket 1
+    assert check() == (10, 19)
+    assert log.compact() > 0
+    assert check() == (10, 19)
+    df = spark.createDataFrame([("d0",), ("d1",), ("d2",)], "value string")
+    assert log.append(df) == (20, 22)
+    assert check() == (10, 22)
+    assert log.append(["n23"]) == (23, 23)
+    assert log.read(23).value == "n23"
+    log.close()
+
+
+def test_lease_past_half_life_relists(tmp_path, listing_counts):
+    """Past its lease's first half-life the writer no longer trusts its
+    index: a read re-lists and sees a file it did not write."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "log")
+    log = LogTable.create(NoSpark(), path, bucket_size=1 << 20)
+    log.append(["a0", "a1"])
+    planted = pa.table(
+        {
+            "offset": pa.array([2], pa.int64()),
+            "value": ["other"],
+            "term": pa.array([0], pa.int64()),
+            "type": pa.array([0], pa.int32()),
+        }
+    )
+    pq.write_table(planted, os.path.join(path, "bucket=0", "planted.parquet"))
+    listing_counts["listings"] = 0
+    # out of contract (no one may commit under a live lease), which is
+    # why the lease holder inside its first half-life does not look
+    assert log.highest_offset() == 1
+    assert listing_counts["listings"] == 0
+    log._lease_deadline = time.time() + log.lease_seconds * 0.4
+    assert log.highest_offset() == 2
+    assert log.read(2).value == "other"
+    assert listing_counts["listings"] > 0
+    log.close()
