@@ -16,7 +16,6 @@ picking one implementation per path.
 
 from __future__ import annotations
 
-import itertools
 import os
 import posixpath
 import shutil
@@ -24,13 +23,6 @@ import shutil
 # Spark write option: "false" keeps a write from leaving a _SUCCESS
 # marker, so a dir written to be swapped in holds only data files
 SUCCESS_MARKER_OPTION = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-
-# per-process write stamps, {table root: last tick}: each data mutation
-# under a root takes a fresh tick once its change is on disk, so a
-# handle that remembers the stamp it indexed at can tell whether any
-# handle in this process has written there since
-_TICKS = itertools.count(1)
-_STAMPS: dict[str, int] = {}
 
 
 class Store:
@@ -46,20 +38,9 @@ class Store:
       failure to remove raises
     - ``rename(src, dst)``: to an absent ``dst``; raises ``OSError``
       when the store reports failure instead of returning it
-    - ``stamp()``, ``bump()``: the root's write stamp in this process
     """
 
     local_root: str | None  # the table dir as an os path; None if remote
-    key: str  # the root's identity in this process's write stamps
-
-    def stamp(self) -> int:
-        """The root's write stamp in this process (0 before any write)."""
-        return _STAMPS.get(self.key, 0)
-
-    def bump(self) -> int:
-        """Record a data mutation under the root, after it is on disk."""
-        _STAMPS[self.key] = tick = next(_TICKS)
-        return tick
 
     @staticmethod
     def _tmp_name(name: str) -> str:
@@ -71,13 +52,10 @@ class Store:
         ``live`` is absent), new -> live, drop aside. Each rename is
         checked, so a failed step raises and leaves a state the
         caller's own recovery resolves from the names alone."""
-        try:
-            if self.exists(live):
-                self.rename(live, aside)
-            self.rename(new, live)
-            self.delete(aside)
-        finally:
-            self.bump()
+        if self.exists(live):
+            self.rename(live, aside)
+        self.rename(new, live)
+        self.delete(aside)
 
 
 class LocalStore(Store):
@@ -85,7 +63,6 @@ class LocalStore(Store):
 
     def __init__(self, root: str) -> None:
         self.local_root = root
-        self.key = os.path.realpath(root)
 
     def _p(self, name: str) -> str:
         return os.path.join(self.local_root, name) if name else self.local_root
@@ -151,7 +128,6 @@ class HadoopStore(Store):
         self._path = jvm.org.apache.hadoop.fs.Path
         self._io = jvm.org.apache.commons.io.IOUtils
         self.root = self._path(path)
-        self.key = path
         self.fs = self.root.getFileSystem(spark._jsc.hadoopConfiguration())
 
     def _p(self, name: str):

@@ -66,6 +66,7 @@ read-your-committed-writes.
 from __future__ import annotations
 
 import bisect
+import contextlib
 import itertools
 import json
 import os
@@ -103,6 +104,14 @@ _DATA_COLS = ["offset", "value", "term", "type"]
 # byte budget of the decoded row-group LRU behind native point reads;
 # a row group decoding to more than this is served but not kept
 _DECODED_CACHE_BYTES = 1 << 27  # 128 MiB in memory
+
+# per-process write stamps of local log roots, {realpath: last tick}:
+# every data mutation under a root takes a fresh tick when it ends,
+# whether it raised or not, so a handle that remembers the tick its
+# index was current at can tell whether any handle of this process has
+# touched the root since (LogTable._trusts_index)
+_TICKS = itertools.count(1)
+_STAMPS: dict[str, int] = {}
 
 
 class _BucketIndex:
@@ -198,6 +207,9 @@ class LogTable:
         # whose data paths are Spark's
         self._store = open_store(spark, path)
         self._root = self._store.local_root
+        # the root's key in _STAMPS; None on a remote store, whose
+        # index is never trusted
+        self._stamp_key = os.path.realpath(self._root) if self._root else None
         self.bucket_size = int(bucket_size)
         if int(initial_offset) < 0:
             # offsets are uint64 in the reference (api/v1/log.proto:9);
@@ -236,7 +248,7 @@ class LogTable:
         self._decoded: dict[tuple[str, int], tuple] = {}
         self._decoded_bytes = 0
         # whether the index may be served without re-listing (see
-        # _trusts_index): _synced is the store's write stamp it was
+        # _trusts_index): _synced is the root's write stamp it was
         # last brought current at (None: never, or a fresh lock), and
         # _gen the generation an entry must carry to be trusted. Index
         # and LRU change under _index_lock: a ConsumeStream runs
@@ -362,12 +374,12 @@ class LogTable:
         """
         self._store.mkdirs()
         self._acquire_writer_lock()
-        for name, _ in self._store.list():
-            if name != _LOCK_FILE:
-                self._store.delete(name)
-        self.next_offset_floor = self.initial_offset
-        self._write_meta()
-        self._store.bump()
+        with self._mutation():
+            for name, _ in self._store.list():
+                if name != _LOCK_FILE:
+                    self._store.delete(name)
+            self.next_offset_floor = self.initial_offset
+            self._write_meta()
         self._highest = None
 
     # ------------------------------------------------------------------
@@ -898,21 +910,21 @@ class LogTable:
         with_off, n = assign_dense_offsets(df, start=base, order_by=order_by)
         if n == 0:
             return (base, base - 1)
-        (
-            # `div` (integer division) — double division drifts past
-            # 2^53 and truncates-toward-zero; offsets are non-negative
-            # by contract so div == the read paths' Python //
-            self._apply_write_opts(
-                with_off.withColumn(
-                    "bucket", F.expr(f"offset div {self.bucket_size}")
+        with self._mutation():
+            (
+                # `div` (integer division) — double division drifts past
+                # 2^53 and truncates-toward-zero; offsets are non-negative
+                # by contract so div == the read paths' Python //
+                self._apply_write_opts(
+                    with_off.withColumn(
+                        "bucket", F.expr(f"offset div {self.bucket_size}")
+                    )
+                    .select("bucket", *_DATA_COLS)
+                    .write.mode("append")
                 )
-                .select("bucket", *_DATA_COLS)
-                .write.mode("append")
+                .partitionBy("bucket")
+                .parquet(self.path)
             )
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._store.bump()
         last = base + n - 1
         self._highest = last
         return (base, last)
@@ -960,14 +972,14 @@ class LogTable:
                 for i, r in enumerate(rows)
             ]
             sdf = self.spark.createDataFrame(stamped, schema=schema)
-        (
-            self._apply_write_opts(
-                sdf.select("bucket", *_DATA_COLS).write.mode("append")
+        with self._mutation():
+            (
+                self._apply_write_opts(
+                    sdf.select("bucket", *_DATA_COLS).write.mode("append")
+                )
+                .partitionBy("bucket")
+                .parquet(self.path)
             )
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._store.bump()
         self._highest = last
         return (base, last)
 
@@ -1097,8 +1109,8 @@ class LogTable:
         before this append and the whole batch landed, add the files to
         their bucket entries and the bucket list and stay current."""
         with self._index_lock:
-            current = complete and self._synced == self._store.stamp()
-            stamp = self._store.bump()
+            current = complete and self._synced == self._stamp()
+            stamp = self._bump()
             for bucket, path, entry, tbl in written:
                 first = entry[1][0][0]  # the table's offsets are dense
                 for g, (lo, hi) in enumerate(entry[1]):
@@ -1254,7 +1266,7 @@ class LogTable:
         and is inside its lease's first half-life: then no other process
         can commit (the same trust ``_verify_or_renew_lease`` places in
         the lease). A write by any handle of this process since the
-        index was last current moves the store's write stamp; that
+        index was last current moves the root's write stamp; that
         starts a new generation, so every entry is re-listed once on
         its next use. A handle's own native append keeps it current."""
         if not (
@@ -1263,7 +1275,7 @@ class LogTable:
             and time.time() < self._lease_deadline - self.lease_seconds / 2
         ):
             return False
-        stamp = self._store.stamp()
+        stamp = self._stamp()
         if stamp != self._synced:
             self._gen += 1
             self._synced = stamp
@@ -1483,12 +1495,12 @@ class LogTable:
         self._acquire_writer_lock()
         lowest = int(lowest)
         boundary = (lowest + 1) // self.bucket_size  # first bucket that may survive
-        for b in self._buckets():
-            if (b + 1) * self.bucket_size - 1 <= lowest:
-                self._store.delete(f"bucket={b}")
-            elif b == boundary and b * self.bucket_size <= lowest:
-                self._rewrite_bucket(b, lowest)
-        self._store.bump()
+        with self._mutation():
+            for b in self._buckets():
+                if (b + 1) * self.bucket_size - 1 <= lowest:
+                    self._store.delete(f"bucket={b}")
+                elif b == boundary and b * self.bucket_size <= lowest:
+                    self._rewrite_bucket(b, lowest)
         self._highest = None
         if lowest + 1 > self.next_offset_floor:
             self.next_offset_floor = lowest + 1
@@ -1535,28 +1547,28 @@ class LogTable:
         mirroring reference crash recovery O16): survivors written in
         full are rolled forward, a partial new dir is discarded."""
         names = {name for name, _ in self._store.list()}
-        for name in sorted(names):
-            if not name.startswith(".truncate-"):
-                continue
-            b = name.rsplit("-", 1)[1]
-            if name.startswith(".truncate-new-"):
-                if f"bucket={b}" not in names:
-                    # died between (2) and (3): survivors are complete
-                    # (they were written before the bucket moved aside)
-                    self._store.rename(name, f"bucket={b}")
-                else:
-                    # died before (2): live bucket untouched; the new
-                    # dir may be partial — discard it
-                    self._store.delete(name)
-            elif name.startswith(".truncate-old-"):
-                if f"bucket={b}" in names or f".truncate-new-{b}" in names:
-                    self._store.delete(name)  # survivors are (or go) live
-                else:
-                    # paranoia: old exists and bucket missing with no
-                    # new dir — restore the old bucket untruncated
-                    self._store.rename(name, f"bucket={b}")
-        if any(name.startswith(".truncate-") for name in names):
-            self._store.bump()
+        stale = sorted(name for name in names if name.startswith(".truncate-"))
+        if not stale:
+            return
+        with self._mutation():
+            for name in stale:
+                b = name.rsplit("-", 1)[1]
+                if name.startswith(".truncate-new-"):
+                    if f"bucket={b}" not in names:
+                        # died between (2) and (3): survivors are complete
+                        # (they were written before the bucket moved aside)
+                        self._store.rename(name, f"bucket={b}")
+                    else:
+                        # died before (2): live bucket untouched; the new
+                        # dir may be partial — discard it
+                        self._store.delete(name)
+                elif name.startswith(".truncate-old-"):
+                    if f"bucket={b}" in names or f".truncate-new-{b}" in names:
+                        self._store.delete(name)  # survivors are (or go) live
+                    else:
+                        # paranoia: old exists and bucket missing with no
+                        # new dir — restore the old bucket untruncated
+                        self._store.rename(name, f"bucket={b}")
 
     # ------------------------------------------------------------------
     # compaction (maintenance; reference analog: segment roll keeps
@@ -1590,25 +1602,25 @@ class LogTable:
         """
         self._acquire_writer_lock()
         compacted = 0
-        for b in self._buckets():
-            n_files = sum(
-                1
-                for name, _ in self._store.list(f"bucket={b}")
-                if name.endswith(".parquet")
-            )
-            if n_files <= max_files_per_bucket:
-                continue
-            rows = (
-                self.spark.read.schema(RECORD_SCHEMA)
-                .parquet(f"{self.path}/bucket={b}")
-                .count()
-            )
-            target = max(1, -(-rows // self.max_records_per_file))
-            if target >= n_files:
-                continue
-            self._rewrite_bucket(b, lowest=-1, coalesce_to=target)
-            compacted += 1
-        self._store.bump()
+        with self._mutation():
+            for b in self._buckets():
+                n_files = sum(
+                    1
+                    for name, _ in self._store.list(f"bucket={b}")
+                    if name.endswith(".parquet")
+                )
+                if n_files <= max_files_per_bucket:
+                    continue
+                rows = (
+                    self.spark.read.schema(RECORD_SCHEMA)
+                    .parquet(f"{self.path}/bucket={b}")
+                    .count()
+                )
+                target = max(1, -(-rows // self.max_records_per_file))
+                if target >= n_files:
+                    continue
+                self._rewrite_bucket(b, lowest=-1, coalesce_to=target)
+                compacted += 1
         return compacted
 
     # ------------------------------------------------------------------
@@ -1641,19 +1653,40 @@ class LogTable:
         log.reset()
         if first is None:
             return log
-        (
-            snap.withColumn("bucket", F.expr(f"offset div {int(bucket_size)}"))
-            .select("bucket", *_DATA_COLS)
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-        log._store.bump()
+        with log._mutation():
+            (
+                snap.withColumn("bucket", F.expr(f"offset div {int(bucket_size)}"))
+                .select("bucket", *_DATA_COLS)
+                .write.mode("append")
+                .partitionBy("bucket")
+                .parquet(path)
+            )
         return log
 
     # ------------------------------------------------------------------
     # internals
     # ------------------------------------------------------------------
+
+    @contextlib.contextmanager
+    def _mutation(self):
+        """Around a data mutation: moves the root's write stamp when the
+        body ends, raised or not, so no handle of this process serves a
+        half-done change from an index listed before it."""
+        try:
+            yield
+        finally:
+            self._bump()
+
+    def _stamp(self) -> int:
+        """The root's write stamp in this process (0 before any write)."""
+        return _STAMPS.get(self._stamp_key, 0)
+
+    def _bump(self) -> int:
+        """Move the root's write stamp to a fresh tick (local roots)."""
+        tick = next(_TICKS)
+        if self._stamp_key is not None:
+            _STAMPS[self._stamp_key] = tick
+        return tick
 
     def _apply_write_opts(self, w):
         w = w.option("maxRecordsPerFile", self.max_records_per_file)

@@ -853,3 +853,29 @@ def test_lease_past_half_life_relists(tmp_path, listing_counts):
     assert log.read(2).value == "other"
     assert listing_counts["listings"] > 0
     log.close()
+
+
+def test_failed_truncate_keeps_reads_matching_disk(spark, tmp_path, monkeypatch):
+    """A truncate that drops a whole bucket and then fails rewriting the
+    boundary bucket still moves the write stamp: the lease holder's
+    bounds and reads afterwards match the files left on disk, not the
+    index and LRU it held before."""
+    log = LogTable.create(spark, str(tmp_path / "log"), bucket_size=8)
+    for i in range(20):
+        log.append([f"v{i}"])
+    assert [log.read(o).value for o in range(20)] == [f"v{i}" for i in range(20)]
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("boundary rewrite failed")
+
+    monkeypatch.setattr(log, "_rewrite_bucket", fail)
+    with pytest.raises(RuntimeError, match="boundary rewrite failed"):
+        log.truncate(9)  # drops bucket 0 whole, then fails on bucket 1
+    files = log.files().collect()
+    assert min(f.min_offset for f in files) == 8
+    assert (log.lowest_offset(), log.highest_offset()) == (8, 19)
+    for o in range(8):
+        with pytest.raises(OffsetOutOfRangeError):
+            log.read(o)
+    assert [log.read(o).value for o in range(8, 20)] == [f"v{i}" for i in range(8, 20)]
+    log.close()

@@ -1,24 +1,21 @@
 #!/usr/bin/env python
 """How the native log's per-request cost grows with the files in a bucket.
 
-Preloads a local log with ``--preload-files`` files of 1,000 records
-each (the ``log_service`` preload), then runs rounds of that
-workload's request pattern on one handle, the way the HTTP server's
-engine does: two single-record appends (each adds one file), a read at
-a seeded uniform offset, a read of the record just appended (the tail
-follower) and both bounds (``/bounds``). It prints one JSON line with
-the CPU milliseconds per round, averaged over windows of ``--window``
-rounds, each keyed by the number of files in the bucket at the
-window's end. No Spark session is built: the local log runs on ``os``
-and pyarrow alone.
+Preloads a local log with 100 files of 1,000 records each (the
+``log_service`` preload), then runs 1,000 rounds of that workload's
+request pattern on one handle, the way the HTTP server's engine does:
+two single-record appends (each adds one file), a read at a seeded
+uniform offset, a read of the record just appended (the tail follower)
+and both bounds (``/bounds``). It prints one JSON line with the CPU
+milliseconds per round, averaged over windows of 100 rounds, each keyed
+by the number of files in the bucket at the window's end. No Spark
+session is built: the local log runs on ``os`` and pyarrow alone.
 
-    python tools/log_growth.py [--preload-files 100] [--appends 2000]
-                               [--window 100] [--seed 31]
+    python tools/log_growth.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import random
@@ -28,25 +25,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+PRELOAD_FILES = 100
+APPENDS = 2000
+WINDOW = 100  # rounds per reported figure
+SEED = 31
+
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--preload-files", type=int, default=100)
-    ap.add_argument("--appends", type=int, default=2000)
-    ap.add_argument("--window", type=int, default=100)
-    ap.add_argument("--seed", type=int, default=31)
-    args = ap.parse_args()
-
     from proglog_spark import LogTable
 
-    rng = random.Random(args.seed)
+    rng = random.Random(SEED)
     with tempfile.TemporaryDirectory(prefix="loggrowth_") as d:
         log = LogTable.create(None, os.path.join(d, "log"))
-        for _ in range(args.preload_files):
+        for _ in range(PRELOAD_FILES):
             log.append([rng.randbytes(50).hex() for _ in range(1000)])
-        files = args.preload_files
+        files = PRELOAD_FILES
         windows, spent, rounds = [], 0.0, 0
-        for _ in range(args.appends // 2):
+        for _ in range(APPENDS // 2):
             t0 = time.process_time()
             log.append(["a" * 100])
             last, _ = log.append(["b" * 100])
@@ -56,7 +51,7 @@ def main() -> None:
             spent += time.process_time() - t0
             files += 2
             rounds += 1
-            if rounds == args.window:
+            if rounds == WINDOW:
                 windows.append((files, round(1000 * spent / rounds, 2)))
                 spent, rounds = 0.0, 0
         log.close()
@@ -64,8 +59,8 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "log_cpu_ms_per_round",
-                "preload_files": args.preload_files,
-                "appends": args.appends,
+                "preload_files": PRELOAD_FILES,
+                "appends": APPENDS,
                 "files": [f for f, _ in windows],
                 "cpu_ms_per_round": [ms for _, ms in windows],
             }
