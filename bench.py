@@ -13,9 +13,10 @@ materialized with ``collect()`` exactly as the driver's correctness
 gate does. After each wall is taken, the query's layer record is read:
 its Spark jobs, stages, tasks and executor time, the CPU of its Python
 workers, shuffle and spill bytes, Catalyst phases, join output rows,
-generated classes compiled and, for a streamed gate, its
-micro-batches. The per-query walls and records go to the artifact that
-``artifact_path`` names.
+generated classes compiled, the driver JVM's GC collections, GC ms and
+JIT compile ms over the query and its committed heap after it, and, for
+a streamed gate, its micro-batches. The per-query walls and records go
+to the artifact that ``artifact_path`` names.
 """
 
 from __future__ import annotations
@@ -190,6 +191,26 @@ def compile_counters(spark) -> tuple[int, float]:
     return classes, ns / 1e6
 
 
+def jvm_counters(spark) -> tuple[int, float, float]:
+    """(GC collections, GC ms, JIT compile ms) so far in this JVM,
+    summed over its collectors. On a local master the planner and every
+    task share the JVM, so these are JVM-wide, not per task like the
+    stage metrics' ``gc_ms``."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    gcs = list(mf.getGarbageCollectorMXBeans())
+    return (
+        sum(max(g.getCollectionCount(), 0) for g in gcs),
+        float(sum(max(g.getCollectionTime(), 0) for g in gcs)),
+        float(mf.getCompilationMXBean().getTotalCompilationTime()),
+    )
+
+
+def heap_committed_mb(spark) -> float:
+    """Heap the JVM has committed now, in MB."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return mf.getMemoryMXBean().getHeapMemoryUsage().getCommitted() / 2**20
+
+
 def python_cpu_ms(spark) -> float | None:
     """CPU ms so far of the Spark JVM's child process trees: the Python
     worker daemon and the workers it forked, live or reaped. None
@@ -209,12 +230,15 @@ def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict
     earlier call's; ``listener`` (``_progress_listener``, added to
     ``spark.streams``) supplies a streamed gate's micro-batches. The
     record is read after the wall is taken, once the listener bus has
-    delivered every event of the query."""
+    delivered every event of the query; its JVM counters
+    (``jvm_counters``) are read just outside the timed region, and
+    ``heap_committed_mb`` once the query is done."""
     sc = spark.sparkContext
     group = f"bench-{uuid.uuid4().hex[:12]}"
     sc.setJobGroup(group, name)
     n_started, n_batches = len(listener.started), len(listener.batches)
     classes0, janino0 = compile_counters(spark)
+    gc_n0, gc_ms0, jit_ms0 = jvm_counters(spark)
     py0 = python_cpu_ms(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
@@ -222,6 +246,7 @@ def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict
     rows = df.collect()
     wall = time.perf_counter() - t0
     classes, janino = compile_counters(spark)
+    gc_n, gc_ms, jit_ms = jvm_counters(spark)
     py1 = python_cpu_ms(spark)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     runs = listener.started[n_started:]
@@ -232,6 +257,10 @@ def time_query(spark, name: str, fn, sf_dir: str, listener) -> tuple[float, dict
         "compiled_classes": classes - classes0,
         "janino_ms": round(janino - janino0, 1),
         "python_cpu_ms": None if py0 is None else round(py1 - py0, 1),
+        "jvm_gc_count": gc_n - gc_n0,
+        "jvm_gc_ms": round(gc_ms - gc_ms0, 1),
+        "jit_ms": round(jit_ms - jit_ms0, 1),
+        "heap_committed_mb": round(heap_committed_mb(spark), 1),
     }
     if runs:
         rec["micro_batch_jobs"] = _jobs_counters(spark, runs)["jobs"]

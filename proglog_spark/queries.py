@@ -9905,14 +9905,27 @@ def docs_scene_cuts_streamed(spark, sf_dir):
             # Clips span <= ~1200 frame-seconds; "2 hours" clears any
             # fixture scale while the +30-day sentinel still seals
             segments = streaming_scene_segments(
-                spark.readStream.schema(schema).parquet(feed),
+                # the second wave lands as a subdirectory of the feed
+                spark.readStream.schema(schema)
+                .option("recursiveFileLookup", "true")
+                .parquet(feed),
                 gap_seconds=3600,
                 watermark="2 hours",
             )
-            out = gate.run(
-                gate.memory(segments, "scene_streamed").start,
-                lambda: second.write.mode("append").parquet(feed),
-            )
+
+            def second_wave():
+                # staged, then moved in with one rename: a Spark write
+                # commits its files one by one, and a listing taken
+                # mid-commit could split the wave (5 batches, or the
+                # sentinel ahead of second-half files that it then
+                # drops as late)
+                import os
+
+                staged = gate.path("wave2")
+                second.write.parquet(staged)
+                os.rename(staged, os.path.join(feed, "wave2"))
+
+            out = gate.run(gate.memory(segments, "scene_streamed").start, second_wave)
     finally:
         halves.unpersist()
     return out.where(F.col("doc_id") != _SENTINEL_KEY).orderBy("doc_id")

@@ -25,11 +25,28 @@ way:
   on every task). It is left unset on any other master: there the
   package arrives with ``--py-files`` after the daemon has started, so
   the daemon could not import it.
+- On a local master, a driver JVM with the Serial collector and a 16 MB
+  initial heap. There the driver is the whole cluster, and JDK 17's
+  default G1 grows its heap well ahead of the live set and keeps
+  remembered sets and mark bitmaps beside it: the ``queries``
+  benchmark's process peaked at a median 1,551 MB under G1 and 1,244 MB
+  this way, the log server's at 447 and 397 MB, and by the JVM's native
+  memory tracking the difference is heap and GC structures, not code or
+  metaspace (BASELINE.md). Serial's collections are single-threaded, so
+  their summed pause time is two to four times G1's, but the JVM's CPU
+  per pass fell and walls held. The options go in
+  ``spark.driver.defaultJavaOptions``, which the launcher puts before
+  ``spark.driver.extraJavaOptions``, so a caller's own driver options
+  still apply and win. They are left out when the caller's options or
+  the JVM's environment already pick a collector, since the JVM
+  refuses to start with two. A cluster master keeps the JVM's
+  defaults: its driver is not the whole cluster.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -47,12 +64,29 @@ def _env_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def worker_conf(master: str) -> dict[str, str]:
-    """Python-worker settings for ``master``: the zip-caching daemon on
-    a local master, nothing elsewhere (see the module docstring)."""
-    if master == "local" or master.startswith("local["):
-        return {"spark.python.daemon.module": "proglog_spark.worker_daemon"}
-    return {}
+# the driver JVM on a local master (see the module docstring)
+LOCAL_DRIVER_JAVA_OPTIONS = "-XX:+UseSerialGC -Xms16m"
+_COLLECTOR = re.compile(r"-XX:\+Use(Serial|Parallel|G1|Z|Shenandoah|Epsilon)GC\b")
+# options the launcher or the JVM itself adds to the driver's command
+_JVM_ENV_OPTIONS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+
+
+def local_conf(master: str, caller: dict[str, str] | None = None) -> dict[str, str]:
+    """Settings that only a local ``master`` gets: the zip-caching
+    Python worker daemon and the driver JVM's collector and initial
+    heap, the latter unless the ``caller``'s conf (``build_session``'s
+    ``extra_conf``) or the JVM's environment already picks a collector.
+    Nothing on any other master (see the module docstring)."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    conf = {"spark.python.daemon.module": "proglog_spark.worker_daemon"}
+    chosen = [
+        (caller or {}).get("spark.driver.extraJavaOptions", ""),
+        *(os.environ.get(name, "") for name in _JVM_ENV_OPTIONS),
+    ]
+    if not any(_COLLECTOR.search(opts) for opts in chosen):
+        conf["spark.driver.defaultJavaOptions"] = LOCAL_DRIVER_JAVA_OPTIONS
+    return conf
 
 
 def build_session(
@@ -127,7 +161,7 @@ def build_session(
             in ("1", "true", "yes", "on")
             else "false"
         ),
-    } | worker_conf(master)
+    } | local_conf(master, extra_conf)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

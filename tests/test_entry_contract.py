@@ -270,6 +270,25 @@ def test_bench_record_counts_python_worker_cpu(sf_dir):
     assert json.loads(out.stdout.splitlines()[-1])["python_cpu_ms"] > 0
 
 
+def test_bench_record_carries_jvm_counters(spark, sf_dir):
+    """A record carries the driver JVM's GC collections, GC ms and JIT
+    compile ms over the query, and its committed heap after it."""
+    import bench
+    from proglog_spark import queries as q
+
+    sc = spark.sparkContext
+    try:
+        _, rec = bench.time_query(
+            spark, "tpch_q1_pricing", q.queries()["tpch_q1_pricing"], sf_dir,
+            bench._progress_listener(),
+        )
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    for key in ("jvm_gc_count", "jvm_gc_ms", "jit_ms", "heap_committed_mb"):
+        assert rec[key] >= 0, key
+    assert rec["heap_committed_mb"] > 0
+
+
 def test_bench_artifact_is_keyed_by_sf_and_cores():
     """One rule names the artifact: the sf0.1 map at 32 cores keeps
     bench_queries.json, every other scale factor or core count gets a

@@ -251,7 +251,15 @@ def test_writer_never_expires_while_actively_renewing(spark, tmp_path):
     for i in range(1, 7):
         time.sleep(0.3)
         log.append([str(i)])
-        owner = json.load(open(_lock_path(path)))
+        # read as the program does: a renewal on the Hadoop store
+        # truncates the file before it writes, so a read can see it
+        # empty for a moment (None), never a stale lease
+        for _ in range(50):
+            owner = log._read_lock_owner()
+            if owner is not None:
+                break
+            time.sleep(0.01)
+        assert owner is not None, "lock file unreadable for 0.5 s"
         assert owner["lease_expires_at"] > time.time()
     log.close()
 

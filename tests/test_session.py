@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
-from proglog_spark.session import worker_conf
+import json
+import os
+import subprocess
+import sys
+
+from proglog_spark.session import _JVM_ENV_OPTIONS, LOCAL_DRIVER_JAVA_OPTIONS, local_conf
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _compilations(spark) -> int:
@@ -41,11 +48,54 @@ def test_warm_aqe_rerun_does_not_recompile(spark, sf_dir):
     assert _compilations(spark) == before
 
 
-def test_worker_daemon_only_on_a_local_master(spark):
-    daemon = "spark.python.daemon.module"
+def test_worker_daemon_only_on_a_local_master(spark, monkeypatch):
+    daemon, java = "spark.python.daemon.module", "spark.driver.defaultJavaOptions"
+    for name in _JVM_ENV_OPTIONS:
+        monkeypatch.delenv(name, raising=False)
     assert spark.conf.get(daemon) == "proglog_spark.worker_daemon"
-    assert worker_conf("local[4]") == {daemon: "proglog_spark.worker_daemon"}
-    assert worker_conf("local") == worker_conf("local[*]") == worker_conf("local[4]")
-    # on a cluster the package arrives after the daemon starts
+    assert spark.conf.get(java) == LOCAL_DRIVER_JAVA_OPTIONS
+    local = {daemon: "proglog_spark.worker_daemon", java: LOCAL_DRIVER_JAVA_OPTIONS}
+    for master in ("local", "local[*]", "local[4]"):
+        assert local_conf(master) == local
+    # a caller's own driver options are kept beside ours
+    assert local_conf("local[4]", {"spark.driver.extraJavaOptions": "-Dx=1"}) == local
+    # on a cluster the package arrives after the daemon starts, and the
+    # driver is not the whole cluster
     for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
-        assert worker_conf(master) == {}
+        assert local_conf(master) == {}
+
+
+def test_a_chosen_collector_leaves_ours_out(monkeypatch):
+    # the JVM refuses to start with two collector flags
+    only_daemon = {"spark.python.daemon.module": "proglog_spark.worker_daemon"}
+    g1 = {"spark.driver.extraJavaOptions": "-Dx=1 -XX:+UseG1GC"}
+    assert local_conf("local[4]", g1) == only_daemon
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:+UseParallelGC")
+    assert local_conf("local[4]") == only_daemon
+
+
+def test_local_driver_runs_the_serial_collector(spark):
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    assert [bean.getName() for bean in beans] == ["Copy", "MarkSweepCompact"]
+
+
+def test_session_with_its_own_collector_starts(tmp_path):
+    script = f"""
+import json, sys
+sys.path.insert(0, {REPO!r})
+from proglog_spark.session import build_session
+spark = build_session("own-gc", master="local[1]", shuffle_partitions=1,
+    extra_conf={{"spark.driver.extraJavaOptions": "-XX:+UseG1GC"}})
+beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+print(json.dumps([bean.getName() for bean in beans]))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "JAVA_TOOL_OPTIONS"}
+    done = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=180, cwd=tmp_path, env=env,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert json.loads(done.stdout.strip().splitlines()[-1]) == [
+        "G1 Young Generation", "G1 Old Generation",
+    ]

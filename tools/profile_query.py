@@ -14,8 +14,10 @@ classes the query compiled and their Janino milliseconds, read by
 query that still compiles on a warm rep either has code that changes on
 every run (a literal that differs per run, or an AQE stage id in a
 class name) or was evicted from the session's generated-class cache.
-Each line ends with the CPU the query's Python workers used
-(``bench.python_cpu_ms``).
+Each line then gives the CPU the query's Python workers used
+(``bench.python_cpu_ms``) and the driver JVM's GC collections, GC ms,
+JIT compile ms and committed heap after the query
+(``bench.jvm_counters``, ``bench.heap_committed_mb``).
 
 Usage:
   python tools/profile_query.py --queries name1,name2|all [--tag before]
@@ -71,26 +73,32 @@ def main() -> None:
         "plans", args.round,
     )
     for rep in range(args.reps):
-        rep_classes, rep_ms, rep_s = 0, 0.0, 0.0
+        rep_classes, rep_ms, rep_s, rep_gc_ms = 0, 0.0, 0.0, 0.0
         for name in names:
             if args.cold:
                 spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"profile:{name}:rep{rep}")
             c0, ms0 = bench.compile_counters(spark)
+            gc_n0, gc_ms0, jit0 = bench.jvm_counters(spark)
             py0 = bench.python_cpu_ms(spark)
             t0 = time.perf_counter()
             rows = fns[name](spark, args.sf).collect()
             dt = time.perf_counter() - t0
             c1, ms1 = bench.compile_counters(spark)
+            gc_n1, gc_ms1, jit1 = bench.jvm_counters(spark)
             py = None if py0 is None else bench.python_cpu_ms(spark) - py0
             classes, ms = c1 - c0, ms1 - ms0
             rep_classes, rep_ms, rep_s = rep_classes + classes, rep_ms + ms, rep_s + dt
+            rep_gc_ms += gc_ms1 - gc_ms0
             print(f"{name} rep{rep} {'cold' if args.cold else 'warm'}: "
                   f"{dt:.3f}s rows={len(rows)} "
                   f"compiled={classes} compile_ms={ms:.0f} "
-                  f"python_cpu_ms={'n/a' if py is None else f'{py:.0f}'}")
+                  f"python_cpu_ms={'n/a' if py is None else f'{py:.0f}'} "
+                  f"gc={gc_n1 - gc_n0} gc_ms={gc_ms1 - gc_ms0:.0f} "
+                  f"jit_ms={jit1 - jit0:.0f} "
+                  f"heap_mb={bench.heap_committed_mb(spark):.0f}")
         print(f"rep{rep} total: {rep_s:.1f}s compiled={rep_classes} "
-              f"compile_ms={rep_ms:.0f}")
+              f"compile_ms={rep_ms:.0f} gc_ms={rep_gc_ms:.0f}")
     for name in names:
         if args.tag and not name.endswith("_streamed"):
             os.makedirs(plans_dir, exist_ok=True)
