@@ -16,7 +16,9 @@ workers, shuffle and spill bytes, Catalyst phases, join output rows,
 generated classes compiled, the driver JVM's GC collections, GC ms and
 JIT compile ms over the query and its committed heap after it, and, for
 a streamed gate, its micro-batches. The per-query walls and records go
-to the artifact that ``artifact_path`` names.
+to the artifact that ``artifact_path`` names; its header also holds the
+session's boot seconds and whether the driver JVM was started from a
+class-data-sharing archive.
 """
 
 from __future__ import annotations
@@ -203,6 +205,14 @@ def jvm_counters(spark) -> tuple[int, float, float]:
         float(sum(max(g.getCollectionTime(), 0) for g in gcs)),
         float(mf.getCompilationMXBean().getTotalCompilationTime()),
     )
+
+
+def driver_cds_archive(spark) -> bool:
+    """Whether the driver JVM was launched with a dynamic
+    class-data-sharing archive (its input arguments name one)."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    args = mf.getRuntimeMXBean().getInputArguments()
+    return any(str(a).startswith("-XX:SharedArchiveFile=") for a in args)
 
 
 def heap_committed_mb(spark) -> float:
@@ -418,7 +428,9 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    t0 = time.perf_counter()
     spark = session(cpus)
+    boot_s = round(time.perf_counter() - t0, 2)
 
     # CACHE-ORDER POLICY (VERDICT-r5 item 3): queries run in FIXED
     # alphabetical order, NOT the rotation order queries() emits for
@@ -488,6 +500,8 @@ def main() -> None:
         "query_order": "alphabetical (see cache-order policy above)",
         "cpus": int(cpus),
         "code_rev": _code_rev(),
+        "boot_s": boot_s,
+        "driver_cds_archive": driver_cds_archive(spark),
     }
     # cold-attribution numbers from a prior SPARK_GRAFT_BENCH_COLD run
     # survive plain rewrites, so one artifact carries both views

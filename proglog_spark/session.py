@@ -41,6 +41,22 @@ way:
   the JVM's environment already pick a collector, since the JVM
   refuses to start with two. A cluster master keeps the JVM's
   defaults: its driver is not the whole cluster.
+- On a local master, a driver JVM mapped from a class-data-sharing
+  archive (``cds.py``). No Spark job runs on the log's hot path, yet
+  every process spent 2.4-2.9 s booting a JVM that loaded Spark's
+  classes from 287 jars; with the archive the log server's set-up fell
+  from a median 2.87 to 1.79 s (BASELINE.md). The archive holds only
+  what a boot loads, from a warm-up that builds a session and stops
+  it: a prototype archive dumped after one query as well was 144 MB
+  against 99.6 MB and raised the log server's peak RSS from ~397 to
+  ~429 MB, where the boot-shaped one lowers it to ~388 MB. CDS refuses
+  a non-empty directory on the class path and Spark puts its conf dir
+  there, so the dump and every session that maps the archive launch
+  with ``SPARK_CONF_DIR`` set to an empty dir in the cache; that is
+  done only while the real conf dir holds nothing but ``*.template``
+  files, so no setting is lost. A caller's own CDS or ``-Xshare``
+  flag, driver class path or default driver options leave the archive
+  out.
 """
 
 from __future__ import annotations
@@ -48,7 +64,10 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from proglog_spark import cds
 
 # One file per ~64 MB input split at scale; local tests override via
 # env. Read at build_session() CALL time, not import time — a test
@@ -73,20 +92,34 @@ _JVM_ENV_OPTIONS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "S
 
 def local_conf(master: str, caller: dict[str, str] | None = None) -> dict[str, str]:
     """Settings that only a local ``master`` gets: the zip-caching
-    Python worker daemon and the driver JVM's collector and initial
-    heap, the latter unless the ``caller``'s conf (``build_session``'s
-    ``extra_conf``) or the JVM's environment already picks a collector.
+    Python worker daemon; the driver JVM's collector and initial heap,
+    unless the ``caller``'s conf (``build_session``'s ``extra_conf``) or
+    the JVM's environment already picks a collector; and the
+    class-data-sharing archive, when one is built for this launch.
     Nothing on any other master (see the module docstring)."""
+    return _local_launch(master, caller or {})[0]
+
+
+def _local_launch(
+    master: str, caller: dict[str, str]
+) -> tuple[dict[str, str], cds.Cache | None, str | None]:
+    """``local_conf``, the archive cache this launch can use, and the
+    archive it maps (None when it has none yet)."""
     if master != "local" and not master.startswith("local["):
-        return {}
+        return {}, None, None
     conf = {"spark.python.daemon.module": "proglog_spark.worker_daemon"}
     chosen = [
-        (caller or {}).get("spark.driver.extraJavaOptions", ""),
+        caller.get("spark.driver.extraJavaOptions", ""),
         *(os.environ.get(name, "") for name in _JVM_ENV_OPTIONS),
     ]
-    if not any(_COLLECTOR.search(opts) for opts in chosen):
-        conf["spark.driver.defaultJavaOptions"] = LOCAL_DRIVER_JAVA_OPTIONS
-    return conf
+    java = [] if any(_COLLECTOR.search(opts) for opts in chosen) else [LOCAL_DRIVER_JAVA_OPTIONS]
+    cache = cds.cache_for(chosen, caller, LOCAL_DRIVER_JAVA_OPTIONS)
+    archive = cache and cache.archive()
+    if archive:
+        java.append(f"-XX:SharedArchiveFile={archive} {cds.LOG_OPTIONS}")
+    if java:
+        conf["spark.driver.defaultJavaOptions"] = " ".join(java)
+    return conf, cache, archive
 
 
 def build_session(
@@ -161,7 +194,9 @@ def build_session(
             in ("1", "true", "yes", "on")
             else "false"
         ),
-    } | local_conf(master, extra_conf)
+    }
+    local, cache, archive = _local_launch(master, extra_conf or {})
+    conf |= local
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -181,4 +216,10 @@ def build_session(
         os.environ["PYTHONPATH"] = (
             pkg_parent + (os.pathsep + current if current else "")
         )
-    return builder.getOrCreate()
+    if cache is None or SparkContext._gateway is not None:
+        return builder.getOrCreate()  # no archive to use, or no JVM to launch
+    if archive is None:
+        cds.build_at_exit(cache, master)
+        return builder.getOrCreate()
+    with cds.conf_dir(cache):
+        return builder.getOrCreate()

@@ -4,10 +4,17 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
-from proglog_spark.session import _JVM_ENV_OPTIONS, LOCAL_DRIVER_JAVA_OPTIONS, local_conf
+from proglog_spark import cds
+from proglog_spark.session import (
+    _JVM_ENV_OPTIONS,
+    LOCAL_DRIVER_JAVA_OPTIONS,
+    _local_launch,
+    local_conf,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,12 +55,29 @@ def test_warm_aqe_rerun_does_not_recompile(spark, sf_dir):
     assert _compilations(spark) == before
 
 
-def test_worker_daemon_only_on_a_local_master(spark, monkeypatch):
+def _planted_archive(monkeypatch, tmp_path) -> str:
+    """A whole archive for this launch's key in an empty cache; returns
+    the options that map it."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    cache = _local_launch("local[4]", {})[1]
+    archive = os.path.join(cache.root, f"{cache.key}.3.jsa")
+    with open(archive, "wb") as fh:
+        fh.write(b"jsa")
+    return f"-XX:SharedArchiveFile={archive} {cds.LOG_OPTIONS}"
+
+
+def test_worker_daemon_only_on_a_local_master(spark, monkeypatch, tmp_path):
     daemon, java = "spark.python.daemon.module", "spark.driver.defaultJavaOptions"
     for name in _JVM_ENV_OPTIONS:
         monkeypatch.delenv(name, raising=False)
     assert spark.conf.get(daemon) == "proglog_spark.worker_daemon"
-    assert spark.conf.get(java) == LOCAL_DRIVER_JAVA_OPTIONS
+    # the shared session maps the archive if one was built before it started
+    assert re.fullmatch(
+        re.escape(LOCAL_DRIVER_JAVA_OPTIONS)
+        + rf"( -XX:SharedArchiveFile=\S+\.jsa {re.escape(cds.LOG_OPTIONS)})?",
+        spark.conf.get(java),
+    )
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "empty"))
     local = {daemon: "proglog_spark.worker_daemon", java: LOCAL_DRIVER_JAVA_OPTIONS}
     for master in ("local", "local[*]", "local[4]"):
         assert local_conf(master) == local
@@ -63,14 +87,28 @@ def test_worker_daemon_only_on_a_local_master(spark, monkeypatch):
     # driver is not the whole cluster
     for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
         assert local_conf(master) == {}
+    # once the archive is built, every local launch maps it
+    mapped = _planted_archive(monkeypatch, tmp_path)
+    local[java] = f"{LOCAL_DRIVER_JAVA_OPTIONS} {mapped}"
+    for master in ("local", "local[*]", "local[4]"):
+        assert local_conf(master) == local
+    assert local_conf("local[4]", {"spark.driver.extraJavaOptions": "-Dx=1"}) == local
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
+        assert local_conf(master) == {}
 
 
-def test_a_chosen_collector_leaves_ours_out(monkeypatch):
+def test_a_chosen_collector_leaves_ours_out(monkeypatch, tmp_path):
     # the JVM refuses to start with two collector flags
     only_daemon = {"spark.python.daemon.module": "proglog_spark.worker_daemon"}
     g1 = {"spark.driver.extraJavaOptions": "-Dx=1 -XX:+UseG1GC"}
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "empty"))
     assert local_conf("local[4]", g1) == only_daemon
+    # the archive does not depend on the collector
+    mapped = _planted_archive(monkeypatch, tmp_path)
+    assert local_conf("local[4]", g1) == only_daemon | {"spark.driver.defaultJavaOptions": mapped}
     monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:+UseParallelGC")
+    assert local_conf("local[4]") == only_daemon | {"spark.driver.defaultJavaOptions": mapped}
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "empty"))
     assert local_conf("local[4]") == only_daemon
 
 

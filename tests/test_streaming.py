@@ -1571,25 +1571,33 @@ def gate_progress(spark):
 
 
 def _session_state(spark):
+    """What a gate could leave behind, limited to what this session can
+    create: its width and temp views, ``_StreamGate``'s work dirs in the
+    temp dir, and the entries of the session's own local dir (the
+    ``spark-*`` dir it made under its local root). The rest of the
+    shared temp dir belongs to other processes too."""
     import os
     import tempfile
 
     tmp = tempfile.gettempdir()
+    own = spark._jvm.org.apache.spark.util.Utils.getLocalDir(spark.sparkContext._jsc.sc().conf())
     return {
         "width": spark.conf.get("spark.sql.shuffle.partitions"),
         "views": {t.name for t in spark.catalog.listTables() if t.isTemporary},
-        "tmp_dirs": {d for d in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, d))},
+        "gate_dirs": {d for d in os.listdir(tmp) if d.startswith("stream_gate_")},
+        "local_dirs": set(os.listdir(own)),
     }
 
 
 def _assert_clean_exit(spark, before):
     """No query left running, the session width restored, and no temp
-    view or temp directory left behind by the gate."""
+    view, gate work dir or local dir entry left behind by the gate."""
     after = _session_state(spark)
     assert spark.streams.active == []
     assert after["width"] == before["width"]
     assert after["views"] - before["views"] == set()
-    assert after["tmp_dirs"] - before["tmp_dirs"] == set()
+    assert after["gate_dirs"] - before["gate_dirs"] == set()
+    assert after["local_dirs"] - before["local_dirs"] == set()
 
 
 @pytest.mark.parametrize("name", sorted(_GATE_BATCHES))

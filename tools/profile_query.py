@@ -17,7 +17,9 @@ class name) or was evicted from the session's generated-class cache.
 Each line then gives the CPU the query's Python workers used
 (``bench.python_cpu_ms``) and the driver JVM's GC collections, GC ms,
 JIT compile ms and committed heap after the query
-(``bench.jvm_counters``, ``bench.heap_committed_mb``).
+(``bench.jvm_counters``, ``bench.heap_committed_mb``). The first line
+gives the session's boot seconds and whether its driver JVM was
+started from a class-data-sharing archive (``bench.driver_cds_archive``).
 
 Usage:
   python tools/profile_query.py --queries name1,name2|all [--tag before]
@@ -53,12 +55,15 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    t0 = time.perf_counter()
     spark = build_session(
         app_name="profile-query",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
+    print(f"session boot: {time.perf_counter() - t0:.2f}s "
+          f"cds_archive={bench.driver_cds_archive(spark)}")
 
     bench.warm_up(spark, args.sf, int(cpus))
 
