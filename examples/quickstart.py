@@ -5,8 +5,8 @@
 Walks the paths a migrating user cares about, in order: the log
 itself (produce/consume/scan/tail, the reference's RPC surface), the
 low-latency native consumer, the Engine facade with ACL + SQL, the
-``format("proglog")`` connector, one analytics query from the
-declared surface, and the curation pipeline into training shards.
+``format("proglog")`` connector, analytics queries and operators from
+the declared surface, and the HTTP edge.
 Each step prints what it did; ``run()`` returns the artifacts so the
 test suite can assert on them (tests/test_examples.py).
 """
@@ -77,7 +77,7 @@ def run(spark, workdir: str, sf_dir: str = SF_DIR) -> dict:
         .count()
     )
 
-    # 5 — one declared analytics query (156 total; see QUERIES.md)
+    # 5 — one declared analytics query (203 total; see QUERIES.md)
     from proglog_spark.queries import REGISTRY
 
     out["scorecard"] = [
@@ -283,13 +283,7 @@ def run(spark, workdir: str, sf_dir: str = SF_DIR) -> dict:
     ]
     print("a/v verdicts:", out["av_verdicts"])
 
-    # 6 — curation pipeline into training shards
-    from proglog_spark.pipelines import curate_and_shard
-
-    acct = curate_and_shard(spark, docs, f"{workdir}/shards", n_shards=2)
-    out["shard_accounting"] = [tuple(r) for r in acct.collect()]
-
-    # 7 — the HTTP edge (the reference's wire protocol)
+    # 6 — the HTTP edge (the reference's wire protocol)
     from proglog_spark import HttpLogServer
 
     srv = HttpLogServer(engine)

@@ -80,21 +80,6 @@ def _emit_msg_field(out: bytearray, field_no: int, data: bytes) -> None:
     out += data
 
 
-def _skip(buf: bytes, pos: int, wire_type: int) -> int:
-    """Skip an unknown field (forward compatibility, per spec)."""
-    if wire_type == _VARINT:
-        _, pos = decode_varint(buf, pos)
-        return pos
-    if wire_type == _I64:
-        return pos + 8
-    if wire_type == _LEN:
-        n, pos = decode_varint(buf, pos)
-        return pos + n
-    if wire_type == _I32:
-        return pos + 4
-    raise ValueError(f"unsupported wire type {wire_type}")
-
-
 def _fields(buf: bytes):
     """Yield (field_no, wire_type, value) over a message's fields —
     varint fields yield ints, length-delimited yield bytes; unknown

@@ -123,7 +123,7 @@ _SHUFFLE_NODE_NAMES = frozenset(
         "FlatMapGroupsInPandas", "FlatMapGroupsInPandasWithState",
         # ADVICE-r9: "CoGroup" above only matches the Scala TYPED node;
         # pyspark's groupBy().cogroup().applyInPandas analyzes to
-        # FlatMapCoGroupsInPandas (operators/cogroup.py produces it),
+        # FlatMapCoGroupsInPandas,
         # and the typed groupByKey family has its own node names too —
         # all of them hash-partition their input, so probing df.rdd
         # under AQE would eagerly run those exchanges and the guard

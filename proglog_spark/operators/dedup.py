@@ -36,7 +36,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from proglog_spark.operators.pairs import blocked_pairs, cap_hubs, join_payload
@@ -83,13 +83,6 @@ def shingle_sets(
     return df.select(
         F.col(id_col).alias("id"), F.array_distinct(grams).alias("sh_arr")
     ).withColumn("n_sh", F.size("sh_arr").cast("long"))
-
-
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Exploded distinct shingles per document: (id, shingle)."""
-    return shingle_sets(df, id_col, text_col, n).select(
-        "id", F.explode("sh_arr").alias("shingle")
-    )
 
 
 def _shared_shingles(
@@ -632,21 +625,4 @@ def connected_components(
     return (
         nodes.join(reps, nodes.id == reps.src, "left")
         .select("id", F.coalesce("rep", "id").alias("rep"))
-    )
-
-
-def dedup_keep_first(df: DataFrame, key, order_col: str) -> DataFrame:
-    """Generic exact dedup: keep the first row per key by order_col.
-
-    Window-based (row_number over key partitions) — the canonical
-    hash-shuffle dedup; no driver-side state.
-    """
-    keys = key if isinstance(key, (list, tuple)) else [key]
-    if "_rn" in df.columns:
-        raise ValueError("column '_rn' already exists on the input")
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
     )

@@ -2,9 +2,11 @@
 
 The scale pattern here is *partial aggregation of small dense
 matrices*: each Arrow batch contributes one d×d partial Gram matrix
-(numpy, vectorized), Spark reduces partition-count partials, and only
+(``quantized_gram``: numpy, vectorized, exact int64 on the
+floor(x·scale) grid), Spark reduces partition-count partials, and only
 the final d×d matrix — O(d²), independent of row count — reaches the
-driver, where the iterative eigensolve runs. At 100 TB the data never
+driver, where the iterative eigensolve runs
+(``integer_power_iteration``). At 100 TB the data never
 moves: one narrow mapInPandas pass + a tiny all-to-one reduce, no
 wide shuffle of vectors.
 
@@ -19,8 +21,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-POWER_ITERATIONS = 300
-
 
 def masked_vector_rows(vecs: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     """NULL-guard for Arrow-batched vector UDFs: ``(mask, mat)`` where
@@ -30,7 +30,7 @@ def masked_vector_rows(vecs: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     NULL embedding row would otherwise kill the whole job with an
     opaque worker TypeError (np.stack over a None). Callers emit NULL
     for masked-out rows, matching this module's NULL-skip contract
-    (gram_matrix/quantized_gram drop NULL vectors from their sums).
+    (quantized_gram drops NULL vectors from its sums).
     """
     arr = vecs.to_numpy()
     mask = np.fromiter((v is not None for v in arr), dtype=bool, count=len(arr))
@@ -63,173 +63,24 @@ def scatter_masked(mask: np.ndarray, values) -> np.ndarray:
     return out
 
 
-def gram_matrix(df: DataFrame, vec_col: str = "embedding", dim: int | None = None):
-    """Compute (n, X^T X) for the vector column — distributed.
-
-    Returns ``(n_rows, numpy (d,d) float64)``. One mapInPandas pass
-    emits a flattened partial per Arrow batch; the driver sums the
-    ~numPartitions partials (bounded, small). Equivalent to
-    ``treeAggregate`` without leaving the DataFrame API.
-    """
-    if dim is None:
-        # first NON-NULL row: a leading NULL vector must not break
-        # inference (NULLs are skipped by the sum below)
-        first = df.select(vec_col).where(df[vec_col].isNotNull()).first()
-        if first is None:
-            raise ValueError("gram_matrix on empty DataFrame")
-        dim = len(first[0])
-    d = dim
-
-    def partials(batches):
-        acc = np.zeros((d, d), dtype=np.float64)
-        n = 0
-        for pdf in batches:
-            # NULL vectors are skipped, matching the SQL/explode
-            # formulations (their sums drop NULLs); without the filter
-            # np.asarray(None) raises an opaque TypeError in the worker
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col] if v is not None]
-            )
-            if len(m):
-                acc += m.T @ m
-                n += len(m)
-        if n:
-            yield pd.DataFrame({"n": [n], "gram": [acc.ravel().tolist()]})
-
-    rows = df.select(vec_col).mapInPandas(
-        partials, "n LONG, gram ARRAY<DOUBLE>"
-    ).collect()
-    if not rows:
-        raise ValueError("gram_matrix on empty DataFrame")
-    n_total = sum(r.n for r in rows)
-    gram = np.sum(
-        [np.asarray(r.gram, dtype=np.float64).reshape(d, d) for r in rows],
-        axis=0,
-    )
-    return n_total, gram
-
-
-def top_components(
-    gram: np.ndarray, k: int = 2, iterations: int = POWER_ITERATIONS
-) -> list[tuple[float, np.ndarray]]:
-    """Top-k eigenpairs of a symmetric PSD matrix by power iteration
-    with deflation. Deterministic: fixed all-ones start vector, fixed
-    iteration count, sign normalized so the largest-|loading| entry is
-    positive. Driver-side on a d×d matrix — O(k·iters·d²), data-free.
-    """
-    g = gram.copy()
-    d = g.shape[0]
-    out: list[tuple[float, np.ndarray]] = []
-    for _ in range(k):
-        v = np.ones(d) / np.sqrt(d)
-        for _i in range(iterations):
-            w = g @ v
-            norm = np.linalg.norm(w)
-            if norm == 0.0:
-                break
-            v = w / norm
-        lam = float(v @ g @ v)
-        top = int(np.argmax(np.abs(v)))
-        if v[top] < 0:
-            v = -v
-        out.append((lam, v))
-        g = g - lam * np.outer(v, v)  # deflate
-    return out
-
-
-def pca_summary(
-    df: DataFrame, vec_col: str = "embedding", k: int = 2
-) -> DataFrame:
-    """Top-k PCA (uncentered) summary as a DataFrame: per component its
-    eigenvalue share of total variance (micro fixed-point), the
-    dimension with the largest loading, and that loading (milli).
-
-    Output is a k-row JVM VALUES relation — numeric literals only. The
-    eigensolve is iterative (power method), hence rows-only checked
-    (SURVEY §2.1: float reassociation across partition partials).
-    """
-    spark = df.sparkSession
-    _n, gram = gram_matrix(df, vec_col)
-    total_var = float(np.trace(gram))
-    if total_var == 0.0:
-        # all-zero corpus: variance shares are undefined — raise the
-        # same clear error class as empty input, not ZeroDivisionError
-        raise ValueError("pca_summary on zero-variance corpus")
-    comps = top_components(gram, k)
-    values = ", ".join(
-        f"({i}, {int(np.floor(1e6 * lam / total_var))}, "
-        f"{int(np.argmax(np.abs(v)))}, {int(np.floor(1e3 * v[np.argmax(np.abs(v))]))})"
-        for i, (lam, v) in enumerate(comps)
-    )
-    return spark.sql(
-        f"SELECT * FROM (VALUES {values}) AS "
-        "t(component, var_share_micro, top_dim, top_loading_milli) "
-        "ORDER BY component"
-    )
-
-
-def grouped_vector_sums(
-    df, key_col: str, vec_col: str, micro: bool = True
-):
-    """Per-key element-wise vector sums WITHOUT the explode fan-out —
-    the Arrow twin of the `emb_label_centroids` formulation.
-
-    The explode path multiplies rows ×d before its partial agg (fully
-    codegen, no Python); this path keeps vectors whole: one shuffle on
-    the key, then each group's Arrow batches stack into a numpy matrix
-    and column-sum — O(rows·d) flops at memory bandwidth, one output
-    row per key. Use it when d is large enough that ×d row expansion
-    dominates (d ≳ several hundred); below that the JVM explode wins
-    by skipping Python workers entirely.
-
-    With ``micro=True`` values are floored to int64 micro fixed point
-    BEFORE summing — bit-identical to the explode path's aggregation
-    (integer addition is associative; float sums would be
-    order-dependent across both paths).
-
-    Output: (key, n_vecs LONG, sums ARRAY<LONG|DOUBLE>).
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_type = "ARRAY<BIGINT>" if micro else "ARRAY<DOUBLE>"
-    key_type = df.schema[key_col].dataType.simpleString()
-    schema = f"{key_col} {key_type}, n_vecs LONG, sums {out_type}"
-
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        # float64 BEFORE either branch: ARRAY<FLOAT> columns arrive as
-        # float32 and the micro=False declared ARRAY<DOUBLE> output
-        # would otherwise accumulate at float32 precision (diverging
-        # from the explode path, which casts per element)
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        if micro:
-            mat = np.floor(mat * 1_000_000).astype(np.int64)
-        sums = mat.sum(axis=0)
-        return pd.DataFrame(
-            {
-                key_col: [pdf[key_col].iloc[0]],
-                "n_vecs": [len(pdf)],
-                "sums": [sums.tolist()],
-            }
-        )
-
-    return df.select(key_col, vec_col).groupBy(key_col).applyInPandas(agg, schema)
-
-
 def quantized_gram(
     df: DataFrame, vec_col: str = "embedding", dim: int | None = None, scale: int = 1000
 ) -> np.ndarray:
     """EXACT integer Gram on the floor(x·scale) grid: (d, d) int64.
 
-    Same partial-aggregation shape as `gram_matrix`, but integer
+    One mapInPandas pass emits a flattened partial per Arrow batch;
+    the driver sums the ~numPartitions partials (bounded, small) —
+    ``treeAggregate`` without leaving the DataFrame API. Integer
     addition is ASSOCIATIVE, so the distributed sum is
     order-independent — the result is bit-identical on any partition
-    layout and replayable by an ANSI SQL oracle (the float Gram's
-    reassociation nondeterminism is exactly why `pca_summary` is only
-    rows-only checked). Bounds: |q| ≤ scale·max|x|; a 2e3-magnitude
-    grid over millions of rows stays far inside int64.
+    layout and replayable by an ANSI SQL oracle (a float Gram's
+    reassociation would make it layout-dependent). Bounds:
+    |q| ≤ scale·max|x|; a 2e3-magnitude grid over millions of rows
+    stays far inside int64.
     """
-    if dim is None:  # same first-row inference as gram_matrix
+    if dim is None:
+        # first NON-NULL row: a leading NULL vector must not break
+        # inference (NULLs are skipped by the sum below)
         first = df.select(vec_col).where(df[vec_col].isNotNull()).first()
         if first is None:
             raise ValueError("quantized_gram on empty DataFrame")

@@ -2,25 +2,23 @@
 
 Three tiers, all shuffle-minimal:
 
-- ``brute_force_topk`` — exact cosine top-k: broadcast the query
-  vectors, one corpus pass, per-query rank pushdown. The baseline.
-- ``quantized_dot_topk`` — integer-grid dot product (exact
-  arithmetic), the oracle-checkable variant of the same plan shape.
-- ``lsh_ann_topk`` — multi-table random-hyperplane LSH: T independent
-  tables of b sign-bits each; a neighbor with per-bit agreement p is
-  recalled with 1-(1-p^b)^T. The 100 TB path: the corpus pass scores
-  only bucket-colliding candidates, and bucketing itself is one
-  narrow projection. (An IVF variant would swap the hash for k-means
-  cells; hyperplanes need no training pass.)
+- ``brute_force_topk`` — exact float cosine top-k: broadcast the
+  query vectors, one corpus pass, per-query rank pushdown. The recall
+  truth the ANN tests measure against.
+- ``quantized_dot_topk`` / ``quantized_cosine_topk`` — the same plan
+  shape on the floor(x·scale) integer grid (exact arithmetic, so the
+  oracle can hash-compare it).
+- ``quantized_lsh_ann_topk`` — multi-table random-hyperplane LSH: T
+  independent tables of b sign-bits each; a neighbor with per-bit
+  agreement p is recalled with 1-(1-p^b)^T. The 100 TB path: the
+  corpus pass scores only bucket-colliding candidates, and bucketing
+  itself is one narrow projection. ``quantized_ivf_ann_topk`` swaps
+  the hash for integer k-means cells.
 
 Hyperplanes are deterministic: component d of plane p is ±1 by a bit
-of md5 — no RNG state, stable across sessions. Signs of ±1-plane dots
-are exact, so *bucketing* is deterministic; top-k *ranking* under
-float cosine is property-tested, not oracle-hashed (FIXTURES.md §3.5).
-The quantized twins (`quantized_cosine_topk`, `quantized_lsh_ann_topk`)
-move both ranking AND candidate selection onto the floor(x·scale)
-integer grid, which puts the exact-cosine and LSH-ANN queries inside
-the hash-compared oracle gate.
+of md5 — no RNG state, stable across sessions. Both candidate
+selection and ranking run on the integer grid, which puts the
+exact-cosine and ANN queries inside the hash-compared oracle gate.
 
 Parameter note: the driver's synthetic embeddings are near-random
 (top-10 neighbors at cosine 0.25-0.4 ⇒ per-bit p ≈ 0.58-0.63), which
@@ -194,13 +192,13 @@ def hyperplane_signs(dim: int, planes: int, salt: str = "plane") -> list[list[in
     return out
 
 
-def with_lsh_buckets(
+def with_quantized_lsh_buckets(
     df: DataFrame,
     dim: int,
     bits: int = 4,
     tables: int = 8,
     vec_col: str = "embedding",
-    quantize_scale: int | None = None,
+    scale: int = 1000,
 ) -> DataFrame:
     """Append (lsh_table, lsh_bucket): one output row per hash table.
 
@@ -213,21 +211,16 @@ def with_lsh_buckets(
     and closure-shipped; buckets are deterministic (each output
     element is an independent row-dot, no batch-dependent reduction).
 
-    ``quantize_scale``: when set, the sign test runs on the
-    floor(x·scale) int64 grid — exact integer arithmetic,
-    bit-identical in numpy, Spark SQL, and any ANSI engine, which is
-    what lets a SQL oracle replay the bucketing (and with it an ANN
-    query's whole candidate set). None = float signs (still
-    deterministic per batch row, but not engine-portable).
+    The sign test runs on the floor(x·scale) int64 grid — exact
+    integer arithmetic, bit-identical in numpy, Spark SQL, and any
+    ANSI engine, which is what lets a SQL oracle replay the bucketing
+    (and with it an ANN query's whole candidate set).
     """
     from pyspark.sql import types as T
 
     n_bits, n_tables = bits, tables
-    q = None if quantize_scale is None else float(quantize_scale)
-    planes = np.array(
-        hyperplane_signs(dim, bits * tables),
-        dtype=np.float64 if q is None else np.int64,
-    ).T
+    q = float(scale)
+    planes = np.array(hyperplane_signs(dim, bits * tables), dtype=np.int64).T
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _buckets(vecs: pd.Series) -> pd.Series:
@@ -242,11 +235,8 @@ def with_lsh_buckets(
         mask, mat = masked_vector_rows(vecs)
         buckets = []
         if mat.size:
-            if q is None:
-                signs = (mat @ planes) >= 0.0  # (rows, bits*tables)
-            else:
-                qmat = np.floor(mat * q).astype(np.int64)  # quantized_dot grid
-                signs = (qmat @ planes) >= 0  # exact: int64 matmul
+            qmat = np.floor(mat * q).astype(np.int64)  # quantized_dot grid
+            signs = (qmat @ planes) >= 0  # exact: int64 matmul
             weights = np.tile(1 << np.arange(n_bits, dtype=np.int64), n_tables)
             per_bit = signs * weights  # (rows, bits*tables)
             buckets = list(per_bit.reshape(len(mat), n_tables, n_bits).sum(axis=2))
@@ -255,84 +245,6 @@ def with_lsh_buckets(
     return df.select(
         "*", F.posexplode(_buckets(F.col(vec_col))).alias("lsh_table", "lsh_bucket")
     )
-
-
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    bits: int | None = None,
-    tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via multi-table hyperplane LSH.
-
-    Candidates = corpus vectors sharing any table's bucket with the
-    query; the join key is (lsh_table, lsh_bucket) so each table
-    contributes ~corpus/2^bits candidates. The corpus explode is
-    narrow — (id, table, bucket) only — and candidate dedup happens
-    before vectors are joined back for scoring, so each corpus
-    vector travels at most once (to its candidate row), never
-    ``tables`` times.
-
-    ``bits=None`` (default) auto-sizes via :func:`adaptive_lsh_bits`:
-    FIXED bits make each query score a constant FRACTION of the
-    corpus (n/2^bits per table — a linear scan in disguise at 100 TB);
-    the ladder keeps expected per-query candidates ≈ tables·occupancy,
-    corpus-size-independent. More bits trade per-table recall, the
-    ``tables`` dial compensates (recall stays property-tested).
-    """
-    if bits is None:
-        bits = adaptive_lsh_bits(corpus.count() if n is None else n)
-    c = with_lsh_buckets(corpus.select(id_col, vec_col), dim, bits, tables, vec_col).select(
-        id_col, "lsh_table", "lsh_bucket"
-    )
-    q = with_lsh_buckets(queries, dim, bits, tables, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        "lsh_table",
-        "lsh_bucket",
-    )
-    cand = (
-        c.join(
-            F.broadcast(q.select("query_id", "lsh_table", "lsh_bucket")),
-            on=["lsh_table", "lsh_bucket"],
-        )
-        .where(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col)
-        .dropDuplicates(["query_id", id_col])
-    )
-    q_vecs = q.select("query_id", "q_vec").dropDuplicates(["query_id"])
-    scored = (
-        cand.join(corpus.select(id_col, vec_col), on=id_col)
-        .join(F.broadcast(q_vecs), on="query_id")
-        .select(
-            "query_id",
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col("q_vec")).alias("cosine"),
-        )
-    )
-    return topk_per_key(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col(id_col)], k, rank_col="rank"
-    )
-
-
-def with_quantized_lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    bits: int = 4,
-    tables: int = 8,
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """`with_lsh_buckets` on the floor(x*scale) integer grid — thin
-    alias for ``with_lsh_buckets(..., quantize_scale=scale)``: one
-    shared implementation so the float and quantized paths cannot
-    drift."""
-    return with_lsh_buckets(df, dim, bits, tables, vec_col, quantize_scale=scale)
 
 
 def quantized_lsh_ann_topk(
@@ -347,13 +259,13 @@ def quantized_lsh_ann_topk(
     scale: int = 1000,
     n: int | None = None,
 ) -> DataFrame:
-    """`lsh_ann_topk` made oracle-exact end-to-end: integer-grid sign
-    bucketing (`with_quantized_lsh_buckets`) picks the candidate set
-    and `quantized_cosine_key` ranks it — every step deterministic
-    BIGINT arithmetic, so an ANSI SQL oracle reproduces the exact
-    approximate answer, candidates and all. Plan shape is identical
-    to the float version: narrow corpus explode, broadcast query
-    buckets, candidate dedup before vectors join back.
+    """Approximate cosine top-k via multi-table hyperplane LSH,
+    oracle-exact end-to-end: integer-grid sign bucketing
+    (`with_quantized_lsh_buckets`) picks the candidate set and
+    `quantized_cosine_key` ranks it — every step deterministic BIGINT
+    arithmetic, so an ANSI SQL oracle reproduces the exact approximate
+    answer, candidates and all. Plan shape: narrow corpus explode,
+    broadcast query buckets, candidate dedup before vectors join back.
     Output: (query_id, vec_id, cos2_pico, rank).
 
     ``bits=None`` (default) auto-sizes via :func:`adaptive_lsh_bits`
@@ -1055,126 +967,6 @@ def ivf_train_sample(
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    sample_mod: int | None = None,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_train_rows: int = 1 << 18,
-):
-    """Deterministic mini k-means for IVF cells (the FAISS recipe:
-    train on a bounded sample, driver-side).
-
-    Sample = rows with ``id % sample_mod == 0`` (deterministic), with
-    ``sample_mod`` derived from the corpus count by default so the
-    driver collect is capped at ``max_train_rows`` (≤256k vectors) at
-    ANY corpus size — see :func:`ivf_train_sample`. Init = first
-    n_cells sample vectors by id; ``iters`` Lloyd steps in numpy.
-    Vectors are L2-normalized so cell assignment by max dot product ==
-    max cosine (spherical k-means).
-    """
-    rows = ivf_train_sample(
-        corpus, sample_mod, max_train_rows, id_col=id_col, vec_col=vec_col
-    )
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    centroids = mat[:n_cells].copy()
-    for _ in range(iters):
-        assign = (mat @ centroids.T).argmax(axis=1)
-        for c in range(n_cells):
-            members = mat[assign == c]
-            if len(members):
-                m = members.sum(axis=0)
-                centroids[c] = m / max(np.linalg.norm(m), 1e-12)
-    return centroids
-
-
-def _with_ivf_cells(df: DataFrame, centroids, n_probe: int, vec_col: str) -> DataFrame:
-    """Append (ivf_cell) — one row per probed cell (n_probe >= 1).
-
-    Assignment is one Arrow-batched matmul against the (tiny,
-    closure-shipped) centroid matrix; for the corpus n_probe=1 (each
-    vector lives in exactly one cell), queries probe their n_probe
-    nearest cells.
-    """
-    from pyspark.sql import types as T
-
-    C = np.asarray(centroids, dtype=np.float64)
-    kp = n_probe
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _cells(vecs: pd.Series) -> pd.Series:
-        from proglog_spark.operators.linalg import (
-            masked_vector_rows,
-            scatter_masked,
-        )
-
-        # NULL vector -> NULL cell list (explode drops the row)
-        mask, mat = masked_vector_rows(vecs)
-        cells = []
-        if mat.size:
-            norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            sims = (mat / norms) @ C.T
-            top = np.argsort(-sims, axis=1)[:, :kp]
-            cells = [[int(c) for c in row] for row in top]
-        return pd.Series(list(scatter_masked(mask, cells)))
-
-    return df.select("*", F.explode(_cells(F.col(vec_col))).alias("ivf_cell"))
-
-
-def ivf_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    sample_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k via IVF (inverted-file) cells — the
-    trained-partition alternative to hyperplane LSH.
-
-    Corpus vectors land in their nearest of ``n_cells`` spherical
-    k-means cells (narrow (id, cell) projection); each query probes
-    its ``n_probe`` nearest cells, so the scored fraction is
-    ~n_probe/n_cells of the corpus. Same plan shape as lsh_ann_topk:
-    narrow explode → broadcast bucket join → dedup → vector join-back
-    → windowed top-k. Recall is property-tested (FIXTURES §3.5).
-    """
-    centroids = train_ivf_centroids(
-        corpus, n_cells, sample_mod, id_col=id_col, vec_col=vec_col
-    )
-    c = _with_ivf_cells(corpus.select(id_col, vec_col), centroids, 1, vec_col).select(
-        id_col, "ivf_cell"
-    )
-    q = _with_ivf_cells(queries, centroids, n_probe, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), "ivf_cell"
-    )
-    cand = (
-        c.join(F.broadcast(q.select("query_id", "ivf_cell")), on="ivf_cell")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col)
-        .dropDuplicates(["query_id", id_col])
-    )
-    q_vecs = q.select("query_id", "q_vec").dropDuplicates(["query_id"])
-    scored = (
-        cand.join(corpus.select(id_col, vec_col), on=id_col)
-        .join(F.broadcast(q_vecs), on="query_id")
-        .select(
-            "query_id",
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col("q_vec")).alias("cosine"),
-        )
-    )
-    return topk_per_key(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col(id_col)], k, rank_col="rank"
-    )
-
-
 # sorts strictly below every real IVF assignment key (|key| <= scale *
 # dim * scale^2 = 6.4e10 at the defaults) — cells with an all-zero
 # centroid attract nothing
@@ -1214,11 +1006,10 @@ def quantized_ivf_train(
     scale: int = 1000,
     sample_rows: list | None = None,
 ) -> np.ndarray:
-    """Integer-exact spherical k-means for IVF cells — the
-    oracle-replayable twin of :func:`train_ivf_centroids`.
+    """Integer-exact spherical k-means for IVF cells.
 
-    Same FAISS discipline (train driver-side on the deterministic
-    bounded sample, :func:`ivf_train_sample`), but every step is int64
+    The FAISS discipline (train driver-side on the deterministic
+    bounded sample, :func:`ivf_train_sample`), with every step int64
     arithmetic on the floor(x·scale) grid so an ANSI SQL engine
     reproduces the exact centroid trajectory:
 
@@ -1312,7 +1103,8 @@ def quantized_ivf_ann_topk(
     scale: int = 1000,
     sample_rows: list | None = None,
 ) -> DataFrame:
-    """:func:`ivf_ann_topk` made oracle-exact end-to-end: integer
+    """Approximate cosine top-k via IVF (inverted-file) cells,
+    oracle-exact end-to-end: integer
     k-means training (:func:`quantized_ivf_train`), integer cell
     assignment/probing, and :func:`quantized_cosine_key` ranking — the
     full approximate answer (candidate sets included) replays in ANSI
@@ -1439,130 +1231,3 @@ def embedding_cosine_neardup(
         .select(*_PAIR, quantized_cosine_key("qd", "na", "nb").alias("cos2_pico"))
     )
 
-
-# ---------------------------------------------------------------------------
-# Persistent IVF index — build offline, query online (the FAISS usage
-# pattern at corpus scale: index once, every query reads only its
-# probed cells)
-# ---------------------------------------------------------------------------
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    sample_mod: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize an IVF index: centroids + the corpus laid out as
-    one hive directory per cell (``cells/ivf_cell=K/``).
-
-    The layout IS the index: a query that probes cells {3, 7} reads
-    exactly those directories (partition pruning — asserted in
-    tests), so query cost is ~n_probe/n_cells of the corpus however
-    large it grows. Build cost: the bounded driver-side k-means
-    sample plus ONE assignment pass and one partitioned write.
-    """
-    centroids = train_ivf_centroids(
-        corpus, n_cells, sample_mod, id_col=id_col, vec_col=vec_col
-    )
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    )
-    # repartition(1), not coalesce(1): the local-relation source is
-    # defaultParallelism Python-RDD partitions, and coalesce would
-    # drain them sequentially through ONE task's Python-worker
-    # round-trips (~5 s of overhead for a few hundred centroid rows;
-    # measured r6 on the DSIR meta write). repartition shuffles the
-    # map side in parallel first (~0.6 s).
-    cdf.repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    assigned = _with_ivf_cells(
-        corpus.select(id_col, vec_col), centroids, 1, vec_col
-    )
-    assigned.write.mode("overwrite").partitionBy("ivf_cell").parquet(
-        f"{path}/cells"
-    )
-
-
-def _load_centroids(spark, path: str):
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in rows])
-
-
-def ivf_index_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Add vectors to an existing index WITHOUT retraining: assign
-    against the saved centroids, append into the cell directories.
-    (The FAISS add() analog; re-train only when the data distribution
-    drifts — centroid quality degrades gracefully, correctness never
-    does, since queries verify with exact cosine.)"""
-    centroids = _load_centroids(spark, path)
-    assigned = _with_ivf_cells(
-        new_vectors.select(id_col, vec_col), centroids, 1, vec_col
-    )
-    assigned.write.mode("append").partitionBy("ivf_cell").parquet(
-        f"{path}/cells"
-    )
-
-
-def ivf_index_query(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a persisted IVF index: (query_id, vec_id, cosine, rank).
-
-    Queries are assigned their ``n_probe`` nearest cells with the
-    saved centroids (one tiny Arrow matmul), the probed cell set
-    becomes a partition filter on the cell layout (only those
-    directories are opened), and survivors are scored exactly and
-    top-k'd per query. Self-matches are kept (a query that lives in
-    the corpus returns itself at rank 1, cosine 1.0) — callers who
-    want neighbors-only filter ``query_id != vec_id``.
-    """
-    centroids = _load_centroids(spark, path)
-    # the query set is bounded by contract (it broadcasts below), so
-    # materialize the assignments ONCE on the driver and rebuild a
-    # local relation: the assignment UDF runs a single time, the probe
-    # cells fall out of the same rows, and nothing stays pinned in
-    # executor storage after the call (a .persist() here would leak
-    # cached partitions across repeated queries for the session's life)
-    q_plan = _with_ivf_cells(queries, centroids, n_probe, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        "ivf_cell",
-    )
-    q_rows = q_plan.collect()
-    q = spark.createDataFrame(q_rows, q_plan.schema)
-    probe_cells = sorted({r.ivf_cell for r in q_rows})
-    cells = spark.read.parquet(f"{path}/cells").where(
-        F.col("ivf_cell").isin(probe_cells)
-    )
-    scored = (
-        cells.join(F.broadcast(q), on="ivf_cell")
-        .select(
-            "query_id",
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col("q_vec")).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", id_col])
-    )
-    return topk_per_key(
-        scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col(id_col)],
-        k,
-        rank_col="rank",
-    )

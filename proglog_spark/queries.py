@@ -3628,8 +3628,7 @@ def emb_ivf_ann_topk(spark, sf_dir):
     floor(x·1000) grid over the bounded deterministic sample replay in
     unrolled SQL CTEs (the emb_pca_power recipe applied to the last
     rows-only query), so the approximate result hash-matches. IVF
-    recall vs exact top-k stays property-tested; the float
-    `ivf_ann_topk` remains the library's production surface."""
+    recall vs exact top-k stays property-tested."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id").isin(0, 1, 2))
     return similarity.quantized_ivf_ann_topk(
@@ -5974,9 +5973,8 @@ def emb_pca_power(spark, sf_dir):
     (|cos| = 1.0 vs numpy's dense eigensolve, eigen-gap 1.017 — the
     worst case; the oracle replay is the expensive half at ~25 s).
     Output: the dominant eigenvector on a ±10^6 grid plus the exact
-    integer Rayleigh eigenvalue estimate. The float `pca_summary`
-    (arbitrary k, deflation) remains the library surface,
-    property-tested against numpy."""
+    integer Rayleigh eigenvalue estimate. `tests/test_operators.py`
+    checks the integer eigensolve against numpy's."""
     from proglog_spark.operators import linalg
 
     e = load_table(spark, sf_dir, "embeddings")

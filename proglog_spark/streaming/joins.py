@@ -98,44 +98,6 @@ def streaming_outer_attribution_join(
     return a.join(c, cond, "leftOuter")
 
 
-def streaming_reconciliation_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    window_seconds: int,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """FULL OUTER stream-stream join — two-feed reconciliation: rows
-    matching on key within ±window pair up eagerly; rows on EITHER
-    side with no counterpart emit NULL-extended exactly once when the
-    watermark passes their window (the audit cohort: orders with no
-    payment AND payments with no order, from live feeds).
-
-    Completes the stream-stream flavor set next to the inner and
-    LEFT OUTER variants above, with the same state bound: both sides
-    watermarked, the condition time-bounded, so state is (watermark
-    horizon × arrival rate) per side and unmatched-row emission is
-    the state-eviction event itself. The symmetric ±window condition
-    keeps either side's retention finite (a one-sided bound would
-    leave the other side's state unbounded, which Spark rejects).
-    """
-    clash = set(left.columns) & set(right.columns)
-    if clash:
-        raise ValueError(f"left/right column names must be disjoint: {clash}")
-    l_ = left.withWatermark(left_ts, watermark)
-    r_ = right.withWatermark(right_ts, watermark)
-    iv = F.expr(f"INTERVAL {int(window_seconds)} SECONDS")
-    cond = (
-        (F.col(left_key) == F.col(right_key))
-        & (F.col(right_ts) >= F.col(left_ts) - iv)
-        & (F.col(right_ts) <= F.col(left_ts) + iv)
-    )
-    return l_.join(r_, cond, "fullOuter")
-
-
 def enrich_stream(
     stream: DataFrame,
     dim: DataFrame,

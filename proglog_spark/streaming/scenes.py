@@ -198,14 +198,6 @@ def pieces_from_batch(doc, k, lo, hi):
     return doc[s].tolist(), pieces
 
 
-def segment_model(los, his):
-    """Flat reference model over one complete clip (k = 0..n-1):
-    returns (n_frames, n_scenes, longest_scene). Used by tests and as
-    the semantic ground truth the piece algebra must reproduce."""
-    p = piece_from_frames(list(range(len(los))), los, his)
-    return (p[6], p[7], p[8])
-
-
 def _coalesce(pieces: list[tuple]) -> list[tuple]:
     """Sort a clip's pieces by k range and merge the ADJACENT ones.
     Non-adjacent pieces stay separate: a missing middle fragment may

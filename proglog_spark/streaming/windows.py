@@ -44,36 +44,3 @@ def streaming_tumbling_counts(
             "n_events",
         )
     )
-
-
-def streaming_session_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-    key_cols: Sequence[str] = ("user_id",),
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Gap-based sessions with Spark's NATIVE session_window — the
-    idiomatic dynamic-gap primitive (merging windows inside the state
-    store), complementing the custom applyInPandasWithState
-    sessionizer in streaming/sessions.py.
-
-    Emits (keys, session_start_us, session_end_us_gap, n_events) where
-    ``session_end_us_gap`` = last event + gap (session_window's
-    exclusive end). Boundary semantics: session_window starts a NEW
-    session when a delta >= gap (the batch lag+cumsum twin breaks on
-    strictly > gap) — parity holds whenever no delta equals the gap
-    exactly; pick a gap that is not a plausible exact delta.
-    """
-    sw = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(sw.alias("w"), *key_cols)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            *key_cols,
-            F.unix_micros("w.start").alias("session_start_us"),
-            F.unix_micros("w.end").alias("session_end_us_gap"),
-            "n_events",
-        )
-    )

@@ -2,7 +2,7 @@
 
 Every ``.cache()`` / ``.persist()`` call site in the package must
 either be RELEASED (an ``unpersist`` within the following 80 source
-lines — the eager-materialization pattern: pipelines' finally blocks,
+lines — the eager-materialization pattern: finally blocks,
 the pagerank loop) or carry an OWNERSHIP MARKER — a nearby comment
 containing "cache"/"persist" that says who reuses the table and what
 frees it (the lazy-operator pattern: the returned DataFrame's lineage

@@ -163,6 +163,90 @@ def test_digest_reports_renamed_checked_name(monkeypatch):
     assert "ghost_query" in drifted
 
 
+# ---------------------------------------------------------------------------
+# Every package module has a non-test importer
+# ---------------------------------------------------------------------------
+
+
+def _package_modules(repo):
+    """{dotted name: path} for every module under proglog_spark/."""
+    out = {}
+    for path in (repo / "proglog_spark").rglob("*.py"):
+        parts = path.relative_to(repo).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        out[".".join(parts)] = path
+    return out
+
+
+def _referenced_modules(path, in_package, modules):
+    """Package modules one file imports anywhere (function-local imports
+    included). ``import a.b.c`` runs a, a.b and a.b.c; ``from a import
+    b`` runs a, and a.b when b is a module. In package code a string
+    constant that names a module counts too (``spark.python.daemon.
+    module`` names ``proglog_spark.worker_daemon`` that way)."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+        elif in_package and isinstance(node, ast.Constant) and isinstance(node.value, str):
+            names.add(node.value)
+    out = set()
+    for dotted in names:
+        parts = dotted.split(".")
+        out.update(
+            m for m in (".".join(parts[:i]) for i in range(1, len(parts) + 1))
+            if m in modules
+        )
+    return out
+
+
+def test_every_package_module_is_reached_from_a_non_test_root():
+    """A module under proglog_spark/ must be imported, directly or
+    through other package modules, by code that runs outside the test
+    suite: the package ``__init__``, ``__main__``, ``queries``, the gRPC
+    server, ``bench.py``, ``tools/`` or ``perfbench/``. A module that
+    only tests or examples import is library surface nothing runs;
+    delete it with its tests instead of carrying it."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pkg = repo / "proglog_spark"
+    modules = _package_modules(repo)
+    roots = [
+        pkg / "__init__.py",
+        pkg / "__main__.py",
+        pkg / "queries.py",
+        pkg / "grpc_api" / "server.py",
+        repo / "bench.py",
+        *(repo / "tools").glob("*.py"),
+        *(
+            p for p in (repo / "perfbench").glob("*.py")
+            if not p.name.startswith("test_")
+        ),
+    ]
+    reached = {name for name, path in modules.items() if path in roots}
+    todo = list(roots)
+    while todo:
+        path = todo.pop()
+        for mod in _referenced_modules(path, path.is_relative_to(pkg), modules):
+            if mod not in reached:
+                reached.add(mod)
+                todo.append(modules[mod])
+    unreached = sorted(set(modules) - reached)
+    assert not unreached, (
+        f"package modules no non-test root imports: {unreached} — delete "
+        "them (and the tests that check only them), or import them from "
+        "the code that uses them"
+    )
+
+
 def test_bench_stdout_line_stays_small():
     """The round driver tail-captures bench.py's stdout with a bounded
     buffer: the final JSON line must stay under 200 bytes even at

@@ -40,5 +40,4 @@ def test_quickstart_tour(spark, sf_dir, tmp_path):
         (10, 11, "re_dubbed"),
         (12, 13, "audio_only"),
     ]
-    assert sum(n for *_k, n in out["shard_accounting"]) > 0
     assert out["http_read"] == "event-0"

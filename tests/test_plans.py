@@ -79,19 +79,9 @@ def test_exact_dedup_is_single_hash_shuffle(spark, sf_dir):
     assert "SortMergeJoin" not in plan and "Join" not in plan
 
 
-def test_lsh_ann_join_is_broadcast_not_smj(spark, sf_dir):
-    """The bucket-collision join against the (tiny) query side must be
-    a broadcast join; candidate scoring must not sort-merge."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    df = similarity.lsh_ann_topk(emb, emb.where(F.col("vec_id") == 0), dim=64, k=5)
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan
-
-
 def test_quantized_lsh_ann_join_is_broadcast_not_smj(spark, sf_dir):
-    """The integer-grid ANN twin keeps the float path's plan shape:
-    broadcast bucket join against the tiny query side, no sort-merge
-    anywhere."""
+    """The bucket-collision join against the (tiny) query side must be
+    a broadcast join; nothing may sort-merge."""
     emb = load_table(spark, sf_dir, "embeddings")
     df = similarity.quantized_lsh_ann_topk(
         emb, emb.where(F.col("vec_id") == 0), dim=64, k=5

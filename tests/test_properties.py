@@ -487,40 +487,6 @@ def test_connected_components_long_chain_converges_fast(spark):
     assert {(r.id, r.rep) for r in out.collect()} == {(i, 0) for i in range(121)}
 
 
-@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=(1 << 16) - 1),
-            st.integers(min_value=0, max_value=(1 << 16) - 1),
-        ),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_zorder_key_is_injective_and_python_checkable(spark, pairs):
-    """zorder_key must equal the reference Python bit-interleave and
-    be injective on the masked domain (distinct inputs -> distinct
-    keys), so clustering never aliases two grid cells."""
-    from proglog_spark.sources.layout import zorder_key
-
-    def ref(x, y, bits=16):
-        z = 0
-        for b in range(bits):
-            z |= ((x >> b) & 1) << (2 * b) | ((y >> b) & 1) << (2 * b + 1)
-        return z
-
-    df = spark.createDataFrame(pairs, "x LONG, y LONG")
-    got = [
-        (r.x, r.y, r.z)
-        for r in df.select("x", "y", zorder_key(["x", "y"]).alias("z")).collect()
-    ]
-    for x, y, z in got:
-        assert z == ref(x, y)
-    uniq = {(x, y) for x, y, _ in got}
-    assert len({ref(x, y) for x, y in uniq}) == len(uniq)
-
-
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(st.integers(min_value=0, max_value=500), min_size=1, max_size=40),
@@ -682,36 +648,6 @@ def test_chunk_spans_tile_documents(spark, texts):
             assert c.chunk_len == len(want)
             covered = max(covered, c.start + c.chunk_len)
         assert covered == len(t)
-
-
-@given(
-    keys=st.lists(st.integers(min_value=0, max_value=10**9), min_size=1, max_size=60, unique=True),
-    n_shards=st.integers(min_value=1, max_value=7),
-)
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-def test_shard_assignment_properties(spark, keys, n_shards):
-    """Shard assignment is a pure function of (key, n_shards, salt):
-    stable across partitionings, in-range, and salt-sensitive."""
-    from proglog_spark.sources.shards import assign_shard
-
-    df = spark.createDataFrame([(k,) for k in keys], "k LONG")
-    a = {r.k: r.s for r in df.select("k", assign_shard("k", n_shards).alias("s")).collect()}
-    b = {
-        r.k: r.s
-        for r in df.repartition(5)
-        .select("k", assign_shard("k", n_shards).alias("s"))
-        .collect()
-    }
-    assert a == b
-    assert all(0 <= s < n_shards for s in a.values())
-    if n_shards > 1 and len(keys) >= 30:
-        alt = {
-            r.k: r.s
-            for r in df.select(
-                "k", assign_shard("k", n_shards, salt="other").alias("s")
-            ).collect()
-        }
-        assert alt != a  # a different salt moves at least one key
 
 
 # ---------------------------------------------------------------------------

@@ -446,56 +446,6 @@ def test_enrich_stream_rejects_streaming_dim(spark, sf_dir, tmp_path):
         enrich_stream(stream, stream, "event_id")
 
 
-def test_native_session_window_matches_batch_sessionize(spark, sf_dir, tmp_path):
-    """The built-in session_window streaming agg must agree with the
-    batch lag+cumsum sessionize (start, last-event ts, count) across a
-    two-append feed. Gap chosen so no consecutive delta equals it
-    exactly (the two primitives differ on that boundary)."""
-    from proglog_spark.operators.windows import sessionize
-    from proglog_spark.streaming.windows import streaming_session_counts
-
-    gap = 1801  # odd gap: fixture deltas at exact 1801s don't occur
-    e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    # precondition for parity: no delta == gap
-    from pyspark.sql import Window as W
-
-    deltas = e.withColumn(
-        "d",
-        F.unix_micros("ts")
-        - F.unix_micros(
-            F.lag("ts").over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        ),
-    )
-    assert deltas.where(F.col("d") == gap * 1_000_000).count() == 0
-
-    batch = {
-        (r.user_id, r.session_start_us, r.session_end_us + gap * 1_000_000, r.n_events)
-        for r in sessionize(e, "user_id", "ts", gap).collect()
-    }
-
-    s_dir = str(tmp_path / "stream")
-    e.where(F.col("event_id") % 2 == 0).write.mode("append").parquet(s_dir)
-    e.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(s_dir)
-    stream = spark.readStream.schema(e.schema).parquet(s_dir)
-    q = (
-        streaming_session_counts(stream, "ts", gap, ("user_id",), "365 days")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("native_sessions")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        _drain(q)
-        got = {
-            (r.user_id, r.session_start_us, r.session_end_us_gap, r.n_events)
-            for r in spark.sql("SELECT * FROM native_sessions").collect()
-        }
-    finally:
-        q.stop()
-    assert got == batch
-
-
 def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path):
     """Watermark contract (the late-data bound the reference's
     busy-poll tail lacks entirely): in append mode a tumbling window is
@@ -959,62 +909,6 @@ def test_derive_log_chain_filters_and_survives_restart(spark, tmp_path):
 
     run()  # pure restart, no new source data -> no duplicates
     assert dst.count() == 7
-
-
-def test_stream_stream_full_outer_reconciliation(spark, tmp_path):
-    """FULL OUTER stream-stream join: matched pairs emit eagerly;
-    unmatched rows from BOTH sides NULL-extend exactly once after the
-    watermark passes their window."""
-    from proglog_spark.streaming.joins import streaming_reconciliation_join
-
-    o_dir, p_dir = str(tmp_path / "orders"), str(tmp_path / "pays")
-    o_schema = "o_id LONG, o_key LONG, o_ts TIMESTAMP"
-    p_schema = "p_id LONG, p_key LONG, p_ts TIMESTAMP"
-
-    def w(path, schema, rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(path)
-
-    import datetime as dt
-
-    t = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
-    # key 100 matches within the hour; order 2 and payment 22 don't
-    w(o_dir, o_schema, [(1, 100, t(10)), (2, 200, t(10))])
-    w(p_dir, p_schema, [(11, 100, t(10, 30)), (22, 300, t(10, 30))])
-
-    joined = streaming_reconciliation_join(
-        spark.readStream.schema(o_schema).parquet(o_dir),
-        spark.readStream.schema(p_schema).parquet(p_dir),
-        "o_key", "p_key", "o_ts", "p_ts",
-        3600, watermark="10 minutes",
-    )
-    q = (
-        joined.select("o_id", "p_id")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_full")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        _drain(q)
-        got = {(r.o_id, r.p_id) for r in spark.sql("SELECT * FROM ss_full").collect()}
-        assert (1, 11) in got  # eager match
-        assert (2, None) not in got and (None, 22) not in got  # too early
-
-        # push both watermarks past the unmatched rows' windows
-        w(o_dir, o_schema, [(3, 400, t(14))])
-        w(p_dir, p_schema, [(13, 400, t(14, 5))])
-        _drain(q)
-        w(o_dir, o_schema, [(4, 500, t(15))])
-        w(p_dir, p_schema, [(14, 500, t(15, 5))])
-        _drain(q)
-        rows = [(r.o_id, r.p_id) for r in spark.sql("SELECT * FROM ss_full").collect()]
-    finally:
-        q.stop()
-
-    assert rows.count((2, None)) == 1  # unmatched left, exactly once
-    assert rows.count((None, 22)) == 1  # unmatched right, exactly once
-    assert (1, 11) in rows
 
 
 def test_streaming_asof_matches_batch(spark, sf_dir, tmp_path):

@@ -3,9 +3,11 @@
 
 Times one or more declared queries in isolation with the bench's
 session shape and its warmup (``bench.warm_up``), optionally
-repeating with the session cache cleared (cold) or warm (ride), and
-writes the ``.explain("formatted")`` output to
-plans/r11/<query>_<tag>.txt.
+repeating with the session cache cleared (cold) or warm (ride). With
+``--tag`` it then writes each query's ``.explain("formatted")`` output
+to plans/<round>/<query>_<tag>.txt (``--round`` defaults to r12;
+streamed gates get no plan file). Without ``--tag`` no plan is
+written.
 
 Each rep runs every named query once, in order, so rep 1 onwards is a
 warm re-run of the whole list. Every line also gives the generated
@@ -23,7 +25,7 @@ started from a class-data-sharing archive (``bench.driver_cds_archive``).
 
 Usage:
   python tools/profile_query.py --queries name1,name2|all [--tag before]
-      [--reps 2] [--cold] [--sf /root/testdata/sf0.1] [--no-plan]
+      [--round r12] [--reps 2] [--cold] [--sf SF_DIR]
 
 Unlike bench.py this never touches bench_queries.json — it is a
 scratch instrument for the optimization rounds.
