@@ -348,6 +348,7 @@ def session(cpus: str):
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.retainedStages": str(10**6)},
     )
+    # the session starts on first use: here, so boot_s times the boot
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

@@ -6,18 +6,23 @@ This is that entry point for the Spark engine:
 
     python -m proglog_spark serve --path /data/log [--create] [--port 8080]
 
-starts a local SparkSession, opens (or creates) the LogTable, and
-serves the reference's JSON wire protocol (`proglog_spark/server.py`).
-The bound address is printed as the first stdout line
-(``SERVING host:port``) so callers binding port 0 can discover it.
+opens (or creates) the LogTable and serves the reference's JSON wire
+protocol (`proglog_spark/server.py`). The bound address is printed as
+the first stdout line (``SERVING host:port``) so callers binding port 0
+can discover it. The local SparkSession starts on first use: on a
+local path Produce, Consume and bounds run without a JVM, and the
+first route that needs Spark starts it, logging one INFO line on
+stderr that names who asked.
 
 Also: ``append`` / ``read`` / ``bounds`` one-shot subcommands for
-scripting against a log path without a running server.
+scripting against a log path without a running server; on a local
+path they start no JVM either.
 """
 
 from __future__ import annotations
 
 import argparse
+import logging
 import sys
 
 
@@ -27,6 +32,16 @@ def _session(cpus: int):
     return build_session(
         "proglog-cli", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 2)
     )
+
+
+def _log_to_stderr() -> None:
+    """The package's INFO lines and up on stderr: a server's log shows
+    when it started Spark, and its 500 replies."""
+    handler = logging.StreamHandler()
+    handler.setFormatter(logging.Formatter("%(asctime)s %(levelname)s %(name)s: %(message)s"))
+    pkg = logging.getLogger("proglog_spark")
+    pkg.addHandler(handler)
+    pkg.setLevel(logging.INFO)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -69,6 +84,8 @@ def main(argv: list[str] | None = None) -> int:
 
         if args.cmd == "serve":
             from proglog_spark.server import HttpLogServer
+
+            _log_to_stderr()
 
             engine = (
                 Engine.create(spark, args.path, bucket_size=args.bucket_size)

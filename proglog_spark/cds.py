@@ -207,8 +207,10 @@ def _warm_up(tmp: str, master: str, work: str) -> None:
     from proglog_spark.session import build_session
 
     options = f"-XX:ArchiveClassesAtExit={tmp} -Djava.io.tmpdir={work}"
-    build_session("cds-warm-up", master=master,
-                  extra_conf={"spark.driver.extraJavaOptions": options}).stop()
+    spark = build_session("cds-warm-up", master=master,
+                          extra_conf={"spark.driver.extraJavaOptions": options})
+    spark.sparkContext  # the session starts on first use
+    spark.stop()
     gateway = SparkContext._gateway
     proc = gateway.proc
     gateway.shutdown()

@@ -42,14 +42,15 @@ way:
   refuses to start with two. A cluster master keeps the JVM's
   defaults: its driver is not the whole cluster.
 - On a local master, a driver JVM mapped from a class-data-sharing
-  archive (``cds.py``). No Spark job runs on the log's hot path, yet
-  every process spent 2.4-2.9 s booting a JVM that loaded Spark's
-  classes from 287 jars; with the archive the log server's set-up fell
-  from a median 2.87 to 1.79 s (BASELINE.md). The archive holds only
-  what a boot loads, from a warm-up that builds a session and stops
-  it: a prototype archive dumped after one query as well was 144 MB
-  against 99.6 MB and raised the log server's peak RSS from ~397 to
-  ~429 MB, where the boot-shaped one lowers it to ~388 MB. CDS refuses
+  archive (``cds.py``). Booting a JVM that loaded Spark's classes from
+  287 jars took 2.4-2.9 s; with the archive the log server's set-up
+  fell from a median 2.87 to 1.79 s (BASELINE.md). Those figures were
+  taken while the log server still started Spark at boot; they now
+  apply to a process that uses Spark. The archive holds only what a
+  boot loads, from a warm-up that builds a session and stops it: a
+  prototype archive dumped after one query as well was 144 MB against
+  99.6 MB and raised the log server's peak RSS from ~397 to ~429 MB,
+  where the boot-shaped one lowers it to ~388 MB. CDS refuses
   a non-empty directory on the class path and Spark puts its conf dir
   there, so the dump and every session that maps the archive launch
   with ``SPARK_CONF_DIR`` set to an empty dir in the cache; that is
@@ -57,17 +58,34 @@ way:
   files, so no setting is lost. A caller's own CDS or ``-Xshare``
   flag, driver class path or default driver options leave the archive
   out.
+- The session starts on first use. ``build_session`` returns a handle
+  that launches it, once and under a lock, the first time any
+  attribute of it is read, and logs that at INFO with the attribute
+  and its caller. No Spark job runs on the log's hot path: on a local
+  path create, open, append, read, bounds and ``consume_iter`` touch
+  no JVM, so a log server that only serves Produce, Consume and bounds
+  never starts one. On the ``log_service`` benchmark its peak RSS fell
+  from a median ~390 to ~140 MB and its set-up from ~4.5 to ~1.9 s
+  (BASELINE.md). A caller that uses Spark right away pays the same
+  boot as before, only at its first use. ``PYTHONPATH`` is still set
+  at call time, so any process this one starts sees the package.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import re
+import sys
+import threading
+from collections.abc import Callable
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from proglog_spark import cds
+
+_log = logging.getLogger(__name__)
 
 # One file per ~64 MB input split at scale; local tests override via
 # env. Read at build_session() CALL time, not import time — a test
@@ -130,6 +148,11 @@ def build_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
+    The session starts on first use (see the module docstring): the
+    handle returned forwards every attribute to it, and ``stop`` on a
+    handle never used launches nothing. The conf, env values included,
+    is read at call time.
+
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
     is configured; on a real cluster, leave it unset and submit through
     spark-submit so the cluster manager decides.
@@ -139,8 +162,6 @@ def build_session(
         # (merely skipping the local default would crash getOrCreate
         # with 'A master URL must be set' outside spark-submit)
         master = os.environ.get("SPARK_MASTER_URL") or f"local[{_env_cpus()}]"
-    builder = SparkSession.builder.appName(app_name).master(master)
-
     conf = {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.shuffle.partitions": str(
@@ -195,12 +216,6 @@ def build_session(
             else "false"
         ),
     }
-    local, cache, archive = _local_launch(master, extra_conf or {})
-    conf |= local
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
     # Python workers must be able to import proglog_spark: mapInPandas/
     # pandas_udf closures reference module-level helpers, which pickle
     # BY REFERENCE — the worker re-imports the module. When the driver
@@ -216,6 +231,18 @@ def build_session(
         os.environ["PYTHONPATH"] = (
             pkg_parent + (os.pathsep + current if current else "")
         )
+    extra = dict(extra_conf or {})
+    return _DeferredSession(lambda: _launch(app_name, master, conf, extra))
+
+
+def _launch(
+    app_name: str, master: str, conf: dict[str, str], extra_conf: dict[str, str]
+) -> SparkSession:
+    """Start (or reuse) the session ``build_session`` described."""
+    builder = SparkSession.builder.appName(app_name).master(master)
+    local, cache, archive = _local_launch(master, extra_conf)
+    for k, v in (conf | local | extra_conf).items():
+        builder = builder.config(k, v)
     if cache is None or SparkContext._gateway is not None:
         return builder.getOrCreate()  # no archive to use, or no JVM to launch
     if archive is None:
@@ -223,3 +250,30 @@ def build_session(
         return builder.getOrCreate()
     with cds.conf_dir(cache):
         return builder.getOrCreate()
+
+
+class _DeferredSession:
+    """What ``build_session`` returns: a ``SparkSession`` that starts on
+    first use. Any attribute but ``stop`` launches the session, once,
+    under a lock, and is then read from it; ``stop`` before that
+    launches nothing."""
+
+    def __init__(self, launch: Callable[[], SparkSession]) -> None:
+        self._launch_session = launch
+        self._started_session: SparkSession | None = None
+        self._start_lock = threading.Lock()
+
+    def __getattr__(self, name: str):
+        session = self._started_session
+        if session is None:
+            with self._start_lock:
+                session = self._started_session
+                if session is None:
+                    caller = sys._getframe(1).f_code.co_qualname
+                    _log.info("starting Spark on first use of spark.%s by %s", name, caller)
+                    session = self._started_session = self._launch_session()
+        return getattr(session, name)
+
+    def stop(self) -> None:
+        if self._started_session is not None:
+            self._started_session.stop()

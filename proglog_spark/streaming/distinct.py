@@ -31,9 +31,10 @@ tests/test_streaming.py.
 from __future__ import annotations
 
 import pyspark.sql.streaming as S
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from proglog_spark.log.store import open_store
 
 
 def _bucketize(df: DataFrame, time_col: str, bucket_seconds: int) -> DataFrame:
@@ -101,6 +102,7 @@ def continuous_distinct_rollup(
     if mode not in ("exact", "sketch"):
         raise ValueError(f"mode must be 'exact' or 'sketch', got {mode!r}")
     spark = stream.sparkSession
+    store = open_store(spark, rollup_path)
     bucketed = _bucketize(stream, time_col, bucket_seconds)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -109,12 +111,10 @@ def continuous_distinct_rollup(
         if changed.isEmpty():
             return
         buckets = [r.bucket for r in changed.select("bucket").distinct().collect()]
-        try:
-            base = spark.read.parquet(rollup_path)
-        except AnalysisException:  # first batch: table does not exist yet
+        if not store.exists():  # first batch: no table yet
             merged = changed
         else:
-            touched = base.where(F.col("bucket").isin(buckets))
+            touched = spark.read.parquet(rollup_path).where(F.col("bucket").isin(buckets))
             merged = _merge_structs(
                 touched.unionByName(changed), group_cols, mode
             )

@@ -10,12 +10,9 @@ from __future__ import annotations
 
 import json
 import os
-import queue
 import shutil
 import subprocess
 import sys
-import threading
-import time
 
 import pytest
 
@@ -114,32 +111,6 @@ def _assert_mismatch_warns_on_stderr(archive, tmp_path):
     assert "[cds" in run().stdout
     routed = run(*cds.LOG_OPTIONS.split())
     assert "[cds" not in routed.stdout and "[cds" in routed.stderr
-
-
-def _serve(tmp_path, env) -> None:
-    """Run ``serve --create`` until it prints its address, then stop it."""
-    proc = subprocess.Popen(
-        [sys.executable, "-m", "proglog_spark", "serve", "--create", "--port", "0",
-         "--path", str(tmp_path / f"log{time.monotonic_ns()}")],
-        env=env, cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-    )
-    lines: queue.Queue = queue.Queue()
-    threading.Thread(target=lambda: [lines.put(x) for x in proc.stdout], daemon=True).start()
-    try:
-        # the address is the first stdout line: no CDS line before it
-        assert lines.get(timeout=240).startswith("SERVING ")
-    finally:
-        proc.terminate()
-        assert proc.wait(timeout=300) == 0
-
-
-def test_serve_builds_then_maps_the_archive(tmp_path, cache):
-    _serve(tmp_path, _env(tmp_path))
-    (name,) = _archives(cache)
-    assert cache.archive() == os.path.join(cache.root, name)
-    class_log = tmp_path / "classes.log"
-    _serve(tmp_path, _env(tmp_path, class_log))
-    assert _MAPPED in class_log.read_text()
 
 
 def _fake_spark_home(tmp_path, monkeypatch) -> str:

@@ -3,16 +3,23 @@
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import subprocess
 import sys
+import threading
+import time
 
-from proglog_spark import cds
+from pyspark.sql import Row
+
+from proglog_spark import cds, session
+from proglog_spark.engine import Engine
 from proglog_spark.session import (
     _JVM_ENV_OPTIONS,
     LOCAL_DRIVER_JAVA_OPTIONS,
     _local_launch,
+    build_session,
     local_conf,
 )
 
@@ -137,3 +144,80 @@ spark.stop()
     assert json.loads(done.stdout.strip().splitlines()[-1]) == [
         "G1 Young Generation", "G1 Old Generation",
     ]
+
+
+def _counted_launches(monkeypatch, delay_s: float = 0.0) -> list[str]:
+    """Record the app name of every session launch from here on, each
+    held ``delay_s`` before it starts."""
+    launches, launch = [], session._launch
+
+    def counted(app_name, *args):
+        launches.append(app_name)
+        time.sleep(delay_s)
+        return launch(app_name, *args)
+
+    monkeypatch.setattr(session, "_launch", counted)
+    return launches
+
+
+def _deferred():
+    # the shared session's settings: a launch reuses its running JVM
+    return build_session("proglog-tests", master="local[4]", shuffle_partitions=4,
+                         extra_conf={"spark.driver.memory": "4g"})
+
+
+def test_the_session_starts_on_first_spark_use(spark, monkeypatch, tmp_path, caplog):
+    spark.sparkContext  # started: the twin that every call below runs on
+    eager = Engine.create(spark, str(tmp_path / "eager"), bucket_size=4)
+    launches = _counted_launches(monkeypatch)
+    engine = Engine.create(_deferred(), str(tmp_path / "deferred"), bucket_size=4)
+    try:
+        for e in (eager, engine):
+            assert e.produce("root", [f"v{i}" for i in range(10)]) == (0, 9)
+            assert e.consume("root", 7).value == "v7"
+            assert (e.lowest_offset(), e.highest_offset()) == (0, 9)
+        assert launches == []
+
+        query = "SELECT offset, value FROM records WHERE offset % 3 = 0 ORDER BY offset"
+        with caplog.at_level(logging.INFO, logger="proglog_spark.session"):
+            rows = engine.sql(query).collect()
+        assert rows == eager.sql(query).collect() and len(rows) == 4
+        assert launches == ["proglog-tests"]
+        assert "first use of spark.read by LogTable.df" in caplog.text
+        for e in (eager, engine):
+            e.truncate("root", 8)  # rewrites bucket 2 with Spark
+        assert engine.log.reader().collect() == eager.log.reader().collect()
+        assert launches == ["proglog-tests"]
+    finally:
+        eager.log.close()
+        engine.log.close()
+
+
+def test_two_first_uses_at_once_start_one_session(spark, monkeypatch, tmp_path):
+    spark.sparkContext  # the JVM runs, so the launch below only waits
+    launches = _counted_launches(monkeypatch, delay_s=0.5)
+    engine = Engine.create(_deferred(), str(tmp_path / "log"), bucket_size=4)
+    engine.produce("root", ["a", "b"])
+    barrier, results = threading.Barrier(2), []
+
+    def first_use():
+        barrier.wait()
+        results.append(engine.sql("SELECT count(*) AS n FROM records").collect())
+
+    threads = [threading.Thread(target=first_use) for _ in range(2)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert results == [[Row(n=2)]] * 2
+        assert launches == ["proglog-tests"]
+    finally:
+        engine.log.close()
+
+
+def test_stop_before_first_use_launches_nothing(spark, monkeypatch):
+    launches = _counted_launches(monkeypatch)
+    _deferred().stop()
+    assert launches == []
+    assert spark.range(3).count() == 3  # the running session is untouched
